@@ -92,8 +92,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Generic A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" sets runtime
-    // session confs (operator A/B faces read these — e.g.
-    // spark.graft.lpa.prepartition) without a code change per probe.
+    // session confs (the spark.graft.* gates read these) without a
+    // code change per probe.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
       s.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

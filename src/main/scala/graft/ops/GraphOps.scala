@@ -320,21 +320,14 @@ object GraphOps {
     * Output: (node, label) for every node of the canonicalized graph.
     */
   /** The shared argmax: most-frequent label per node from (nodeCol,
-    * label) rows, ties to the SMALLEST label. Two codegen'd hash
-    * aggregates by default; `useMode` collapses them into one
-    * deterministic mode() (ObjectHashAggregate) — built for the A/B,
-    * measured slower at sf1 (BENCH_SCALE §LPA-MODE), kept as the
-    * probe face. */
-  private def argmaxLabel(joined: DataFrame, nodeCol: String, useMode: Boolean): DataFrame =
-    if (useMode)
-      joined.groupBy(col(nodeCol))
-        .agg(mode(col("label"), deterministic = true).as("label"))
-        .select(col(nodeCol).as("node"), col("label"))
-    else
-      joined.groupBy(col(nodeCol), col("label")).agg(count(lit(1)).as("c"))
-        .groupBy(col(nodeCol))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col(nodeCol).as("node"), (-col("m.nl")).as("label"))
+    * label) rows, ties to the SMALLEST label — two codegen'd hash
+    * aggregates (one deterministic mode() measured slower at sf1,
+    * BENCH_SCALE §LPA-MODE). */
+  private def argmaxLabel(joined: DataFrame, nodeCol: String): DataFrame =
+    joined.groupBy(col(nodeCol), col("label")).agg(count(lit(1)).as("c"))
+      .groupBy(col(nodeCol))
+      .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+      .select(col(nodeCol).as("node"), (-col("m.nl")).as("label"))
 
   /** Synchronous LPA on the driver — exact twin of the dense rounds
     * below: every node simultaneously adopts its neighbors' most
@@ -411,7 +404,6 @@ object GraphOps {
       val d = lpaDriver(f, iters)
       if (d.isDefined) return d.get
     }
-    val useMode = f.spark.conf.getOption("spark.graft.lpa.modeAgg").exists(_.toBoolean)
     // ADAPTIVE frontier rounds: a node's round-r label depends only on
     // its neighbors' round-(r−1) labels, so a node NONE of whose
     // neighbors changed in round r−1 would recompute exactly its
@@ -471,13 +463,13 @@ object GraphOps {
         val next = if (nNodes <= broadcastMax)
           argmaxLabel(
             f.sym.join(broadcast(labels.select(col("node").as("v"), col("label"))), "v"),
-            "u", useMode)
+            "u")
         else
           argmaxLabel(
             f.sym.join(labels.select(col("node").as("u"), col("label"))
               .hint("shuffle_hash"), "u")
               .repartition(col("v")),
-            "v", useMode)
+            "v")
         if (useFrontier) {
           // the changed flag rides the round's ONE checkpoint (the
           // old-label join is node-sized and co-partitioned, so it
@@ -511,7 +503,7 @@ object GraphOps {
           .join(affected.select(col("node").as("u")).hint("shuffle_hash"), "u")
         val joined = subEdges
           .join(labels.select(col("node").as("v"), col("label")).hint("shuffle_hash"), "v")
-        val newAffected = argmaxLabel(joined, "u", useMode)
+        val newAffected = argmaxLabel(joined, "u")
           .withColumnRenamed("label", "_new")
         val merged = labels
           .join(newAffected.hint("shuffle_hash"), Seq("node"), "left")

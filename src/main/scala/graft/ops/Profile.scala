@@ -248,18 +248,6 @@ object Profile {
     * Output: one row per column pair — `col_x`, `col_y`, `n`, `rho`. */
   def spearmanMatrix(df: DataFrame, cols: Seq[String], scale: Int = 2): DataFrame = {
     require(cols.size >= 2, "spearmanMatrix: need at least two columns")
-    // Measured A/B (r11, interleaved same-phase solo pairs, min-of-3):
-    // the fused single-rank-pass face reads 4.88 vs 4.73 s at sf0.1 and
-    // 12.2 vs 4.0 s at sf1 (BENCH_SF{01,1}_SPEARF_AB_r11_*.json) — the
-    // per-column face WINS at scale because two of the three value
-    // grids (quantity, discount) are tiny and AQE broadcasts their
-    // rank joins (zero data exchange), while the fused face replaces
-    // those free joins with a mandatory data-sized row_id pivot
-    // exchange. Per-column ships; the fused face stays conf-gated for
-    // inputs whose grids are ALL data-sized (where k range exchanges
-    // and k shuffle joins would actually materialize).
-    val fused = df.sparkSession.conf
-      .getOption("spark.graft.spearman.fused").contains("true")
     def ix(c: String): Column =
       round(col(c) * pow(lit(10), lit(scale))).cast("long")
     // r16 size-gated driver tiny path (the textrank/peel discipline —
@@ -278,16 +266,14 @@ object Profile {
     val driverMax = df.sparkSession.conf
       .getOption("spark.graft.spearman.driverMaxRows").map(_.toLong)
       .getOrElse(1000000L)
-    if (!fused && driverMax > 0) {
+    if (driverMax > 0) {
       val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
       if (keyed.count() <= driverMax) {
         val d = spearmanDriver(df.sparkSession, keyed, cols)
         if (d.isDefined) return d.get
       }
     }
-    val ranked = if (fused) spearmanRanksFused(df, cols, ix)
-                 else spearmanRanksPerColumn(df, cols, ix)
-    spearmanMoments(ranked, cols)
+    spearmanMoments(spearmanRanksPerColumn(df, cols, ix), cols)
   }
 
   /** Driver twin of the per-column rank pipeline + moment tail: exact
@@ -374,10 +360,9 @@ object Profile {
     Some(out.toDF("col_x", "col_y", "n", "rho"))
   }
 
-  /** PER-COLUMN rank attachment (the r10 shape, kept as the measured
-    * A/B face `spark.graft.spearman.fused=false`): k independent value
-    * grids, k prefixSum range exchanges, k hash joins of the data-sized
-    * key table — checkpointed ON EVIDENCE: the re-scan variant (k+1
+  /** PER-COLUMN rank attachment: k independent value grids, k
+    * prefixSum range exchanges, k hash joins of the data-sized key
+    * table — checkpointed ON EVIDENCE: the re-scan variant (k+1
     * column-pruned parquet scans, no materialization) measured 5.78s vs
     * 4.42s at sf0.1 (BENCH_SF01_SPEAR_B_SOLO_r10.json). */
   private def spearmanRanksPerColumn(df: DataFrame, cols: Seq[String],
@@ -393,45 +378,6 @@ object Profile {
       ranked = ranked.join(pre, Seq(s"_v_$c"))
     }
     ranked
-  }
-
-  /** FUSED rank attachment (default face): unpivot the keyed table to
-    * (row_id, col_id, value) and run ONE grouped two-phase rank over
-    * col_id — the [[Relational.groupedPercentRank]] construction: one
-    * map-side-combined (cid, v) grid collapse, ONE range exchange over
-    * the concatenated grids (instead of k), a broadcast of the k per-
-    * column start offsets, one hash join of the long table on the
-    * (cid, v) key (instead of k joins of the widening keyed table),
-    * and one row_id-keyed pivot back to wide ranks for the moment
-    * pass. Ranks are the same exact doubled-average integers, so the
-    * output is bit-identical to the per-column face (spec-pinned).
-    * row_id is minted BEFORE the checkpoint, so the materialized ids
-    * are stable for the single lineage that reads them. */
-  private def spearmanRanksFused(df: DataFrame, cols: Seq[String],
-                                 ix: String => Column): DataFrame = {
-    val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
-      .withColumn("_rid", monotonically_increasing_id())
-      .localCheckpoint()
-    val long = keyed.select(col("_rid"),
-      explode(array(cols.zipWithIndex.map { case (c, i) =>
-        struct(lit(i).as("_cid"), col(s"_v_$c").as("_v"))
-      }: _*)).as("_e"))
-      .select(col("_rid"), col("_e._cid").as("_cid"), col("_e._v").as("_v"))
-    val grid = long.groupBy(col("_cid"), col("_v")).agg(count(lit(1)).as("_cnt"))
-    val pre = Relational.prefixSum(grid, Seq(col("_cid"), col("_v")), "_cnt", "_pre")
-    val off = pre.groupBy(col("_cid"))
-      .agg(max(col("_pre")).as("_cend"), sum(col("_cnt")).cast("long").as("_cn"))
-      .select(col("_cid").as("_ocid"), (col("_cend") - col("_cn")).as("_cstart"))
-    val ranks = pre.join(broadcast(off), col("_cid") === col("_ocid"))
-      .select(col("_cid"), col("_v"),
-        (lit(2L) * (col("_pre") - col("_cstart")) - col("_cnt") + 1L).as("_r2"))
-    val longRanked = long.join(ranks, Seq("_cid", "_v"))
-    longRanked.groupBy(col("_rid"))
-      .agg(
-        max(when(col("_cid") === 0, col("_r2"))).as(s"_r_${cols.head}"),
-        cols.zipWithIndex.tail.map { case (c, i) =>
-          max(when(col("_cid") === i, col("_r2"))).as(s"_r_$c")
-        }: _*)
   }
 
   /** Shared moment tail: one wide DECIMAL aggregation over the ranked

@@ -288,9 +288,8 @@ object Similarity {
   }
 
   /** The m per-subspace PQ codebooks, trained in FUSED passes. The
-    * serial form (one [[kmeans]] per subspace, kept below the
-    * `spark.graft.pq.fusedTrain=false` gate as the parity oracle)
-    * schedules m·(1 seed + iters Lloyd) jobs — 24 at the catalog's
+    * serial form (one [[kmeans]] per subspace on its `slice`, salt
+    * `pq<s>:` — the spec's parity oracle) schedules m·(1 seed + iters Lloyd) jobs — 24 at the catalog's
     * m=8/iters=2 — each a full corpus pass; on the bench box that is
     * nearly all per-job scheduling (the ktruss/textrank lesson), and
     * at 100 TB it is 24 corpus scans where 3 suffice. Subspaces are
@@ -315,15 +314,6 @@ object Similarity {
   def pqTrainCodebooks(v: DataFrame, m: Int, sub: Int, nCents: Int,
                        iters: Int, idCol: String,
                        saltPrefix: String = "pq"): Seq[Seq[(Int, Seq[Double])]] = {
-    val spark = v.sparkSession
-    val fused = spark.conf.getOption("spark.graft.pq.fusedTrain")
-      .forall(_.toBoolean)
-    if (!fused) {
-      return (0 until m).map { s =>
-        val sliced = v.select(col(idCol), slice(col("v"), s * sub + 1, sub).as("v"))
-        kmeans(sliced, nCents, sub, iters, idCol, "v", salt = s"$saltPrefix$s:")
-      }
-    }
     val pieces = array((0 until m).map(s => struct(
       lit(s).as("s"),
       graft.dedup.Dedup.md5Hash60(

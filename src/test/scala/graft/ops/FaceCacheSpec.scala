@@ -61,6 +61,18 @@ class FaceCacheSpec extends SparkSpec {
     assert(put(s1, "one-again") == "one-again")
   }
 
+  test("dead-session bound: an evicted session's persisted-index directory is deleted") {
+    val data = java.nio.file.Paths.get("perfbench", "data", "sf0.01").toString
+    val s1 = freshSession(); val s2 = freshSession(); val s3 = freshSession()
+    val dir = java.nio.file.Paths.get(ExtensionQueries.invIndexFor(s1, data))
+    assert(java.nio.file.Files.isDirectory(dir))
+    ExtensionQueries.FaceCache.get(s2, "spec-slot-index-lru", "sig")("two")(_ => ())
+    s3.conf.set("spark.graft.faceCache.maxSessions", "2")
+    ExtensionQueries.FaceCache.get(s3, "spec-slot-index-lru", "sig")("three")(_ => ())
+    assert(!ExtensionQueries.FaceCache.hasSession(s1), "LRU session must be evicted at the cap")
+    assert(!java.nio.file.Files.exists(dir), "the evicted session's index directory must be deleted")
+  }
+
   test("withAqeOff: nested and overlapping entries restore the conf exactly once") {
     import org.apache.spark.sql.graftext.GraftPins
     val s = freshSession()

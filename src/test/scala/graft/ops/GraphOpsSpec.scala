@@ -60,29 +60,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(out == Map(5L -> 1L, 1L -> 5L, 2L -> 5L, 3L -> 5L))
   }
 
-  test("labelPropagation: mode-aggregate A/B face returns identical labels (ties included)") {
-    import spark.implicits._
-    // the star has count-ties everywhere (every spoke label count 1) —
-    // deterministic mode must break them to the SMALLEST label, the
-    // max-struct argmax's rule
-    val star = Seq((5L, 1L), (5L, 2L), (5L, 3L)).toDF("src", "dst")
-    val bridged = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
-      (10L, 12L), (3L, 10L)).toDF("src", "dst")
-    // force distributed rounds: the mode-vs-argmax A/B is about the
-    // DISTRIBUTED aggregate shapes, which the r15 driver gate would
-    // otherwise bypass on these tiny graphs
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-    try {
-      for (g <- Seq(star, bridged); it <- Seq(1, 3)) {
-        val base = rowSet(GraphOps.labelPropagation(g, iters = it))
-        spark.conf.set("spark.graft.lpa.modeAgg", "true")
-        try assert(rowSet(GraphOps.labelPropagation(g, iters = it)) == base,
-          s"mode face diverged at iters=$it")
-        finally spark.conf.unset("spark.graft.lpa.modeAgg")
-      }
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
-  }
-
   test("heavy-degree chunked closure returns identical triangle counts and truss trajectories") {
     import spark.implicits._
     // random graph with a deliberate hub (node 0 connected to all) so

@@ -82,19 +82,6 @@ class ProfileSpec extends SparkSpec {
     assert(r2.getDouble(3) == 0.6, r2.toString)
   }
 
-  test("spearmanMatrix: fused single-rank-pass face == per-column face bit-for-bit") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    val df = Seq.fill(300)((rnd.nextInt(20).toDouble, rnd.nextDouble() * 100,
-      rnd.nextInt(5).toDouble)).toDF("x", "y", "z")
-    val perCol = rowSet(Profile.spearmanMatrix(df, Seq("x", "y", "z")))
-    spark.conf.set("spark.graft.spearman.fused", "true")
-    try {
-      val fused = rowSet(Profile.spearmanMatrix(df, Seq("x", "y", "z")))
-      assert(fused == perCol, s"fused=$fused perCol=$perCol")
-    } finally spark.conf.unset("spark.graft.spearman.fused")
-  }
-
   test("spearmanMatrix: driver tiny path == distributed per-column bit-for-bit; NULL input falls back") {
     import spark.implicits._
     def distributed[T](body: => T): T = {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * per-subspace form it replaces — same seeds (salted-draw order),
   * same assignments (same native kernel), same decimal-mean centroid
   * arithmetic — including when Lloyd's kills empty lists between
-  * rounds. The serial path stays reachable behind
-  * spark.graft.pq.fusedTrain=false as the parity oracle. */
+  * rounds. The serial oracle is built here: one [[Similarity.kmeans]]
+  * per subspace `slice`, salted `pq<s>:` as the fused draw is. */
 class PqTrainFusedSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,12 +27,16 @@ class PqTrainFusedSpec extends SparkSpec {
   private def vdf(n: Int) =
     (0L until n.toLong).map(i => (i, vec(i))).toDF("vec_id", "v")
 
+  private def serialTrain(v: org.apache.spark.sql.DataFrame, m: Int, sub: Int,
+                          nCents: Int, iters: Int): Seq[Seq[(Int, Seq[Double])]] =
+    (0 until m).map { s =>
+      val sliced = v.select(col("vec_id"), slice(col("v"), s * sub + 1, sub).as("v"))
+      Similarity.kmeans(sliced, nCents, sub, iters, "vec_id", "v", salt = s"pq$s:")
+    }
+
   private def both(n: Int, nCents: Int, iters: Int) = {
     val v = vdf(n)
-    spark.conf.set("spark.graft.pq.fusedTrain", "false")
-    val serial =
-      try Similarity.pqTrainCodebooks(v, m, sub, nCents, iters, "vec_id")
-      finally spark.conf.unset("spark.graft.pq.fusedTrain")
+    val serial = serialTrain(v, m, sub, nCents, iters)
     val fused = Similarity.pqTrainCodebooks(v, m, sub, nCents, iters, "vec_id")
     (serial, fused)
   }
@@ -60,10 +64,7 @@ class PqTrainFusedSpec extends SparkSpec {
     // lists with zero members, which DIE (drop out of the centroid
     // set) — the id holes must match exactly between the two paths
     val v = (0L until 40L).map(i => (i, vec(i % 5))).toDF("vec_id", "v")
-    spark.conf.set("spark.graft.pq.fusedTrain", "false")
-    val serial =
-      try Similarity.pqTrainCodebooks(v, m, sub, 12, 3, "vec_id")
-      finally spark.conf.unset("spark.graft.pq.fusedTrain")
+    val serial = serialTrain(v, m, sub, 12, 3)
     val fused = Similarity.pqTrainCodebooks(v, m, sub, 12, 3, "vec_id")
     assert(serial.exists(_.size < 12),
       "fixture did not exercise empty-list death; lower the distinct count")
@@ -74,10 +75,7 @@ class PqTrainFusedSpec extends SparkSpec {
     val (serial, fused) = both(60, 5, 1)
     assertIdentical(serial, fused)
     val v = vdf(60)
-    spark.conf.set("spark.graft.pq.fusedTrain", "false")
-    val s1 =
-      try Similarity.pqTrainCodebooks(v, 1, dim, 4, 2, "vec_id")
-      finally spark.conf.unset("spark.graft.pq.fusedTrain")
+    val s1 = serialTrain(v, 1, dim, 4, 2)
     val f1 = Similarity.pqTrainCodebooks(v, 1, dim, 4, 2, "vec_id")
     assertIdentical(s1, f1)
   }
