@@ -2,26 +2,27 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 
 /** C12 (jobs/etl_job.py:380-423): category enrichment.
   *
   * Semantics preserved from the reference:
   *   - all log columns upper-cased;
-  *   - INNER join on (SITESEQ, PRODUCTCODE) = (SHOPPING_ID, ITEM_CODE):
-  *     non-login rows without a category match are dropped — this is
-  *     intentional, NOT a left join (SURVEY.md §2.3);
-  *   - login rows are re-appended null-padded with the 11 category
-  *     columns. A login row that also matched the join appears twice and
-  *     survives the final dedup because its category columns differ —
-  *     reference behavior, reproduced;
-  *   - the reference's positional union swaps INTG_ID/ITEM_CODE between
-  *     the two sides (jobs/etl_job.py:400-401 vs 417) — invisible there
-  *     because both are null strings on the login side. We keep the
-  *     JOINED side's column order as the output schema and align the
-  *     login side to it, which is value-identical to the reference
-  *     (documented deviation, SURVEY.md §2.4 U4);
+  *   - inner-join semantics on (SITESEQ, PRODUCTCODE) =
+  *     (SHOPPING_ID, ITEM_CODE): non-login rows without a category match
+  *     are dropped — intentional in the reference (SURVEY.md §2.3);
+  *   - login rows are also emitted once null-padded with the 11
+  *     category columns. A login row that also matched the join appears
+  *     twice and survives the final dedup because its category columns
+  *     differ — reference behavior, reproduced;
+  *   - output columns in the reference's JOINED-side order (its
+  *     positional union swaps INTG_ID/ITEM_CODE on the login side,
+  *     jobs/etl_job.py:400-401 vs 417 — invisible there because both are
+  *     null strings; documented deviation, SURVEY.md §2.4 U4);
   *   - USER_ID truncated to 100 chars (MySQL column-width guard).
+  *
+  * The reference computes the inner join and unions a re-read of the
+  * login rows; here both come from ONE broadcast left join (see
+  * [[withLoginPads]]), so the upstream chain and its scan run once.
   *
   * Scale: the category side is one dimension table (a MySQL view in the
   * reference) — small by construction, so we `broadcast` it explicitly:
@@ -31,36 +32,39 @@ import org.apache.spark.sql.types.StringType
   */
 object Enrichment {
 
+  /** The category columns of the output, in contract order. */
+  private[etl] val categoryColumns: Seq[String] = Schemas.outputColumns.drop(5)
+
   def joinWithCategories(logs: DataFrame, categories: DataFrame): DataFrame = {
-    val up = logs.toDF(logs.columns.map(_.toUpperCase): _*)
+    val up = logs.toDF(logs.columns.toIndexedSeq.map(_.toUpperCase): _*)
+    withLoginPads(up, categories, site = "SITESEQ", code = "PRODUCTCODE", logtype = "LOGTYPE")
+      .select(
+        substring(col("USERID"), 1, 100).as("USER_ID") +:
+        col("SITESEQ").as("SHOPPING_ID") +:
+        col("TRANSACTION_DATE") +: col("TRANSACTION_TIME") +:
+        col("LOGTYPE").as("LOG_TYPE") +:
+        categoryColumns.map(col): _*)
+  }
 
-    val joined = up
+  /** C12's row set from one broadcast left join: every row of `df`
+    * joined to its category matches (the inner join), plus, for each
+    * login row, one extra copy whose join key is nulled so it matches
+    * nothing and comes out null-padded. Unmatched non-pad copies are
+    * dropped. A login row thus yields exactly one padded row however
+    * many category rows it matches. Returns `df`'s columns plus the
+    * category columns (and two helper columns callers project away).
+    * Also serves the streaming chain: a stream-static left outer join
+    * with the stream on the left is supported. */
+  private[etl] def withLoginPads(df: DataFrame, categories: DataFrame,
+                                 site: String, code: String, logtype: String): DataFrame = {
+    val copies = df
+      .withColumn("c12_pad", explode(
+        when(col(logtype) === "login", array(lit(false), lit(true))).otherwise(array(lit(false)))))
+      .withColumn("c12_code", when(!col("c12_pad"), col(code)))
+    copies
       .join(broadcast(categories),
-        up("SITESEQ") === categories("SHOPPING_ID") &&
-          up("PRODUCTCODE") === categories("ITEM_CODE"))
-      .select(
-        up("USERID").as("USER_ID"),
-        up("SITESEQ").as("SHOPPING_ID"),
-        up("TRANSACTION_DATE"), up("TRANSACTION_TIME"),
-        up("LOGTYPE").as("LOG_TYPE"),
-        col("INTG_ID"), col("ITEM_CODE"), col("ITEM_NAME"),
-        col("CAT1"), col("CAT2"), col("CAT3"), col("CAT4"),
-        col("INTG_CAT1"), col("INTG_CAT2"), col("INTG_CAT3"), col("INTG_CAT4"))
-
-    val nullStr = lit(null).cast(StringType)
-    val loginRows = up
-      .filter(col("LOGTYPE") === "login")
-      .select(
-        col("USERID").as("USER_ID"),
-        col("SITESEQ").as("SHOPPING_ID"),
-        col("TRANSACTION_DATE"), col("TRANSACTION_TIME"),
-        col("LOGTYPE").as("LOG_TYPE"),
-        nullStr.as("INTG_ID"), nullStr.as("ITEM_CODE"), nullStr.as("ITEM_NAME"),
-        nullStr.as("CAT1"), nullStr.as("CAT2"), nullStr.as("CAT3"), nullStr.as("CAT4"),
-        nullStr.as("INTG_CAT1"), nullStr.as("INTG_CAT2"),
-        nullStr.as("INTG_CAT3"), nullStr.as("INTG_CAT4"))
-
-    joined.union(loginRows)
-      .withColumn("USER_ID", substring(col("USER_ID"), 1, 100))
+        copies(site) === categories("SHOPPING_ID") && copies("c12_code") === categories("ITEM_CODE"),
+        "left_outer")
+      .filter(col("c12_pad") || categories("ITEM_CODE").isNotNull)
   }
 }

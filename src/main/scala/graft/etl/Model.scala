@@ -29,8 +29,8 @@ object Schemas {
       .map(StructField(_, StringType)))
 
   /** Final 16-column output (jobs/etl_job.py:416-423). Column order is
-    * part of the contract: the positional union in enrichment depends
-    * on it. */
+    * part of the contract: it is the reference's output layout, and
+    * CSV sinks are positional. */
   val outputColumns: Seq[String] = Seq(
     "USER_ID", "SHOPPING_ID", "TRANSACTION_DATE", "TRANSACTION_TIME",
     "LOG_TYPE", "INTG_ID", "ITEM_CODE", "ITEM_NAME",

@@ -16,14 +16,14 @@ final case class EtlResult(
   * native `Dataset.transform`.
   *
   * Scale notes (local[32] tests, 1000-executor design point):
-  *   - Stages C1-C11 are narrow: filter/project/union/explode — they fuse
+  *   - The chain reads its input ONCE: the physical plan is one linear
+  *     pass over one parquet scan, then the broadcast join, then the
+  *     dedup exchange. No stage unions two subplans of the input
+  *     (Catalyst does not dedupe a repeated subplan, so each union
+  *     branch would re-scan the source): C1-C4 tag and explode the
+  *     matching branches, C11 is a `coalesce`, C12 is one left join.
+  *   - Stages C1-C11 are narrow: filter/generate/project — they fuse
   *     into one whole-stage-codegen span over the scan, no shuffle.
-  *   - The input feeds 4+ selector branches; Catalyst does NOT dedupe the
-  *     repeated subplan, so the source is scanned once per branch. For a
-  *     parquet source with pushed filters this is usually cheaper than
-  *     caching 100 TB (cache would spill); callers who read from an
-  *     expensive source can pass an already-cached df. The filters are
-  *     disjoint by logtype/siteseq, so each re-scan reads a pruned subset.
   *   - C12 broadcasts the category dim — no shuffle.
   *   - C13 (dropDuplicates) is the single shuffle: hash exchange on all
   *     16 columns. Map-side partial dedup runs first, so the exchange

@@ -43,12 +43,8 @@ object StreamingEtl {
 
     // C8+C9
     val scrub = shaped
-      .withColumn("productCode",
-        split(regexp_replace(regexp_replace(col("productCode"), Transforms.commaPattern, ""),
-          Transforms.quotePattern, ""), ","))
-      .withColumn("productName",
-        split(regexp_replace(regexp_replace(col("productName"), Transforms.commaPattern, ""),
-          Transforms.quotePattern, ""), ","))
+      .transform(Transforms.removeComma)
+      .transform(Transforms.removeQuote)
 
     // C10 keep-ts
     val exploded = scrub
@@ -62,37 +58,21 @@ object StreamingEtl {
     val withId = exploded.withColumn("userid",
       coalesce(col("userid"), col("maid"))).drop("maid")
 
-    // C12 keep-ts: stream-static broadcast join + null-padded logins
-    val enriched = withId.filter(col("logtype") =!= "login")
-      .join(broadcast(categories),
-        withId("siteseq") === categories("SHOPPING_ID") &&
-          withId("productCode") === categories("ITEM_CODE"))
+    // C12 keep-ts: the batch chain's single stream-static broadcast left
+    // join (matches plus one null-padded copy per login row)
+    val enriched = Enrichment.withLoginPads(withId, categories,
+        site = "siteseq", code = "productCode", logtype = "logtype")
       .select(
-        col("event_ts"),
-        substring(col("userid"), 1, 100).as("USER_ID"),
-        col("siteseq").as("SHOPPING_ID"),
-        col("transaction_date").as("TRANSACTION_DATE"),
-        col("transaction_time").as("TRANSACTION_TIME"),
-        col("logtype").as("LOG_TYPE"),
-        col("INTG_ID"), col("ITEM_CODE"), col("ITEM_NAME"),
-        col("CAT1"), col("CAT2"), col("CAT3"), col("CAT4"),
-        col("INTG_CAT1"), col("INTG_CAT2"), col("INTG_CAT3"), col("INTG_CAT4"))
-    val nullStr = lit(null).cast(StringType)
-    val logins = withId.filter(col("logtype") === "login")
-      .select(
-        col("event_ts"),
-        substring(col("userid"), 1, 100).as("USER_ID"),
-        col("siteseq").as("SHOPPING_ID"),
-        col("transaction_date").as("TRANSACTION_DATE"),
-        col("transaction_time").as("TRANSACTION_TIME"),
-        col("logtype").as("LOG_TYPE"),
-        nullStr.as("INTG_ID"), nullStr.as("ITEM_CODE"), nullStr.as("ITEM_NAME"),
-        nullStr.as("CAT1"), nullStr.as("CAT2"), nullStr.as("CAT3"), nullStr.as("CAT4"),
-        nullStr.as("INTG_CAT1"), nullStr.as("INTG_CAT2"),
-        nullStr.as("INTG_CAT3"), nullStr.as("INTG_CAT4"))
+        col("event_ts") +:
+        substring(col("userid"), 1, 100).as("USER_ID") +:
+        col("siteseq").as("SHOPPING_ID") +:
+        col("transaction_date").as("TRANSACTION_DATE") +:
+        col("transaction_time").as("TRANSACTION_TIME") +:
+        col("logtype").as("LOG_TYPE") +:
+        Enrichment.categoryColumns.map(col): _*)
 
     // C13: watermark-bounded dedup on the output contract columns
-    enriched.union(logins)
+    enriched
       .dropDuplicatesWithinWatermark(Schemas.outputColumns)
       .drop("event_ts")
   }

@@ -50,14 +50,14 @@ object Transforms {
     * The reference pattern `[^\"](\,+)|(\,+)[^\"]` also consumes the
     * adjacent non-quote character — reproduced byte-for-byte
     * (SURVEY.md §7.4 quirk 1). */
-  private[etl] val commaPattern = "[^\\\"](\\,+)|(\\,+)[^\\\"]"
+  private val commaPattern = "[^\\\"](\\,+)|(\\,+)[^\\\"]"
   def removeComma(df: DataFrame): DataFrame =
     df.withColumn("productCode", regexp_replace(col("productCode"), commaPattern, ""))
       .withColumn("productName", regexp_replace(col("productName"), commaPattern, ""))
 
   /** C9 (jobs/etl_job.py:323-333): strip `[`, `]`, `"` then split on ','
     * — turns the JSON-array-ish string `["a","b"]` into array<string>. */
-  private[etl] val quotePattern = "(^\\[)|(\\]$)|(\\\")"
+  private val quotePattern = "(^\\[)|(\\]$)|(\\\")"
   def removeQuote(df: DataFrame): DataFrame =
     df.withColumn("productCode", split(regexp_replace(col("productCode"), quotePattern, ""), ","))
       .withColumn("productName", split(regexp_replace(col("productName"), quotePattern, ""), ","))
@@ -74,17 +74,13 @@ object Transforms {
         col("tmp.productName").as("productName"))
 
   /** C11 (jobs/etl_job.py:353-366): fall back to the device id `maid` as
-    * `userid` when userid is null. Kept as the reference's two-branch
-    * positional union (null branch renames maid→userid). */
-  def selectValidId(df: DataFrame): DataFrame = {
-    val tail = Seq("siteseq", "transaction_date", "transaction_time",
-      "logtype", "productCode", "productName").map(col)
-    val nullBranch = df.filter(col("userid").isNull)
-      .select(col("maid").as("userid") +: tail: _*)
-    val okBranch = df.filter(col("userid").isNotNull)
-      .select(col("userid") +: tail: _*)
-    nullBranch.union(okBranch)
-  }
+    * `userid` when userid is null. The reference's two-branch union
+    * (null branch renames maid→userid) is one `coalesce`: each row takes
+    * exactly one branch, so the row multiset is the same. */
+  def selectValidId(df: DataFrame): DataFrame =
+    df.select(coalesce(col("userid"), col("maid")).as("userid"),
+      col("siteseq"), col("transaction_date"), col("transaction_time"),
+      col("logtype"), col("productCode"), col("productName"))
 
   /** C13 (jobs/etl_job.py:369-377): full-row dedup. One hash exchange on
     * all 16 columns; map-side partial aggregation halves the shuffle. */

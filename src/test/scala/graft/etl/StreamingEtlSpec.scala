@@ -32,4 +32,26 @@ class StreamingEtlSpec extends SparkSpec {
       assert(got.exists(r => r.contains("m-login") && r.contains("login")))
     } finally q.stop()
   }
+
+  test("C12 quirk (streaming): a matching login row appears twice, as in batch") {
+    val dir = Files.createTempDirectory("stream-etl-login").toString
+    val rows = Seq(Fixtures.logRow("m1", "-48", "u1", "c1",
+      "2019-06-01T01:43:09.000Z", "login",
+      """{"goodsCode": ["g1"], "goodsName": ["n1"]}"""))
+    Fixtures.logs(rows).write.parquet(s"$dir/batch1")
+
+    val cats = Fixtures.categories(Seq(Fixtures.catRow("-48", "g1", "x")))
+    val stream = spark.readStream.schema(Schemas.logEvent).parquet(s"$dir/*")
+    val q = StreamingEtl.transform(stream, cats, Fixtures.types).writeStream
+      .outputMode("append").format("memory").queryName("etl_stream_login").start()
+    try {
+      q.processAllAvailable()
+      val got = spark.sql("SELECT * FROM etl_stream_login")
+      // once enriched via the join, once null-padded, like the batch chain
+      assert(rowSet(got) == rowSet(Pipeline.transformData(Fixtures.logs(rows), cats, Fixtures.types)))
+      assert(got.count() == 2)
+      assert(got.filter("ITEM_CODE IS NULL").count() == 1)
+      assert(got.filter("ITEM_CODE = 'g1'").count() == 1)
+    } finally q.stop()
+  }
 }
