@@ -92,8 +92,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Generic A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" sets runtime
-    // session confs (the spark.graft.* gates read these) without a
-    // code change per probe.
+    // session confs without a code change per probe — e.g.
+    // spark.graft.gates.forceDistributed=true, the one switch that
+    // sends every driver-twin size gate (graft.ops.DriverGate) to its
+    // distributed arm.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
       s.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

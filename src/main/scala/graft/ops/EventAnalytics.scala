@@ -1358,19 +1358,14 @@ object EventAnalytics {
     // channel vocabulary — yet the distributed loop is `steps` chained
     // join+aggregate rounds whose stage-jobs dominate the row (the
     // textrank/ktruss scheduling lesson). Size-gated driver iteration
-    // (spark.graft.markov.driverStepsMaxMatrixRows, default 100k;
-    // 0 disables — the distributed parity face): collect the
-    // checkpointed matrix once and run the IDENTICAL decimal
-    // arithmetic in BigDecimal — products of two scale-12 decimals are
-    // exact at scale 24 (Spark: decimal(37,24), no rounding), sums are
-    // exact, then one HALF_UP round to scale 12 per (variant, state),
-    // matching round(sum(m·p), 12)::decimal(18,12) bit-for-bit
-    // (spec-pinned driver == distributed on real data).
-    val driverMax = events.sparkSession.conf
-      .getOption("spark.graft.markov.driverStepsMaxMatrixRows").map(_.toLong)
-      .getOrElse(100000L)
-    val pConv = if (driverMax > 0 && matrix.count() <= driverMax) {
-      val mRows = matrix.collect()
+    // (DriverGate.MarkovRows): collect the checkpointed matrix once
+    // and run the IDENTICAL decimal arithmetic in BigDecimal — products
+    // of two scale-12 decimals are exact at scale 24 (Spark:
+    // decimal(37,24), no rounding), sums are exact, then one HALF_UP
+    // round to scale 12 per (variant, state), matching
+    // round(sum(m·p), 12)::decimal(18,12) bit-for-bit (spec-pinned
+    // driver == distributed on real data).
+    val pConv = DriverGate.collect("markov", DriverGate.MarkovRows, matrix).map { mRows =>
       val byVi = mRows.groupBy(r => (r.getString(0), r.getString(1)))
         .map { case (k, rs) =>
           k -> rs.map(r => (r.getString(2), r.getDecimal(3))).toSeq
@@ -1399,7 +1394,7 @@ object EventAnalytics {
       }
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
-    } else {
+    }.getOrElse {
       // the mass vector carries its variant key under a DIFFERENT name
       // (vv) so the L join-iterations against `matrix` never self-join
       // on a shared attribute id

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Whole-graph structure metrics on an edge list. Companion to the
   * iterative operators (PageRankOp, Dedup.dedupClusters' connected
@@ -215,6 +216,50 @@ object GraphOps {
         greatest(least(col("u"), col("v")),
           least(greatest(col("u"), col("v")), col("w"))).as("tb"),
         greatest(col("u"), col("v"), col("w")).as("tc")), keepLayout = false)
+
+    /** The graph on the driver when its canonical edge table is under
+      * [[DriverGate.GraphEdges]], else None: the input of every driver
+      * graph twin (k-core, k-truss, BFS, LPA), collected and indexed at
+      * most once per face — the [[PageRankOp]] `collectedEdges`
+      * discipline — at the first twin that asks. Only long/int
+      * endpoints qualify: the twins cast ids to long (string ids would
+      * read back as 0, double/decimal ids truncate, silently collapsing
+      * distinct nodes) and rebuild the distributed path's schema;
+      * anything else stays on the type-generic distributed paths. */
+    private val driverGate = new DriverGate.Kept("graph", DriverGate.GraphEdges,
+      canonical.select(col("a").cast("long"), col("b").cast("long")),
+      rows => new DriverGraph(rows.map(r => (r.getLong(0), r.getLong(1)))))
+    private[GraphOps] def driver: Option[DriverGraph] =
+      if (!canonical.schema.forall(c => c.dataType == LongType || c.dataType == IntegerType)) None
+      else driverGate.get(spark)
+  }
+
+  /** A gate-sized graph held on the driver: the canonical edges in
+    * collect order, node indices by first appearance (`ids` inverts
+    * `idx`), and the symmetric CSR adjacency — node i's neighbors are
+    * `nbr(off(i) until off(i + 1))`, in edge order. */
+  private[GraphOps] final class DriverGraph(val edges: Array[(Long, Long)]) {
+    val idx = new scala.collection.mutable.LongMap[Int]()
+    edges.foreach { case (a, b) =>
+      if (!idx.contains(a)) idx(a) = idx.size
+      if (!idx.contains(b)) idx(b) = idx.size
+    }
+    val n: Int = idx.size
+    val ids = new Array[Long](n)
+    idx.foreach { case (id, i) => ids(i) = id }
+    val off = new Array[Int](n + 1)
+    edges.foreach { case (a, b) => off(idx(a) + 1) += 1; off(idx(b) + 1) += 1 }
+    (1 to n).foreach(i => off(i) += off(i - 1))
+    val nbr = new Array[Int](2 * edges.length)
+    locally {
+      val fill = java.util.Arrays.copyOf(off, n)
+      edges.foreach { case (a, b) =>
+        val ia = idx(a); val ib = idx(b)
+        nbr(fill(ia)) = ib; fill(ia) += 1
+        nbr(fill(ib)) = ia; fill(ib) += 1
+      }
+    }
+    def deg(i: Int): Int = off(i + 1) - off(i)
   }
 
   /** Build the shared face of one graph. `assumeCanonical = true`
@@ -335,30 +380,9 @@ object GraphOps {
     * stops early when a round changes nothing (identical output — the
     * remaining rounds are no-ops, same as the distributed
     * converged exit). */
-  private def lpaDriver(f: GraphFace, iters: Int): Option[DataFrame] = {
-    val nodeType = f.canonical.schema.head.dataType
-    if (!integralNodeType(nodeType)) return None
-    val edges = collectCanonical(f)
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val ids = new Array[Long](n)
-    idx.foreach { case (id, i) => ids(i) = id }
-    val degArr = new Array[Int](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
-    val off = new Array[Int](n + 1)
+  private def lpaDriver(f: GraphFace, g: DriverGraph, iters: Int): DataFrame = {
+    import g.{n, ids, off, nbr}
     var i = 0
-    while (i < n) { off(i + 1) = off(i) + degArr(i); i += 1 }
-    val nbr = new Array[Int](2 * edges.length)
-    val fill = java.util.Arrays.copyOf(off, n)
-    edges.foreach { case (a, b) =>
-      val ia = idx(a); val ib = idx(b)
-      nbr(fill(ia)) = ib; fill(ia) += 1
-      nbr(fill(ib)) = ia; fill(ib) += 1
-    }
     var labels: Array[Long] = ids.clone()
     var converged = false
     for (_ <- 1 to iters if !converged) {
@@ -389,21 +413,15 @@ object GraphOps {
     }
     val spark = f.spark
     import spark.implicits._
-    val out =
-      if (nodeType == org.apache.spark.sql.types.LongType)
-        (0 until n).map(i => (ids(i), labels(i))).toDF("node", "label")
-      else
-        (0 until n).map(i => (ids(i).toInt, labels(i).toInt)).toDF("node", "label")
-    Some(out)
+    val nodeType = f.canonical.schema.head.dataType
+    (0 until n).map(i => (ids(i), labels(i))).toDF("node", "label")
+      .select(col("node").cast(nodeType).as("node"), col("label").cast(nodeType).as("label"))
   }
 
   def labelPropagation(f: GraphFace, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"labelPropagation: iters must be in [1, 20], got $iters")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && f.canonical.count() <= driverMax) {
-      val d = lpaDriver(f, iters)
-      if (d.isDefined) return d.get
-    }
+    val d = f.driver.map(lpaDriver(f, _, iters))
+    if (d.isDefined) return d.get
     // ADAPTIVE frontier rounds: a node's round-r label depends only on
     // its neighbors' round-(r−1) labels, so a node NONE of whose
     // neighbors changed in round r−1 would recompute exactly its
@@ -546,80 +564,46 @@ object GraphOps {
     * lineage).
     *
     * Output: (node, hop), one row per reached node. */
-  /** Long-or-int node column support for the driver graph paths: the
-    * driver twins must emit the SAME schema the distributed path
-    * would, so they only engage for integral node types and rebuild
-    * typed local relations; anything else stays distributed. */
-  private def integralNodeType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType
-
-  /** Both endpoint columns of the canonical edge table are integral —
-    * the precondition for EVERY driver graph twin: collectCanonical
-    * casts node ids to long, so a non-integral node column (string ids
-    * cast to NULL and read back as 0, double/decimal ids truncate)
-    * would silently collapse distinct nodes. Non-integral graphs stay
-    * on the type-generic distributed paths. */
-  private def integralEndpoints(f: GraphFace): Boolean = {
-    val s = f.canonical.schema
-    s.length >= 2 && integralNodeType(s(0).dataType) && integralNodeType(s(1).dataType)
-  }
-
   /** BFS on the driver — exact twin of the frontier rounds below:
     * hop 0 = the distinct seed set (including seeds with no edges),
     * hop r = unvisited neighbors of the previous frontier. */
-  private def bfsHopsDriver(f: GraphFace, seeds: DataFrame, seedCol: String,
+  private def bfsHopsDriver(f: GraphFace, g: DriverGraph, seeds: DataFrame, seedCol: String,
                             rounds: Int): Option[DataFrame] = {
     val seedDf = seeds.select(col(seedCol).as("node")).distinct()
     val nodeType = seedDf.schema.head.dataType
-    if (!integralNodeType(nodeType) || !integralEndpoints(f) ||
-        f.canonical.schema.head.dataType != nodeType) return None
+    if (f.canonical.schema.head.dataType != nodeType) return None
     // a NULL seed survives distinct() as one row; in the distributed
     // path it is an inert (NULL, 0) row (NULL never equi-joins sym) —
     // mirror that here instead of letting getLong read NULL as node 0
     val seedRows = seedDf.select(col("node").cast("long")).collect()
     val nullSeed = seedRows.exists(_.isNullAt(0))
     val seedVals = seedRows.filterNot(_.isNullAt(0)).map(_.getLong(0))
-    val edges = collectCanonical(f)
-    val adjacency = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (a, b) =>
-      adjacency.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-      adjacency.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-    }
     val dist = new scala.collection.mutable.LongMap[Int]()
     var frontier = seedVals.toSeq
     frontier.foreach(s => dist(s) = 0)
     for (r <- 1 to rounds) {
       val next = scala.collection.mutable.ArrayBuffer.empty[Long]
       frontier.foreach { u =>
-        adjacency.get(u).foreach(_.foreach { v =>
-          if (!dist.contains(v)) { dist(v) = r; next += v }
-        })
+        g.idx.get(u).foreach { iu =>
+          (g.off(iu) until g.off(iu + 1)).foreach { j =>
+            val v = g.ids(g.nbr(j))
+            if (!dist.contains(v)) { dist(v) = r; next += v }
+          }
+        }
       }
       frontier = next.toSeq
     }
     val spark = f.spark
     import spark.implicits._
-    val out =
-      if (nodeType == org.apache.spark.sql.types.LongType) {
-        val rows = dist.toSeq.map { case (n, h) => (Option(n), h) } ++
-          (if (nullSeed) Seq((Option.empty[Long], 0)) else Nil)
-        rows.toDF("node", "hop")
-      } else {
-        val rows = dist.toSeq.map { case (n, h) => (Option(n.toInt), h) } ++
-          (if (nullSeed) Seq((Option.empty[Int], 0)) else Nil)
-        rows.toDF("node", "hop")
-      }
-    Some(out)
+    val rows = dist.toSeq.map { case (n, h) => (Option(n), h) } ++
+      (if (nullSeed) Seq((Option.empty[Long], 0)) else Nil)
+    Some(rows.toDF("node", "hop").select(col("node").cast(nodeType).as("node"), col("hop")))
   }
 
   def bfsHops(f: GraphFace, seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"bfsHops: rounds must be in [1, 20], got $rounds")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && f.canonical.count() <= driverMax) {
-      val d = bfsHopsDriver(f, seeds, seedCol, rounds)
-      if (d.isDefined) return d.get
-    }
+    val d = f.driver.flatMap(bfsHopsDriver(f, _, seeds, seedCol, rounds))
+    if (d.isDefined) return d.get
     // only each round's FRONTIER is materialized; the visited set is
     // the union of the already-checkpointed round tables (O(rounds)
     // plan width, zero recompute) — re-materializing the whole
@@ -668,58 +652,16 @@ object GraphOps {
     * The trajectory is row-for-row identical to the old
     * recompute-from-edges loop — both compute degrees of the induced
     * surviving subgraph; only the maintenance is incremental. */
-  /** Edge-count gate for the driver-iterated graph operators (k-core,
-    * k-truss, BFS, LPA): graphs whose CANONICAL edge table is at or
-    * under this many rows collect once (≤ ~32 MB of id pairs at the
-    * default) and iterate in exact integer arithmetic on the driver —
-    * the per-round state of these operators is node- or
-    * trajectory-sized, and at gate-sized graphs the distributed
-    * rounds are almost pure stage-job scheduling (the textrank/ktruss
-    * r14 lesson). 0 disables (the distributed parity face); results
-    * are identical either way — each operator is a pure integer
-    * function of the edge set (spec-pinned equality per operator).
-    * Conf `spark.graft.graph.driverMaxEdges`; the transitional r15
-    * name `…driverPeelMaxEdges` is honored when the new one is
-    * unset. */
-  private def driverMaxEdges(f: GraphFace): Long = f.spark.conf
-    .getOption("spark.graft.graph.driverMaxEdges")
-    .orElse(f.spark.conf.getOption("spark.graft.graph.driverPeelMaxEdges"))
-    .map(_.toLong)
-    .getOrElse(2000000L)
-
-  /** Collected canonical edges as id pairs (lossless long casts). */
-  private def collectCanonical(f: GraphFace): Array[(Long, Long)] =
-    f.canonical.select(col("a").cast("long"), col("b").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-
   /** The k-core peel on the driver — the exact integer twin of the
     * distributed round below: same per-round removed set (deg < k over
     * the CURRENT survivors), same loss accounting (each removed node
     * decrements its surviving neighbors once per incident edge), same
     * deg > 0 survival filter, same (n_nodes, Σdeg/2) trajectory row. */
-  private def kcoreLoopDriver(edges: Array[(Long, Long)], k: Int, maxRounds: Int,
+  private def kcoreLoopDriver(g: DriverGraph, k: Int, maxRounds: Int,
                               stopWhenStable: Boolean): (Seq[(Int, Long, Long)], Boolean, Int) = {
-    // index nodes; CSR adjacency over both directions
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val degArr = new Array[Long](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + degArr(i).toInt; i += 1 }
-    val nbr = new Array[Int](2 * edges.length)
-    val fill = java.util.Arrays.copyOf(off, n)
-    edges.foreach { case (a, b) =>
-      val ia = idx(a); val ib = idx(b)
-      nbr(fill(ia)) = ib; fill(ia) += 1
-      nbr(fill(ib)) = ia; fill(ib) += 1
-    }
+    import g.{n, off, nbr}
     val alive = new Array[Boolean](n); java.util.Arrays.fill(alive, true)
-    val deg = degArr.clone()
+    val deg = Array.tabulate(n)(g.deg(_).toLong)
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var prev: Option[(Long, Long)] = None
     var stable = false
@@ -737,7 +679,7 @@ object GraphOps {
         }
       }
       var nn = 0L; var s = 0L
-      i = 0
+      var i = 0
       while (i < n) {
         if (alive(i)) {
           if (deg(i) > 0) { nn += 1; s += deg(i) } else alive(i) = false
@@ -754,9 +696,8 @@ object GraphOps {
 
   private def kcoreLoop(f: GraphFace, k: Int, maxRounds: Int,
                         stopWhenStable: Boolean): (Seq[(Int, Long, Long)], Boolean, Int) = {
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && integralEndpoints(f) && f.canonical.count() <= driverMax)
-      return kcoreLoopDriver(collectCanonical(f), k, maxRounds, stopWhenStable)
+    val g = f.driver
+    if (g.isDefined) return kcoreLoopDriver(g.get, k, maxRounds, stopWhenStable)
     var deg = f.deg
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var prev: Option[(Long, Long)] = None
@@ -871,18 +812,10 @@ object GraphOps {
     * the alive triples, removes sup < k−2 edges, and kills triples
     * with a dead edge — the identical trajectory algebra
     * ((round, entering edges, Σsup/3 = alive triples, removed)). */
-  private def ktrussPeelDriver(edges: Array[(Long, Long)], k: Int, rounds: Int,
+  private def ktrussPeelDriver(g: DriverGraph, k: Int, rounds: Int,
                                maxTriangles: Long): Option[Seq[(Int, Long, Long, Long)]] = {
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val ids = new Array[Long](n)
-    idx.foreach { case (id, i) => ids(i) = id }
-    val degArr = new Array[Int](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
+    import g.{edges, idx, n, ids}
+    val degArr = Array.tabulate(n)(g.deg)
     // edge index by endpoint pair (a < b by original id), keyed on the
     // two PACKED node indices (each < n ≤ 2·edges, always an Int) —
     // one primitive LongMap entry per edge, no boxed tuple keys
@@ -1005,8 +938,8 @@ object GraphOps {
   def ktrussPeel(f: GraphFace, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"ktrussPeel: k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 10, s"ktrussPeel: rounds must be in [1, 10], got $rounds")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && integralEndpoints(f) && f.canonical.count() <= driverMax) {
+    val g = f.driver
+    if (g.isDefined) {
       // the edge gate does not bound triangle count, so the driver
       // twin additionally caps enumerated triangles (flat int storage,
       // ~12 B/triangle: the 30M default is ~360 MB transient) and
@@ -1014,7 +947,7 @@ object GraphOps {
       val maxTris = f.spark.conf
         .getOption("spark.graft.graph.driverMaxTriangles")
         .map(_.toLong).getOrElse(30000000L)
-      ktrussPeelDriver(collectCanonical(f), k, rounds, maxTris) match {
+      ktrussPeelDriver(g.get, k, rounds, maxTris) match {
         case Some(buf) =>
           val spark = f.spark
           import spark.implicits._

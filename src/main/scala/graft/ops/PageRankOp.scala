@@ -66,30 +66,17 @@ object PageRankOp {
     * `e` is partitioned on `_dst` when `broadcastRounds` (the rollup
     * key), on `_src` otherwise (the contribution-join key).
     *
-    * `tiny` (node count ≤ `spark.graft.pagerank.tinyGraphMaxNodes`,
-    * default 200k, AND edge count ≤ `…tinyGraphMaxEdges`, default 2M
-    * — the EDGE gate is the binding ≈32 MB collect/state bound; the
-    * r15 gate A/B raised the node default from a conservative 10k
-    * after the 16k-node/587k-edge purchase graph measured 32–36%
-    * faster on the driver path, while its sf1 twin at 5.9M edges
-    * stays on the engine via the edge gate)
-    * marks graphs where the round machinery itself IS the bill: every
-    * per-round broadcast collect and checkpoint is a scheduled job,
-    * and on a vocabulary-sized graph (x_textrank's word graph is 31
-    * nodes at sf0.1) ~9 tiny jobs cost ~1.2 s while the actual rank
-    * flow costs microseconds — the ktruss scheduling-bound lesson,
-    * pagerank edition. (Fusing the rounds into one un-checkpointed
-    * plan was measured FIRST and is 3× worse: under AQE each of the
-    * ~3 shuffles per round is its own stage-job, so the fused plan
-    * schedules MORE jobs, not fewer.) Since the per-round state is
-    * node-sized by construction, a graph under the gate iterates ON
-    * THE DRIVER: collect the checkpointed edge list once (bounded by
-    * the gate — ≤ 2M pairs ≈ 32 MB), run the identical fixed-point
-    * arithmetic in Scala longs, return the ranks as one local
-    * relation. Results are byte-identical ([[step]]'s integer ops are
-    * order-free; the spec asserts tiny == distributed equality); only
-    * the job count changes (~10 → 4). The 100 TB story is untouched —
-    * graphs over the gate ride the broadcast/shuffle round engine. */
+    * `tiny` (node count ≤ [[DriverGate.PageRankNodes]] AND edge
+    * count ≤ [[DriverGate.PageRankEdges]]) marks graphs where the
+    * round machinery itself IS the bill: on a vocabulary-sized graph
+    * (x_textrank's 31-node word graph at sf0.1) ~9 per-round jobs cost
+    * ~1.2 s while the rank flow costs microseconds (fusing the rounds
+    * into one plan measured 3× worse: under AQE each shuffle is its
+    * own stage-job). Such a graph iterates ON THE DRIVER over its
+    * once-collected edge list in the identical fixed-point arithmetic
+    * (byte-identical — [[step]]'s integer ops are order-free;
+    * spec-pinned), ~10 → 4 jobs; graphs over the gate ride the
+    * broadcast/shuffle round engine. */
   private[ops] case class Graph(e: DataFrame, nodes: DataFrame, deg: DataFrame,
                                 nN: Long, teleport: Long, broadcastRounds: Boolean,
                                 tiny: Boolean) {
@@ -147,12 +134,6 @@ object PageRankOp {
     // first materialization is _dst-partitioned — the broadcast-round
     // layout, and the common case; the rare huge-graph path pays one
     // extra repartition below (amortized over every round)
-    val tinyMaxNodes = spark.conf
-      .getOption("spark.graft.pagerank.tinyGraphMaxNodes").map(_.toLong)
-      .getOrElse(200000L)
-    val tinyMaxEdges = spark.conf
-      .getOption("spark.graft.pagerank.tinyGraphMaxEdges").map(_.toLong)
-      .getOrElse(2000000L)
     val e0 = ck(edges
       .select(col(src).cast("long").as("_src"), col(dst).cast("long").as("_dst"))
       .repartition(col("_dst")))
@@ -161,7 +142,8 @@ object PageRankOp {
     val nN: Long = nodes.count() // driver scalar: node count only
     // the edge-count job (cheap — e0 is checkpointed) is only paid by
     // tiny-gate CANDIDATES; big graphs never see it
-    val tiny = nN <= tinyMaxNodes && e0.count() <= tinyMaxEdges
+    val tiny = DriverGate.admits(spark, "pagerank_nodes", DriverGate.PageRankNodes, nN) &&
+      DriverGate.admits(spark, "pagerank_edges", DriverGate.PageRankEdges, e0.count())
     // tiny graphs never read the degree table as a DataFrame (the
     // driver derives degrees from the collected edges)
     val degRaw = e0.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))

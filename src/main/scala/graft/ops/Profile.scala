@@ -255,24 +255,16 @@ object Profile {
     // is ~15 tiny scheduled jobs around microseconds of integer rank
     // arithmetic (sf0.1 floor 2.76 s ≈ sf1 floor 2.84 s at 10× data),
     // so inputs whose KEYED table is at or under
-    // spark.graft.spearman.driverMaxRows (1M — ≈24 MB of id-free longs,
-    // the graph-gate collect bound; 0 disables) collect once and rank
-    // on the driver in the IDENTICAL exact integer arithmetic
-    // (spec-pinned driver == distributed, and the gate guarantees the
-    // Long moment sums can't overflow: Σr² ≤ 4n³ < 2⁶³ at n ≤ 1M). Any
-    // NULL keyed value falls back to the distributed path (whose inner
-    // rank joins drop such rows) rather than re-deriving that
-    // semantics. At 100 TB the distributed two-phase shape is the plan.
-    val driverMax = df.sparkSession.conf
-      .getOption("spark.graft.spearman.driverMaxRows").map(_.toLong)
-      .getOrElse(1000000L)
-    if (driverMax > 0) {
-      val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
-      if (keyed.count() <= driverMax) {
-        val d = spearmanDriver(df.sparkSession, keyed, cols)
-        if (d.isDefined) return d.get
-      }
-    }
+    // DriverGate.SpearmanRows (which also bounds the Long moment sums)
+    // collect once and rank on the driver in the IDENTICAL exact
+    // integer arithmetic (spec-pinned driver == distributed). Any NULL
+    // keyed value falls back to the distributed path (whose inner rank
+    // joins drop such rows) rather than re-deriving that semantics. At
+    // 100 TB the distributed two-phase shape is the plan.
+    val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
+    val d = DriverGate.collect("spearman", DriverGate.SpearmanRows, keyed)
+      .flatMap(rows => spearmanDriver(df.sparkSession, rows, cols))
+    if (d.isDefined) return d.get
     spearmanMoments(spearmanRanksPerColumn(df, cols, ix), cols)
   }
 
@@ -287,8 +279,8 @@ object Profile {
     * joins drop those rows, and the driver twin stays out of that
     * semantics instead of duplicating it. */
   private def spearmanDriver(spark: org.apache.spark.sql.SparkSession,
-                             keyed: DataFrame, cols: Seq[String]): Option[DataFrame] = {
-    val rows = keyed.collect()
+                             rows: Array[org.apache.spark.sql.Row],
+                             cols: Seq[String]): Option[DataFrame] = {
     val m = rows.length
     if (m == 0) return None // distributed emits NULL moments on empty input
     val k = cols.size

@@ -274,9 +274,9 @@ object Relational {
     * The result is checkpointed: each row carries `out` =
     * Σ valCol over all rows ≤ it in the order, current row included.
     *
-    * Tiny inputs (≤ `spark.graft.prefixSum.tinyMaxRows`, default 10k
-    * — value GRIDS, not data: spearman's rounded-quantity grid is 50
-    * rows, the discount grid 11) skip the whole range machinery: the
+    * Tiny inputs (≤ [[DriverGate.PrefixSumRows]] — value GRIDS, not
+    * data: spearman's rounded-quantity grid is 50 rows, the discount
+    * grid 11) skip the whole range machinery: the
     * big path costs ~4 scheduled jobs per call (range sampling,
     * subtotal collect, output checkpoint — each executing the input
     * once more), which on a grid-sized input is pure scheduling (the
@@ -291,14 +291,11 @@ object Relational {
     require(!df.columns.contains(out) && !df.columns.contains("_pid"),
       s"prefixSum: input already carries '$out' or '_pid'")
     val spark = df.sparkSession
-    val tinyMax = spark.conf
-      .getOption("spark.graft.prefixSum.tinyMaxRows").map(_.toLong)
-      .getOrElse(10000L)
     // one materialization either way: the big path's range sampling and
     // subtotal collect would re-execute the input; the tiny probe
     // needs its count
     val in = df.localCheckpoint()
-    if (in.count() <= tinyMax) {
+    if (DriverGate.admits(spark, "prefixSum", DriverGate.PrefixSumRows, in.count())) {
       // pmod(…, 1) = constant partition key: the repo's bounded
       // single-partition window idiom (no "no partition" plan warning)
       val wAll = Window.partitionBy(pmod(col(valCol).cast("long"), lit(1)))

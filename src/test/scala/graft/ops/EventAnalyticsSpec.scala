@@ -97,11 +97,11 @@ class EventAnalyticsSpec extends SparkSpec {
     val ev = events(rows: _*)
     val driver = EventAnalytics.markovAttribution(ev).collect()
       .map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.markov.driverStepsMaxMatrixRows", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     val dist =
       try EventAnalytics.markovAttribution(ev).collect()
         .map(_.toString).sorted.toSeq
-      finally spark.conf.unset("spark.graft.markov.driverStepsMaxMatrixRows")
+      finally spark.conf.unset(DriverGate.ForceDistributed)
     assert(driver.nonEmpty && driver == dist,
       s"driver:\n${driver.mkString("\n")}\ndist:\n${dist.mkString("\n")}")
   }

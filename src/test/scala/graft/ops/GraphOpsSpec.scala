@@ -71,7 +71,7 @@ class GraphOpsSpec extends SparkSpec {
     // force the distributed peel: the chunked-closure A/B pins the
     // DISTRIBUTED triple enumeration, which the r15 driver gate would
     // otherwise bypass on this tiny graph
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       val base = rowSet(GraphOps.triangleStats(df))
       val baseT = rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2))
@@ -82,7 +82,7 @@ class GraphOpsSpec extends SparkSpec {
         assert(rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2)) == baseT,
           "chunked triple enumeration must explode each triangle exactly once")
       } finally spark.conf.unset("spark.graft.graph.heavySplitDegree")
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("one shared GraphFace serves every operator with results identical to one-shot entries") {
@@ -229,7 +229,7 @@ class GraphOpsSpec extends SparkSpec {
     // shuffle ROUND shapes against each other, which the r15 driver
     // gate would otherwise bypass on these tiny graphs (driver ==
     // distributed is pinned separately by the driver-peel parity test)
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
     // two bridged triangles, a star, and a 60-node pseudo-random graph;
     // every iters in 1..5 (frontier kicks in from round 2; the random
@@ -267,7 +267,7 @@ class GraphOpsSpec extends SparkSpec {
         s"broadcast and shuffle dense rounds must agree, graph of ${g.size} edges, iters=$iters")
       assert(adaptive == dense, s"adaptive default, graph of ${g.size} edges, iters=$iters")
     }
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("driver peels == distributed peels: k-core and k-truss trajectories, hand and pseudo-random graphs") {
@@ -285,9 +285,9 @@ class GraphOpsSpec extends SparkSpec {
     for (g <- Seq(k4tail.toSeq, rnd)) {
       val edges = g.toDF("src", "dst")
       def distributed[T](body: => T): T = {
-        spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
+        spark.conf.set(DriverGate.ForceDistributed, "true")
         try body
-        finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+        finally spark.conf.unset(DriverGate.ForceDistributed)
       }
       for (k <- Seq(2, 3, 5); rounds <- Seq(1, 3)) {
         val drv = rowSet(GraphOps.kcorePeel(edges, k = k, rounds = rounds))
@@ -326,9 +326,9 @@ class GraphOpsSpec extends SparkSpec {
   test("driver-gate guards: string ids stay distributed, triangle cap falls back, NULL seeds stay inert") {
     import spark.implicits._
     def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
+      spark.conf.set(DriverGate.ForceDistributed, "true")
       try body
-      finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+      finally spark.conf.unset(DriverGate.ForceDistributed)
     }
     // 1. non-integral node ids: the driver twins cast ids to long, so a
     //    string-id graph under the default edge gate must take the

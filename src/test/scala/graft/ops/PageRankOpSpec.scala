@@ -156,7 +156,7 @@ class PageRankOpSpec extends SparkSpec {
     // force the shuffle layout (every graph over the broadcast ceiling;
     // tiny gate off too, else this graph would retake the driver path)
     spark.conf.set("spark.graft.pagerank.broadcastNodesMax", "0")
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       assert(PageRankOp.pageRank(df, "src", "dst", 3)
         .as[(Long, Long)].collect().toMap == basePr)
@@ -164,7 +164,7 @@ class PageRankOpSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap == basePpr)
     } finally {
       spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+      spark.conf.unset(DriverGate.ForceDistributed)
     }
   }
 
@@ -177,13 +177,13 @@ class PageRankOpSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val tinyPpr = PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       assert(PageRankOp.pageRank(df, "src", "dst", 3)
         .as[(Long, Long)].collect().toMap == tinyPr)
       assert(PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
         .as[(Long, Long)].collect().toMap == tinyPpr)
-    } finally spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("PreparedGraph: prepared == direct integer-for-integer (pageRank + PPR), repeated calls included") {
@@ -194,7 +194,7 @@ class PageRankOpSpec extends SparkSpec {
     val directPpr = PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
       .as[(Long, Long)].collect().toMap
     for (forceEngine <- Seq(false, true)) {
-      if (forceEngine) spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
+      if (forceEngine) spark.conf.set(DriverGate.ForceDistributed, "true")
       try {
         val pg = PageRankOp.prepare(df, "src", "dst")
         // two calls each: the shared handle must serve repeat queries
@@ -204,7 +204,7 @@ class PageRankOpSpec extends SparkSpec {
           assert(PageRankOp.personalizedPageRank(pg, seeds, 3)
             .as[(Long, Long)].collect().toMap == directPpr, s"engine=$forceEngine")
         }
-      } finally if (forceEngine) spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+      } finally if (forceEngine) spark.conf.unset(DriverGate.ForceDistributed)
     }
   }
 
@@ -212,7 +212,7 @@ class PageRankOpSpec extends SparkSpec {
     val df = graph.toDF("src", "dst")
     // the spec graph is tiny — disable the driver path so the round
     // engine's plans are what the listener captures
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -255,7 +255,7 @@ class PageRankOpSpec extends SparkSpec {
       }
     } finally {
       spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+      spark.conf.unset(DriverGate.ForceDistributed)
     }
   }
 }

@@ -813,14 +813,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Join"), p)
     assert(!p.contains("Exchange"), p)
     // gate off: the DISTRIBUTED shape stays pinned
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       val pd = plan("x_bfs_hops")
       assert(pd.contains("ExistingRDD") || pd.contains("Scan RDD"), pd)
       assert(!pd.contains("Scan parquet"), pd)
       assert(!pd.contains("Join"), pd)
       assert(!pd.contains("Exchange"), pd)
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("x_decayed_counts: max-date scalar broadcasts onto ONE data pass; weighting rides the tiny (type,step) grid") {
@@ -1414,7 +1414,7 @@ class PlanAuditSpec extends SparkSpec {
     * two-phase per-range-partition window keyed by `_pid` (data-sized
     * inputs), and the gate-bounded single-partition window whose
     * constant pmod partition key Spark extracts as `_w0` (inputs ≤
-    * tinyMaxRows — value grids). What stays FORBIDDEN is a window
+    * DriverGate.PrefixSumRows — value grids). What stays FORBIDDEN is a window
     * with neither: an ungated global sort, or one keyed by a
     * low-cardinality data column. */
   private def prefixWindowShapes(p: String): Seq[String] =
@@ -1426,30 +1426,27 @@ class PlanAuditSpec extends SparkSpec {
     val tiny = plan("x_spearman")
     assert(tiny.contains("LocalTableScan") && !tiny.contains("Exchange"),
       "under the driver gate the row must be a local result:\n" + tiny)
-    // the DISTRIBUTED shape audits run with the driver gate off — this
-    // is the 100 TB plan and must keep the prefixSum discipline
-    spark.conf.set("spark.graft.spearman.driverMaxRows", "0")
+    // the DISTRIBUTED shape audits run with every driver gate forced
+    // off (spearman's and prefixSum's alike) — this is the 100 TB plan
+    // and must keep the prefixSum discipline: the original all-_pid
+    // shape (at audit scale every grid is under the prefixSum gate —
+    // sf0.1's near-unique l_extendedprice grid is what exercises the
+    // mixed shape; the bench floors cover that side)
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       val winLines = prefixWindowShapes(plan("x_spearman"))
       assert(winLines.forall(w => w.contains("_pid") || w.contains("_w0")),
         "every rank window must be prefixSum's two-phase or its bounded tiny form:\n" +
           winLines.mkString("\n"))
-      // force the gate off: the original all-_pid discipline must hold
-      // (at audit scale every grid is under the gate — sf0.1's
-      // near-unique l_extendedprice grid is what exercises the mixed
-      // shape; the bench floors cover that side)
-      spark.conf.set("spark.graft.prefixSum.tinyMaxRows", "0")
-      try {
-        // the two-phase windows run behind prefixSum's output checkpoint
-        // at construction, so the final plan may carry none at all —
-        // what it must NOT carry is a window keyed by anything else
-        val big = prefixWindowShapes(plan("x_spearman"))
-        assert(big.forall(_.contains("_pid")),
-          "with the tiny gate off, any visible rank window must be two-phase:\n" +
-            big.mkString("\n"))
-      } finally spark.conf.unset("spark.graft.prefixSum.tinyMaxRows")
+      // the two-phase windows run behind prefixSum's output checkpoint
+      // at construction, so the final plan may carry none at all —
+      // what it must NOT carry is a window keyed by anything else
+      val big = prefixWindowShapes(plan("x_spearman"))
+      assert(big.forall(_.contains("_pid")),
+        "with the tiny gate off, any visible rank window must be two-phase:\n" +
+          big.mkString("\n"))
       assert(!plan("x_spearman").contains("CartesianProduct"))
-    } finally spark.conf.unset("spark.graft.spearman.driverMaxRows")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("x_seq_triples: one user_id exchange; top-k is TakeOrderedAndProject, never a global sort") {
@@ -1474,7 +1471,7 @@ class PlanAuditSpec extends SparkSpec {
         winLines.mkString("\n"))
     assert(!p.contains("CartesianProduct"), p)
     // gate off: the two-phase discipline must hold at any size
-    spark.conf.set("spark.graft.prefixSum.tinyMaxRows", "0")
+    spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
       // same vacuous-or-_pid contract as the spearman audit: the big
       // path's windows run behind the output checkpoint
@@ -1482,7 +1479,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(big.forall(_.contains("_pid")),
         "with the tiny gate off, any visible rank window must be two-phase:\n" +
           big.mkString("\n"))
-    } finally spark.conf.unset("spark.graft.prefixSum.tinyMaxRows")
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("x_embed_drift: one component exchange; the embedding array never crosses an exchange") {

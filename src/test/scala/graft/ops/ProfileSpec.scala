@@ -85,9 +85,9 @@ class ProfileSpec extends SparkSpec {
   test("spearmanMatrix: driver tiny path == distributed per-column bit-for-bit; NULL input falls back") {
     import spark.implicits._
     def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.spearman.driverMaxRows", "0")
+      spark.conf.set(DriverGate.ForceDistributed, "true")
       try body
-      finally spark.conf.unset("spark.graft.spearman.driverMaxRows")
+      finally spark.conf.unset(DriverGate.ForceDistributed)
     }
     // tie-heavy (x, z) plus a near-unique column (y) — the catalog's
     // grid-shape mix — on a fixture large enough for real tied groups

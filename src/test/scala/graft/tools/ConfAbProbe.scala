@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Generic conf-toggle A/B over one catalog query (scratch): runs the
   * named SparkEntry query to the noop sink under two settings of one
   * Spark conf, interleaved reps, and prints per-rep times. The probe
-  * face for size-gated paths (markov driver steps, pagerank tiny gate,
-  * prefixSum tiny path …) whose old branch stays reachable by conf.
+  * face for the size-gated driver twins (graft.ops.DriverGate): their
+  * limits are constants, and the one switch
+  * `spark.graft.gates.forceDistributed` (AB_VALUES "false,true")
+  * reaches every distributed arm.
   * Env: AB_QUERY, AB_CONF, AB_VALUES ("a,b"), AB_REPS (default 3),
   * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. */
 object ConfAbProbe {
