@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Corpus-level operators for a pretraining-data pipeline: benchmark
   * decontamination, deterministic stratified sampling, and TF-IDF term
@@ -836,17 +837,18 @@ object Corpus {
     *
     * Scale shape: one tokenize+explode feeds a map-side-combined count
     * aggregate; the count table (vocabulary-sized, far smaller than the
-    * corpus) is materialized once so the total-count scalar doesn't
-    * re-run the corpus pass; top-V plans as TakeOrderedAndProject and
-    * the running sum windows over just the V survivors. */
+    * corpus) is materialized once and its job observes the total-count
+    * scalar, so neither re-runs the corpus pass; top-V plans as
+    * TakeOrderedAndProject and the running sum windows over just the V
+    * survivors. */
   def vocabCoverage(docs: DataFrame, vocabSize: Int = 2000,
                     textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(vocabSize > 0, s"vocabCoverage: vocabSize must be > 0, got $vocabSize")
-    val counts = docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val total = counts.agg(sum(col("cnt"))).head().getLong(0)
+    val (counts, tot) = GraftPins.ck(
+      docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))(sum(col("cnt")).as("total"))
+    val total = tot.getLong(0)
     val rankW = Window.partitionBy(pmod(length(col("tok")), lit(1)))
       .orderBy(col("cnt").desc, col("tok"))
     counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
@@ -1229,12 +1231,13 @@ object Corpus {
       .localCheckpoint()
     val c2 = big.groupBy(col("h2")).agg(count(lit(1)).as("c2"))
     val c1 = big.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
-    val types = big.select(col("h1"), col("h2"), col("hc")).distinct()
-      .localCheckpoint()
+    // |bigram types|: one exact integer scalar, observed by the type
+    // table's checkpoint job and fed back as a literal
+    val (types, nt) = GraftPins.ck(big.select(col("h1"), col("h2"), col("hc")).distinct())(
+      count(lit(1)).as("t"))
     val npPrev = types.groupBy(col("h1")).agg(count(lit(1)).as("np"))
     val ncCur = types.groupBy(col("hc")).agg(count(lit(1)).as("nc"))
-    // |bigram types|: one exact integer scalar, fed back as a literal
-    val t = types.count()
+    val t = nt.getLong(0)
     val dict1 = c1.join(npPrev, "h1")
     big.join(c2, "h2").join(dict1, "h1").join(ncCur, "hc")
       .select(col(idCol),
@@ -1690,18 +1693,20 @@ object Corpus {
     import org.apache.spark.sql.expressions.Window
     val V = org.apache.spark.sql.graftext.VectorExpressions
     val base = docs.select(TextAnalysis.tokens(col(textCol)).as("_toks"))
-    val uni = base.select(explode(V.md5Hashes60(col("_toks"))).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // unigram counts: joined twice + total read
-    val tu = uni.agg(sum(col("c"))).head().getLong(0)
-    val pairs = base.filter(size(col("_toks")) >= 2)
+    // unigram counts: joined twice; the total is observed
+    val (uni, uSt) = GraftPins.ck(base.select(explode(V.md5Hashes60(col("_toks"))).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("c")))(sum(col("c")).as("tu"))
+    val tu = uSt.getLong(0)
+    val pairCounts = base.filter(size(col("_toks")) >= 2)
       .select(explode(arrays_zip(
         slice(V.md5Hashes60(col("_toks")), lit(1), size(col("_toks")) - 1),
         slice(V.md5Hashes60(col("_toks")), lit(2), size(col("_toks")) - 1))).as("bg"))
       .select(col("bg").getField("0").as("ha"), col("bg").getField("1").as("hb"))
       .groupBy(col("ha"), col("hb")).agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint() // pair counts: total + the scored join
-    val tp = pairs.agg(sum(col("n_pair"))).head().getLong(0)
+    // pair counts: the scored join reads the checkpoint; the total is
+    // observed
+    val (pairs, pSt) = GraftPins.ck(pairCounts)(sum(col("n_pair")).as("tp"))
+    val tp = pSt.getLong(0)
     val scored = pairs.filter(col("n_pair") >= minCount)
       .join(uni.select(col("h").as("ha"), col("c").as("n_a")), "ha")
       .join(uni.select(col("h").as("hb"), col("c").as("n_b")), "hb")

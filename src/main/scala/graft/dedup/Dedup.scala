@@ -3,6 +3,7 @@ package graft.dedup
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Deduplication operators for a 100 TB training-data pipeline.
   *
@@ -969,34 +970,31 @@ object Dedup {
     * over 10¹⁰ edges on a real cluster wants: an executor loss then
     * costs re-reading a file, not recomputing every round since the
     * start. The convergence test rides the SAME job as each round's
-    * materialization (an accumulator counts changed labels during the
-    * checkpoint write), so each round schedules exactly one job.
-    * Accumulator semantics are safe here: task retries can only
-    * over-count CHANGED labels, never turn a changed round into
-    * "converged".
+    * materialization (the changed-label count is observed by the
+    * checkpoint write, [[org.apache.spark.sql.graftext.GraftPins.ck]]),
+    * so no round schedules a convergence job of its own.
     */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 20,
                     reliableCheckpoints: Boolean = false): DataFrame = {
-    val spark = pairs.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint() else df.localCheckpoint()
     // materialize the (possibly expensive) pair source ONCE — ids,
     // self-loops, and every round's join all read this leaf instead of
     // re-executing the candidate-generation pipeline
-    val sym = materialize(pairs.select(col("id1"), col("id2"))
-      .union(pairs.select(col("id2").as("id1"), col("id1").as("id2"))))
+    val sym = GraftPins.ck(pairs.select(col("id1"), col("id2"))
+      .union(pairs.select(col("id2").as("id1"), col("id1").as("id2"))),
+      reliable = reliableCheckpoints)()._1
     val ids = sym.select(col("id1").as("id")).distinct()
     // self-loops make "min over neighbors" include the node's own label,
     // so each round is ONE join + ONE groupBy — no union in the loop
     val edges = sym
       .union(ids.select(col("id").as("id1"), col("id").as("id2")))
-    var labels = materialize(ids.withColumn("cluster_id", col("id")))
+    var labels = GraftPins.ck(ids.withColumn("cluster_id", col("id")),
+      reliable = reliableCheckpoints)()._1
     var converged = false
     var i = 0
-    // ONE job per round: the hop + pointer-jump + previous label are one
-    // plan, and the convergence count is an accumulator incremented
-    // while the eager checkpoint materializes that plan — no separate
-    // convergence job at all
+    // ONE materialization per round: the hop + pointer-jump + previous
+    // label are one plan, and the changed-label count is observed while
+    // the eager checkpoint materializes that plan — no separate
+    // convergence job
     while (!converged && i < maxIter) {
       val hop = edges.join(labels, edges("id1") === labels("id"))
         .select(col("id2"), col("cluster_id"))
@@ -1009,15 +1007,9 @@ object Dedup {
             coalesce(col("b.cluster_id"), col("a.cluster_id"))).as("cluster_id"))
       val tagged = jumped
         .join(labels.withColumnRenamed("cluster_id", "prev"), "id")
-      val changed = spark.sparkContext.longAccumulator(s"graft.cc.changed.round$i")
-      val counted = tagged.mapPartitions { it =>
-        it.map { r =>
-          if (r.get(1) != r.get(2)) changed.add(1L) // (id, cluster_id, prev)
-          r
-        }
-      }(org.apache.spark.sql.Encoders.row(tagged.schema))
-      val next = materialize(counted.toDF())
-      converged = changed.value == 0L
+      val (next, m) = GraftPins.ck(tagged, reliable = reliableCheckpoints)(
+        count(when(!(col("cluster_id") <=> col("prev")), 1)).as("changed"))
+      converged = m.getLong(0) == 0L
       labels = next.select(col("id"), col("cluster_id"))
       i += 1
     }

@@ -25,6 +25,18 @@ object DriverGate {
   val PageRankEdges: Long = 2000000L
   /** Canonical edges for the k-core, k-truss, BFS and LPA twins. */
   val GraphEdges: Long = 2000000L
+  /** Triangles the k-truss driver twin enumerates before it falls back
+    * to the distributed peel: the edge limit does not bound triangle
+    * count (a ~2000-node near-clique under it has ~1.3e9), and the
+    * flat int storage is ~12 B/triangle, so ~360 MB transient. */
+  val GraphTriangles: Long = 30000000L
+  /** Node tables up to this size run LPA and PageRank rounds with the
+    * node-sized table broadcast onto the partitioned edges (zero
+    * data-sized exchanges per round); past it the rounds shuffle. A
+    * few-hundred-MB broadcast ceiling (OPTIMIZATION_r15 §4: the
+    * shuffle layout wins from ~5M nodes). Not a driver twin: both
+    * arms are distributed, so the switch leaves it alone. */
+  val BroadcastNodes: Long = 4000000L
   /** Spearman keyed rows. The driver twin's Long moment sums Σr² and
     * Σr_a·r_b run over doubled ranks r ≤ 2n, so they stay ≤ 4n³ = 4e18
     * < Long.MaxValue here (overflow past n ≈ 1.32M; spec-pinned). */

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Batch event-stream analytics: gap sessionization, ordered-step
   * conversion funnels, and weekly cohort retention — the classic
@@ -756,10 +757,12 @@ object EventAnalytics {
         sum(col("_new")).over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val env = marked.groupBy(col("user_id"), col("session_idx"), col("event_type"))
       .agg(min(col("ts_us")).as("t0"), max(col("ts_us")).as("t1"))
-    val perSession = env.groupBy(col("user_id"), col("session_idx"))
-      .agg(collect_list(struct(col("event_type"), col("t0"), col("t1"))).as("envs"))
-      .localCheckpoint() // serves the session count AND the pair explode
-    val nSessions = perSession.count()
+    // the checkpoint serves the pair explode; its job observes the
+    // session count
+    val (perSession, st) = GraftPins.ck(env.groupBy(col("user_id"), col("session_idx"))
+      .agg(collect_list(struct(col("event_type"), col("t0"), col("t1"))).as("envs")))(
+      count(lit(1)).as("n"))
+    val nSessions = st.getLong(0)
     val pairs = perSession.select(explode(expr("""
         flatten(transform(envs, a ->
           filter(transform(envs, b -> named_struct(
@@ -792,7 +795,7 @@ object EventAnalytics {
   def seqTriples(events: DataFrame, gapSec: Long = 1800L, k: Int = 20): DataFrame = {
     val gapUs = gapSec * 1000000L
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val marked = events
+    val marks = events
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
       .withColumn("_new",
@@ -800,9 +803,13 @@ object EventAnalytics {
           col("ts_us") - lag(col("ts_us"), 1).over(wOrd) > gapUs, 1).otherwise(0))
       .withColumn("session_idx",
         sum(col("_new")).over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint() // serves the session count AND the trigram pass
-    val nSessions = marked.select(col("user_id"), col("session_idx"))
-      .distinct().count()
+    // the session count is observed by the trigram pass's checkpoint:
+    // a user's first row always opens a session (its lag is NULL) and
+    // session_idx counts _new = 1 rows, so Σ_new is exactly the number
+    // of distinct (user_id, session_idx) pairs (spec-pinned; a DISTINCT
+    // aggregate is not observable)
+    val (marked, st) = GraftPins.ck(marks)(coalesce(sum(col("_new")), lit(0L)).as("n"))
+    val nSessions = st.getLong(0)
     val wSess = Window.partitionBy(col("user_id"), col("session_idx"))
       .orderBy(col("ts"), col("event_id"))
     val tri = marked
@@ -840,11 +847,9 @@ object EventAnalytics {
     * the [[changepointDaily]] justification), never data-sized. Output
     * per day: `day`, `n`, `cusum` (original units, 6 dp), `alarm`. */
   def cusumDaily(events: DataFrame): DataFrame = {
-    val grid = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint()
-    val tot = grid.agg(count(lit(1)).cast("long").as("n0"),
-      sum(col("c")).cast("long").as("s0")).collect()(0)
+    val (grid, tot) = GraftPins.ck(events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).cast("long").as("c")))(
+      count(lit(1)).cast("long").as("n0"), sum(col("c")).cast("long").as("s0"))
     val (n0, s0) = (tot.getLong(0), tot.getLong(1))
     val w = Window.orderBy(col("day"))
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -878,15 +883,15 @@ object EventAnalytics {
     * `n_days`, `slope`, `intercept` (both 6 dp, x = day position). */
   def segmentedTrend(events: DataFrame): DataFrame = {
     val w = Window.orderBy(col("day"))
-    val grid = events.groupBy(to_date(col("ts")).as("day"))
+    // argmax job + moment pass both read the checkpoint; its job
+    // observes the totals
+    val (grid, tot) = GraftPins.ck(events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("long").as("c"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("pc", sum(col("c"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"))
-      .localCheckpoint() // argmax job + moment pass both read it
-    val tot = grid.agg(count(lit(1)).cast("long").as("nd"),
-      sum(col("c")).cast("long").as("st")).collect()(0)
+        .cast("long")))(
+      count(lit(1)).cast("long").as("nd"), sum(col("c")).cast("long").as("st"))
     val (nd, st) = (tot.getLong(0), tot.getLong(1))
     // With <2 distinct days the candidate set `rn < nd` is empty (and
     // with 0 the whole grid is): headOption instead of (0), falling back
@@ -1465,14 +1470,13 @@ object EventAnalytics {
     require(k >= 1 && k <= 8, s"binsegDaily: k must be in [1, 8], got $k")
     val spark = events.sparkSession
     val w = Window.orderBy(col("day"))
-    val grid = events.groupBy(to_date(col("ts")).as("day"))
+    val (grid, st) = GraftPins.ck(events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("long").as("c"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("pc", sum(col("c"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"))
-      .localCheckpoint()
-    val nDays = grid.count()
+        .cast("long")))(count(lit(1)).as("n"))
+    val nDays = st.getLong(0)
     // pc at a boundary rn (boundary 0 = before the series, pc 0)
     def pcAt(bounds: Seq[Long]): Map[Long, Long] = {
       val m = grid.filter(col("rn").isin(bounds.filter(_ > 0): _*))

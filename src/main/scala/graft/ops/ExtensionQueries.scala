@@ -471,10 +471,9 @@ object ExtensionQueries {
       // AQE-off materialization: an adaptive plan's checkpoint records
       // UnknownPartitioning, silently discarding the basket-key layout
       // this face exists to provide (GraftPins.withAqeOff scaladoc)
-      val m = org.apache.spark.sql.graftext.GraftPins.withAqeOff(s)(
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-          .repartition(col("l_orderkey")).localCheckpoint())
+      val m = org.apache.spark.sql.graftext.GraftPins.ck(Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_partkey")).distinct()
+        .repartition(col("l_orderkey")), keepLayout = true)()._1
       org.apache.spark.sql.graftext.GraftPins.pin(m)
       m
     }(releaseDf)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Whole-graph structure metrics on an edge list. Companion to the
@@ -23,18 +24,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object GraphOps {
 
-  /** Checkpoint keeping the dataset's physical partitioning readable
-    * by downstream planners: materialized AQE-off because an adaptive
-    * plan's checkpoint records UnknownPartitioning — which silently
-    * re-introduces every exchange the face/round layout was built to
-    * avoid (GraftPins.withAqeOff scaladoc; probed r13). Used for ALL
-    * face and per-round checkpoints in this file. */
-  private implicit class CkOps(private val df: DataFrame) {
-    def ckKeepPartitioning: DataFrame =
-      org.apache.spark.sql.graftext.GraftPins.withAqeOff(df.sparkSession)(
-        df.localCheckpoint())
-  }
-
   /** The shared faces of one undirected graph, each materialized at
     * most once (lazy + localCheckpoint — the invIndexFor persistence
     * idea, in-session). Build via [[GraphOps.face]].
@@ -54,13 +43,10 @@ object GraphOps {
 
     private[GraphOps] def spark = edges.sparkSession
 
-    /** Session confs are SNAPSHOT at face construction, not read at
+    /** The session conf is SNAPSHOT at face construction, not read at
       * first materialization: a face's lazy tables are built once and
       * cached, so a conf toggled after the face exists could never
-      * affect it anyway — capturing eagerly makes that explicit
-      * (an in-session A/B of these knobs must build a new face). */
-    private[GraphOps] val heavySplitDegree: Int =
-      spark.conf.getOption("spark.graft.graph.heavySplitDegree").map(_.toInt).getOrElse(0)
+      * affect it anyway — capturing eagerly makes that explicit. */
     private val validateCanonical: Boolean =
       spark.conf.getOption("spark.graft.graph.validateCanonical").exists(_.toBoolean)
 
@@ -80,7 +66,7 @@ object GraphOps {
       // unpin deregisters (no-op for throwaway faces) and unpersists
       // the backing RDD — Dataset.unpersist only consults the
       // CacheManager, which never saw a localCheckpoint's blocks
-      org.apache.spark.sql.graftext.GraftPins.unpin(c)
+      GraftPins.unpin(c)
     }
 
     /** Checkpoint a face; a PINNED face (one cached across queries)
@@ -104,8 +90,8 @@ object GraphOps {
       * small-table partition coalescing and buys nothing (measured: the
       * sf0.1 ktruss 2x-vs-floor flag). */
     private def ck(df: DataFrame, keepLayout: Boolean): DataFrame = {
-      val c = if (keepLayout) df.ckKeepPartitioning else df.localCheckpoint()
-      if (pinned) org.apache.spark.sql.graftext.GraftPins.pin(c)
+      val c = GraftPins.ck(df, keepLayout)()._1
+      if (pinned) GraftPins.pin(c)
       materialized.add(c)
       c
     }
@@ -121,7 +107,7 @@ object GraphOps {
       * (the default posture; all in-repo callers feed a
       * `x < y` self-join + distinct). Debug builds can make the trap
       * loud: `spark.graft.graph.validateCanonical=true` (snapshot at
-      * face construction, like the skew knob) adds one cheap
+      * face construction) adds one cheap
       * aggregate over the promised edge set — count vs distinct
       * count, plus a src < dst violation count — and throws on any
       * breach before the face is checkpointed. */
@@ -238,7 +224,7 @@ object GraphOps {
     * collect order, node indices by first appearance (`ids` inverts
     * `idx`), and the symmetric CSR adjacency — node i's neighbors are
     * `nbr(off(i) until off(i + 1))`, in edge order. */
-  private[GraphOps] final class DriverGraph(val edges: Array[(Long, Long)]) {
+  private[ops] final class DriverGraph(val edges: Array[(Long, Long)]) {
     val idx = new scala.collection.mutable.LongMap[Int]()
     edges.foreach { case (a, b) =>
       if (!idx.contains(a)) idx(a) = idx.size
@@ -273,35 +259,12 @@ object GraphOps {
     * forward adjacencies attached — (src, dst, nu, nbrs), hash joins
     * by hint (nothing here needs an order). Consumed by
     * [[triangleStats]] (merge-scan intersect COUNT per edge) and
-    * [[GraphFace.triples]] (intersect EXPLODE into triangle rows).
-    *
-    * Skew face (`spark.graft.graph.heavySplitDegree` = T > 0): the
-    * source-side adjacency is served in ≤ T-wide sorted chunks
-    * (slice + explode, chunks partition the array, so per-edge counts
-    * and exploded triangles are unchanged) — the standard
-    * high-degree-vertex split: a hub's edges carry bounded-width
-    * array payloads through the dst-side exchange instead of one
-    * giant row each. On near-regular graphs (the TPC-H co-occurrence
-    * graph: deg 38–222 at sf1) total bytes are unchanged and the
-    * chunking is a measured no-op, so the default is OFF; it exists
-    * for power-law graphs where a single packed hub row would
-    * dominate a partition (BENCH_SCALE §TRI-SPLIT has the A/B). The
-    * knob is SNAPSHOT at face construction ([[GraphFace]] scaladoc) —
-    * the closure feeds the cached `triples` face, so a post-build
-    * toggle could never apply to it; build a new face to A/B. */
-  private def closure(f: GraphFace): DataFrame = {
-    val t = f.heavySplitDegree
-    val srcAdj =
-      if (t <= 0) f.adj
-      else f.adj.select(col("src"),
-        explode(expr(
-          s"transform(sequence(0, greatest(cast(ceil(size(nbrs) / $t.0) as int), 1) - 1), " +
-            s"i -> slice(nbrs, i * $t + 1, $t))")).as("nbrs"))
+    * [[GraphFace.triples]] (intersect EXPLODE into triangle rows). */
+  private def closure(f: GraphFace): DataFrame =
     f.oriented
-      .join(srcAdj.hint("shuffle_hash"), "src")
+      .join(f.adj.hint("shuffle_hash"), "src")
       .withColumnRenamed("nbrs", "nu")
       .join(f.adj.hint("shuffle_hash").withColumnRenamed("src", "dst"), "dst")
-  }
 
   /** Triangle count + global clustering coefficient, by degree-ordered
     * edge iteration: count each oriented edge u→v's triangles as
@@ -352,9 +315,11 @@ object GraphOps {
     * ties broken by SMALLEST label; all nodes update simultaneously
     * from the previous round's labels (the asynchronous/random-order
     * variants converge faster but are non-reproducible — a
-    * deterministic engine can't ship them). Runs a FIXED `iters`
+    * deterministic engine can't ship them). Runs at most `iters`
     * rounds; the per-round label table is localCheckpointed so plan
-    * depth and lineage stay O(1) per round.
+    * depth and lineage stay O(1) per round, and the round's
+    * changed-label count is observed by that same checkpoint job
+    * ([[GraftPins.ck]]) — no separate convergence job.
     *
     * Per round: one join of the pre-partitioned symmetrized edge list
     * ([[GraphFace.sym]] — the label side alone exchanges, node-sized)
@@ -418,7 +383,12 @@ object GraphOps {
       .select(col("node").cast(nodeType).as("node"), col("label").cast(nodeType).as("label"))
   }
 
-  def labelPropagation(f: GraphFace, iters: Int): DataFrame = {
+  def labelPropagation(f: GraphFace, iters: Int): DataFrame =
+    labelPropagation(f, iters, DriverGate.BroadcastNodes)
+
+  /** [[labelPropagation]] with the broadcast-round node limit as a
+    * parameter (specs reach the shuffle rounds with 0). */
+  private[ops] def labelPropagation(f: GraphFace, iters: Int, broadcastNodes: Long): DataFrame = {
     require(iters >= 1 && iters <= 20, s"labelPropagation: iters must be in [1, 20], got $iters")
     val d = f.driver.map(lpaDriver(f, _, iters))
     if (d.isDefined) return d.get
@@ -442,15 +412,16 @@ object GraphOps {
     // round iff |changed| < frontierFraction · |nodes| (default 0.25,
     // `spark.graft.lpa.frontierFraction`; 0 disables — the dense A/B
     // face; the changed-set bookkeeping is a node-sized join per
-    // round, noise next to the edge-sized rollup it can retire). An
-    // empty changed set ends the loop — every later round is a no-op.
+    // round, noise next to the edge-sized rollup it can retire, and
+    // its count is observed by the round's checkpoint). An empty
+    // changed set ends the loop — every later round is a no-op.
     val frontierFraction = f.spark.conf
       .getOption("spark.graft.lpa.frontierFraction").map(_.toDouble).getOrElse(0.25)
     val useFrontier = frontierFraction > 0
     // Dense-round exchange budget. The naive round pays TWO data-sized
     // exchanges (the (v, label) rollup, then the per-node argmax).
-    //   - BROADCAST rounds (node table ≤ broadcastNodesMax, default
-    //     4M — a few-hundred-MB ceiling): join the labels onto the
+    //   - BROADCAST rounds (node table ≤ [[DriverGate.BroadcastNodes]],
+    //     a few-hundred-MB ceiling): join the labels onto the
     //     NEIGHBOR column v of the u-partitioned sym and aggregate on
     //     u. By symmetry that computes exactly each node's neighbor-
     //     label histogram, and u IS the checkpoint's partition key, so
@@ -466,19 +437,18 @@ object GraphOps {
     //     graph the combine ratio was negligible anyway.)
     // Identical results either way — same join semantics, same
     // multiset into the same argmax (spec-pinned across both paths).
-    val broadcastMax = f.spark.conf
-      .getOption("spark.graft.lpa.broadcastNodesMax").map(_.toLong).getOrElse(4000000L)
-    lazy val nNodes = f.deg.count()
-    var labels = f.deg
-      .select(col("node"), col("node").as("label"))
-      .ckKeepPartitioning
+    // the node count rides the initial label table's checkpoint job
+    val (labels0, n0) = GraftPins.ck(f.deg.select(col("node"), col("node").as("label")),
+      keepLayout = true)(count(lit(1)).as("n"))
+    val nNodes = n0.getLong(0)
+    var labels = labels0
     var changed: DataFrame = null // valid after round 1 (frontier mode)
     var changedCount = Long.MaxValue
     var converged = false
     for (r <- 1 to iters if !converged) {
       if (r == 1 || !useFrontier || changedCount >= frontierFraction * nNodes) {
         // dense round: every node recomputes
-        val next = if (nNodes <= broadcastMax)
+        val next = if (nNodes <= broadcastNodes)
           argmaxLabel(
             f.sym.join(broadcast(labels.select(col("node").as("v"), col("label"))), "v"),
             "u")
@@ -491,23 +461,20 @@ object GraphOps {
         if (useFrontier) {
           // the changed flag rides the round's ONE checkpoint (the
           // old-label join is node-sized and co-partitioned, so it
-          // folds into the materialization); the count is a cheap
-          // aggregate over the checkpoint and the changed SET is a
-          // free filter over it — the previous shape materialized a
-          // second node-sized checkpoint per round just for the set
-          val tagged = next.join(
+          // folds into the materialization), its count is observed by
+          // that same job, and the changed SET is a free filter over it
+          val (tagged, m) = GraftPins.ck(next.join(
             labels.select(col("node"), col("label").as("_old")).hint("shuffle_hash"),
             "node")
             .select(col("node"), col("label"),
-              (col("label") =!= col("_old")).as("_chg"))
-            .ckKeepPartitioning
+              (col("label") =!= col("_old")).as("_chg")),
+            keepLayout = true)(count(when(col("_chg"), 1)).as("c"))
           changed = tagged.filter(col("_chg")).select(col("node"))
-          changedCount = tagged
-            .agg(count(when(col("_chg"), 1)).as("c")).collect()(0).getLong(0)
+          changedCount = m.getLong(0)
           converged = changedCount == 0
           labels = tagged.select(col("node"), col("label"))
         } else {
-          labels = next.ckKeepPartitioning
+          labels = GraftPins.ck(next, keepLayout = true)()._1
         }
       } else {
         // neighbors of the changed set — the only nodes whose argmax
@@ -523,14 +490,14 @@ object GraphOps {
           .join(labels.select(col("node").as("v"), col("label")).hint("shuffle_hash"), "v")
         val newAffected = argmaxLabel(joined, "u")
           .withColumnRenamed("label", "_new")
-        val merged = labels
+        val (merged, m) = GraftPins.ck(labels
           .join(newAffected.hint("shuffle_hash"), Seq("node"), "left")
           .select(col("node"),
             coalesce(col("_new"), col("label")).as("label"),
-            (col("_new").isNotNull && col("_new") =!= col("label")).as("_chg"))
-          .ckKeepPartitioning
+            (col("_new").isNotNull && col("_new") =!= col("label")).as("_chg")),
+          keepLayout = true)(count(when(col("_chg"), 1)).as("c"))
         changed = merged.filter(col("_chg")).select(col("node"))
-        changedCount = changed.count()
+        changedCount = m.getLong(0)
         converged = changedCount == 0
         labels = merged.select(col("node"), col("label"))
       }
@@ -552,7 +519,7 @@ object GraphOps {
     * has distance 0 to itself). A FIXED round count keeps the result
     * reproducible and the plan statically bounded, the same contract as
     * [[labelPropagation]]/[[kcorePeel]]; for iterate-to-empty-frontier
-    * semantics see the accumulator-fused convergence pattern in
+    * semantics see the observed-checkpoint convergence pattern in
     * [[graft.dedup.Dedup.dedupClusters]].
     *
     * Per round: ONE frontier probe of the pre-partitioned
@@ -609,16 +576,15 @@ object GraphOps {
     // plan width, zero recompute) — re-materializing the whole
     // distance table every round would write the cumulative reachable
     // set `rounds` times over
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hop", lit(0)).ckKeepPartitioning
+    var dist = GraftPins.ck(seeds.select(col(seedCol).as("node")).distinct()
+      .withColumn("hop", lit(0)), keepLayout = true)()._1
     var frontier = dist.select(col("node"))
     for (r <- 1 to rounds) {
-      val next = f.sym
+      val next = GraftPins.ck(f.sym
         .join(frontier.select(col("node").as("u")).hint("shuffle_hash"), "u")
         .select(col("v").as("node")).distinct()
         .join(dist.select(col("node")).hint("shuffle_hash"), Seq("node"), "left_anti")
-        .withColumn("hop", lit(r))
-        .ckKeepPartitioning
+        .withColumn("hop", lit(r)), keepLayout = true)()._1
       dist = dist.unionAll(next)
       frontier = next.select(col("node"))
     }
@@ -646,8 +612,9 @@ object GraphOps {
     * Nodes whose degree reaches 0 leave the table, matching the
     * recomputed-degree semantics (a zero-degree node carries no edge).
     * The per-round deg table is localCheckpointed (bounded lineage);
-    * round stats (n_nodes = rows, n_edges = Σdeg/2) come from the
-    * node-sized table with no extra pass over edges.
+    * round stats (n_nodes = rows, n_edges = Σdeg/2) are observed by
+    * that checkpoint's own job ([[GraftPins.ck]]): one job per round,
+    * no extra pass over edges or over the checkpoint.
     *
     * The trajectory is row-for-row identical to the old
     * recompute-from-edges loop — both compute degrees of the induced
@@ -709,16 +676,15 @@ object GraphOps {
       val losses = f.sym
         .join(removed.select(col("node").as("u")).hint("shuffle_hash"), "u")
         .groupBy(col("v")).agg(count(lit(1)).as("_loss"))
-      deg = deg
+      val (next, st) = GraftPins.ck(deg
         .join(removed.hint("shuffle_hash"), Seq("node"), "left_anti")
         .join(losses.select(col("v").as("node"), col("_loss")).hint("shuffle_hash"),
           Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("_loss"), lit(0L))).as("deg"))
-        .filter(col("deg") > 0)
-        .ckKeepPartitioning
-      val st = deg.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("deg")), lit(0L)).cast("bigint").as("s")).collect()(0)
+        .filter(col("deg") > 0), keepLayout = true)(
+        count(lit(1)).as("n"), coalesce(sum(col("deg")), lit(0L)).cast("bigint").as("s"))
+      deg = next
       val cur = (st.getLong(0), st.getLong(1) / 2)
       buf += ((r, cur._1, cur._2))
       stable = prev.contains(cur)
@@ -753,11 +719,11 @@ object GraphOps {
   /** Iterate-to-fixpoint k-core: [[kcoreLoop]] run until a round peels
     * nothing (consecutive (n_nodes, n_edges) equal — the true k-core),
     * up to `maxRounds`. No extra convergence job: the loop already
-    * collects a 1-row stats table per round for the trajectory, so the
-    * fixpoint test is a driver-side equality on numbers it was
-    * computing anyway. Throws if `maxRounds` rounds don't stabilize —
-    * a partially-peeled core is not detectably different downstream,
-    * so fail loudly (the pageRankConverged / CC-loop contract).
+    * observes a round's stats for the trajectory, so the fixpoint test
+    * is a driver-side equality on numbers it was computing anyway.
+    * Throws if `maxRounds` rounds don't stabilize — a partially-peeled
+    * core is not detectably different downstream, so fail loudly (the
+    * pageRankConverged / CC-loop contract).
     *
     * Output: (trajectory DataFrame — same schema as kcorePeel, ending
     * at the first stable round —, rounds actually run). */
@@ -799,8 +765,9 @@ object GraphOps {
     * shuffle shrinking id triples; deletion can't create triangles, so
     * both shapes are exact). Edge/support/triple tables are
     * localCheckpointed per round (the kcore bounded-lineage
-    * discipline); n_triangles falls out of the support sum (Σsup = 3Δ)
-    * with no extra pass.
+    * discipline); n_triangles falls out of the support sum (Σsup = 3Δ),
+    * observed with the survivor count by the support table's own
+    * checkpoint job — no extra pass.
     *
     * Output: one row per round — (round, n_edges entering the round,
     * n_triangles on that edge set, n_removed by the round's peel). */
@@ -812,8 +779,8 @@ object GraphOps {
     * the alive triples, removes sup < k−2 edges, and kills triples
     * with a dead edge — the identical trajectory algebra
     * ((round, entering edges, Σsup/3 = alive triples, removed)). */
-  private def ktrussPeelDriver(g: DriverGraph, k: Int, rounds: Int,
-                               maxTriangles: Long): Option[Seq[(Int, Long, Long, Long)]] = {
+  private[ops] def ktrussPeelDriver(g: DriverGraph, k: Int, rounds: Int,
+                                    maxTriangles: Long): Option[Seq[(Int, Long, Long, Long)]] = {
     import g.{edges, idx, n, ids}
     val degArr = Array.tabulate(n)(g.deg)
     // edge index by endpoint pair (a < b by original id), keyed on the
@@ -935,19 +902,27 @@ object GraphOps {
     Some(buf.toSeq)
   }
 
+  /** Per-round k-truss checkpoints are SIZE-GATED between the two
+    * materialization modes (the r13/r14 adjudication): AQE-off
+    * (partitioning-preserving, fixed partition count) only once the
+    * round's edge table has this many rows, so the preserved layout
+    * retires real re-exchanges; below it the round tables keep AQE,
+    * whose partition coalescing dominates on tiny tables (the
+    * dedupClusters CC-pair pathology — fixed 32-partition rounds on a
+    * 133k-edge sf0.1 graph measured 2.0x the plain-checkpoint floor,
+    * while the 1.33M-edge sf1 graph runs 2.1x FASTER with partitioning
+    * kept). The gate reads the observed `ne` each round already has. */
+  private val RoundCkAqeOffMinRows = 500000L
+
   def ktrussPeel(f: GraphFace, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"ktrussPeel: k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 10, s"ktrussPeel: rounds must be in [1, 10], got $rounds")
     val g = f.driver
     if (g.isDefined) {
       // the edge gate does not bound triangle count, so the driver
-      // twin additionally caps enumerated triangles (flat int storage,
-      // ~12 B/triangle: the 30M default is ~360 MB transient) and
-      // falls through to the spilling distributed peel past the cap
-      val maxTris = f.spark.conf
-        .getOption("spark.graft.graph.driverMaxTriangles")
-        .map(_.toLong).getOrElse(30000000L)
-      ktrussPeelDriver(g.get, k, rounds, maxTris) match {
+      // twin additionally caps enumerated triangles and falls through
+      // to the spilling distributed peel past the cap
+      ktrussPeelDriver(g.get, k, rounds, DriverGate.GraphTriangles) match {
         case Some(buf) =>
           val spark = f.spark
           import spark.implicits._
@@ -957,30 +932,16 @@ object GraphOps {
         case None => // triangle cap crossed — distributed peel below
       }
     }
-    // Per-round checkpoints are SIZE-GATED between the two materialization
-    // modes (the r13/r14 adjudication): AQE-off (partitioning-preserving,
-    // fixed partition count) only once the round's edge table is large
-    // enough that the preserved layout retires real re-exchanges; below
-    // the gate the round tables keep AQE, whose partition coalescing
-    // dominates on tiny tables (the dedupClusters CC-pair pathology —
-    // fixed 32-partition rounds on a 133k-edge sf0.1 graph measured
-    // 2.0x the plain-checkpoint floor, while the 1.33M-edge sf1 graph
-    // runs 2.1x FASTER with partitioning kept). The gate rides the
-    // `ne` count each round already pays for the trajectory row.
-    val aqeOffMinRows = f.spark.conf
-      .getOption("spark.graft.graph.roundCkAqeOffMinRows").map(_.toLong).getOrElse(500000L)
-    // THREE jobs per round, not six (the r14 adjudication — at sf0.1
-    // the peel was scheduling-bound, ~6 tiny jobs x 3 rounds):
+    // TWO checkpoints per round (at sf0.1 the peel is
+    // scheduling-bound, so every job a round saves counts):
     //  1. materialize eSup = edges LEFT JOIN their support rollup —
     //     ONE table carrying both the survivor set (filter sup >= k−2,
     //     a free projection over the checkpoint) and the trajectory
-    //     inputs, where the old shape materialized sup and the
-    //     filtered e separately;
-    //  2. one fused 1-row aggregate: Σsup (= 3Δ, n_triangles) and the
-    //     survivor count in the same pass — and that count IS the next
+    //     inputs, with Σsup (= 3Δ, n_triangles) and the survivor count
+    //     observed by the same job — and that count IS the next
     //     round's n_edges, so no round re-counts the table the
     //     previous round already counted;
-    //  3. materialize the alive-triple maintenance (unchanged).
+    //  2. materialize the alive-triple maintenance.
     // The LAST round skips both materializations: its trajectory row
     // needs only the fused aggregate, evaluated in one unmaterialized
     // pass. At scale the fused table is strictly cheaper too: one
@@ -990,8 +951,6 @@ object GraphOps {
     var ne = e.count()
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
     for (r <- 1 to rounds) {
-      def ckRound(df: DataFrame): DataFrame =
-        if (ne >= aqeOffMinRows) df.ckKeepPartitioning else df.localCheckpoint()
       val sup = alive
         .select(explode(array(
           struct(col("ta").as("ea"), col("tb").as("eb")),
@@ -1001,22 +960,23 @@ object GraphOps {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
       val eSup0 = e.join(sup, Seq("a", "b"), "left")
         .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
-      val eSup = if (r < rounds) ckRound(eSup0) else eSup0
-      val st = eSup.agg(
-        coalesce(sum(col("sup")), lit(0L)).cast("bigint").as("s"),
-        count(when(col("sup") >= (k - 2).toLong, 1)).as("kept")).collect()(0)
+      val stats = Seq(coalesce(sum(col("sup")), lit(0L)).cast("bigint").as("s"),
+        count(when(col("sup") >= (k - 2).toLong, 1)).as("kept"))
+      val (eSup, st) =
+        if (r < rounds) GraftPins.ck(eSup0, keepLayout = ne >= RoundCkAqeOffMinRows)(stats: _*)
+        else (eSup0, eSup0.agg(stats.head, stats.tail: _*).collect()(0))
       val (nTri, nKept) = (st.getLong(0) / 3, st.getLong(1))
       buf += ((r, ne, nTri, ne - nKept))
       if (r < rounds) {
         e = eSup.filter(col("sup") >= (k - 2).toLong).select(col("a"), col("b"))
         ne = nKept
-        alive = ckRound(alive
+        alive = GraftPins.ck(alive
           .join(e.select(col("a").as("ta"), col("b").as("tb")).hint("shuffle_hash"),
             Seq("ta", "tb"), "left_semi")
           .join(e.select(col("a").as("ta"), col("b").as("tc")).hint("shuffle_hash"),
             Seq("ta", "tc"), "left_semi")
           .join(e.select(col("a").as("tb"), col("b").as("tc")).hint("shuffle_hash"),
-            Seq("tb", "tc"), "left_semi"))
+            Seq("tb", "tc"), "left_semi"), keepLayout = ne >= RoundCkAqeOffMinRows)()._1
       }
     }
     val spark = f.spark

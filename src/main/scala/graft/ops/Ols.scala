@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** In-engine closed-form model fitting: ordinary least squares with two
   * regressors, solved by the normal equations — the "calibrate a cheap
@@ -89,15 +90,17 @@ object Ols {
       .localCheckpoint() // read three times: fit, residuals, coverage
     val fit = fit2(keyed.filter(!col("_cal")),
       col("_y"), col("_x1"), col("_x2"))
-    val resid = keyed.crossJoin(broadcast(
+    // checkpointed for the calibration rank + train coverage; its job
+    // observes the calibration size
+    val (resid, cal) = GraftPins.ck(keyed.crossJoin(broadcast(
         fit.select(col("n_rows").as("_ntr"), col("b0"), col("b1"), col("b2"))))
       .select(col("_id"), col("_cal"), col("_ntr"),
         abs(col("_y").cast("double") - (col("b0")
           + col("b1") * col("_x1").cast("double")
-          + col("b2") * col("_x2").cast("double"))).as("_resid"))
-      .localCheckpoint() // calibration rank + train coverage
+          + col("b2") * col("_x2").cast("double"))).as("_resid")))(
+      count(when(col("_cal"), 1)).as("n_cal"))
     val calR = resid.filter(col("_cal")).select(col("_id"), col("_resid"))
-    val nCal = calR.count() // driver scalar: calibration size only
+    val nCal = cal.getLong(0)
     val qRank = math.max(1L, math.min(nCal, math.ceil(q * (nCal + 1)).toLong))
     val qHat = Relational.globalRank(calR, Seq(col("_resid"), col("_id")), "_r")
       .filter(col("_r") === qRank).select(col("_resid").as("_q"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Fixed-point PageRank — iterative link analysis over an edge table
   * (source ranking for crawl frontiers and per-domain quality priors in
@@ -27,8 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB) — the labelPropagation broadcast-round
   * discipline applied to rank flow:
-  *  - BROADCAST rounds (node table ≤ `spark.graft.pagerank
-  *    .broadcastNodesMax`, default 4M — a few-hundred-MB ceiling):
+  *  - BROADCAST rounds (node table ≤ [[DriverGate.BroadcastNodes]], a
+  *    few-hundred-MB ceiling):
   *    the node-sized (src, contribution) vector is broadcast onto the
   *    _dst-partitioned checkpointed edge table; the contribution
   *    rollup groups on _dst, which IS the checkpoint's partition key,
@@ -41,9 +42,10 @@ import org.apache.spark.sql.functions._
   *    — no exchange on either), and the _dst rollup pays the round's
   *    ONE data-sized exchange (map-side combined).
   * Both layouts are decided once at graph build (the node count is
-  * already a build scalar); all build tables and per-round rank tables
-  * are checkpointed AQE-OFF (GraftPins.withAqeOff) so their
-  * partitioning survives into the LogicalRDD — a checkpoint
+  * observed by the node table's own checkpoint job); all build tables
+  * and per-round rank tables are checkpointed AQE-OFF
+  * (`GraftPins.ck(keepLayout = true)`) so their partitioning survives
+  * into the LogicalRDD — a checkpoint
   * materialized under AQE records UnknownPartitioning and every
   * downstream consumer silently re-exchanges (the r13 face probe).
   * Per-round rank checkpoints also keep plan depth O(1) and make the
@@ -54,17 +56,12 @@ object PageRankOp {
 
   val Unit12: Long = 1000000000000L // 1.0 in 1e-12 fixed-point units
 
-  /** Checkpoint preserving the dataset's physical partitioning
-    * (AQE-off materialization — see [[org.apache.spark.sql.graftext
-    * .GraftPins.withAqeOff]]). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftext.GraftPins.withAqeOff(df.sparkSession)(
-      df.localCheckpoint())
-
   /** The materialized graph tables every iteration reads (see
     * [[pageRank]]'s checkpoint rationale) plus the derived scalars.
     * `e` is partitioned on `_dst` when `broadcastRounds` (the rollup
-    * key), on `_src` otherwise (the contribution-join key).
+    * key), on `_src` otherwise (the contribution-join key). `nodes`
+    * carries each node's out-degree `_deg` (NULL: dangling), and
+    * `nDangling` counts the NULLs.
     *
     * `tiny` (node count ≤ [[DriverGate.PageRankNodes]] AND edge
     * count ≤ [[DriverGate.PageRankEdges]]) marks graphs where the
@@ -77,9 +74,8 @@ object PageRankOp {
     * (byte-identical — [[step]]'s integer ops are order-free;
     * spec-pinned), ~10 → 4 jobs; graphs over the gate ride the
     * broadcast/shuffle round engine. */
-  private[ops] case class Graph(e: DataFrame, nodes: DataFrame, deg: DataFrame,
-                                nN: Long, teleport: Long, broadcastRounds: Boolean,
-                                tiny: Boolean) {
+  private[ops] case class Graph(e: DataFrame, nodes: DataFrame, nN: Long, nDangling: Long,
+                                teleport: Long, broadcastRounds: Boolean, tiny: Boolean) {
     /** Driver-side edge/node arrays for the tiny path, collected once
       * per Graph (gate-bounded ≈32 MB): a PreparedGraph shared across
       * queries pays the collect once instead of per call. */
@@ -90,7 +86,7 @@ object PageRankOp {
 
   /** Prebuilt, checkpointed PageRank graph for cross-query reuse (the
     * shared-face discipline, r14 ND-tier precedent): [[prepare]] pays
-    * the edge/node/degree checkpoints (and, under the tiny gate, the
+    * the edge/node checkpoints (and, under the tiny gate, the
     * driver collect) once; every [[pageRank]]/[[personalizedPageRank]]
     * call on the handle runs only its rounds. Results are identical to
     * the edge-DataFrame entry points by construction — the same
@@ -98,9 +94,8 @@ object PageRankOp {
   final class PreparedGraph private[ops] (private[ops] val g: Graph) {
     /** Unpin + unpersist the handle's checkpointed tables. */
     def release(): Unit = {
-      org.apache.spark.sql.graftext.GraftPins.unpin(g.e)
-      org.apache.spark.sql.graftext.GraftPins.unpin(g.nodes)
-      org.apache.spark.sql.graftext.GraftPins.unpin(g.deg)
+      GraftPins.unpin(g.e)
+      GraftPins.unpin(g.nodes)
     }
   }
 
@@ -111,16 +106,18 @@ object PageRankOp {
               pinned: Boolean = false): PreparedGraph = {
     val g = buildGraph(edges, src, dst)
     if (pinned) {
-      org.apache.spark.sql.graftext.GraftPins.pin(g.e)
-      org.apache.spark.sql.graftext.GraftPins.pin(g.nodes)
-      org.apache.spark.sql.graftext.GraftPins.pin(g.deg)
+      GraftPins.pin(g.e)
+      GraftPins.pin(g.nodes)
     }
     new PreparedGraph(g)
   }
 
-  private def buildGraph(edges: DataFrame, src: String, dst: String): Graph = {
-    // Materialize the edge list, node set, and out-degree table ONCE:
-    // every iteration reads all three, and without the checkpoint
+  /** `broadcastNodes` is the broadcast-round node limit (specs reach
+    * the shuffle rounds with 0). */
+  private[ops] def buildGraph(edges: DataFrame, src: String, dst: String,
+                              broadcastNodes: Long = DriverGate.BroadcastNodes): Graph = {
+    // Materialize the edge list and the node set with its out-degrees
+    // ONCE: every iteration reads both, and without the checkpoint
     // Catalyst re-derives the (possibly expensive) upstream edge plan
     // per reference — measured 8.8s → ~2s at sf0.1 on the purchase
     // graph, whose edge build is itself a large join. Same single-pass
@@ -128,36 +125,34 @@ object PageRankOp {
     // with preemptible executors would use reliable checkpoints exactly
     // as Dedup.dedupClusters documents.
     val spark = edges.sparkSession
-    val broadcastMax = spark.conf
-      .getOption("spark.graft.pagerank.broadcastNodesMax").map(_.toLong)
-      .getOrElse(4000000L)
     // first materialization is _dst-partitioned — the broadcast-round
     // layout, and the common case; the rare huge-graph path pays one
-    // extra repartition below (amortized over every round)
-    val e0 = ck(edges
+    // extra repartition below (amortized over every round). The counts
+    // are observed by their table's own checkpoint job.
+    val (e0, eSt) = GraftPins.ck(edges
       .select(col(src).cast("long").as("_src"), col(dst).cast("long").as("_dst"))
-      .repartition(col("_dst")))
-    val nodes = ck(e0.select(col("_src").as("node"))
-      .union(e0.select(col("_dst").as("node"))).distinct())
-    val nN: Long = nodes.count() // driver scalar: node count only
-    // the edge-count job (cheap — e0 is checkpointed) is only paid by
-    // tiny-gate CANDIDATES; big graphs never see it
+      .repartition(col("_dst")), keepLayout = true)(count(lit(1)).as("n"))
+    // the out-degree joins co-partitioned (both sides node-keyed); a
+    // node without out-edges (or the NULL node) keeps _deg NULL
+    val deg = e0.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
+    val (nodes, nSt) = GraftPins.ck(e0.select(col("_src").as("node"))
+      .union(e0.select(col("_dst").as("node"))).distinct()
+      .join(deg.hint("shuffle_hash"), col("node") === col("_src"), "left")
+      .select(col("node"), col("_deg")), keepLayout = true)(
+      count(lit(1)).as("n"), count(when(col("_deg").isNull, 1)).as("dangling"))
+    val nN: Long = nSt.getLong(0)
     val tiny = DriverGate.admits(spark, "pagerank_nodes", DriverGate.PageRankNodes, nN) &&
-      DriverGate.admits(spark, "pagerank_edges", DriverGate.PageRankEdges, e0.count())
-    // tiny graphs never read the degree table as a DataFrame (the
-    // driver derives degrees from the collected edges)
-    val degRaw = e0.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
-    val deg = if (tiny) degRaw else ck(degRaw)
-    val broadcastRounds = !tiny && nN <= broadcastMax
+      DriverGate.admits(spark, "pagerank_edges", DriverGate.PageRankEdges, eSt.getLong(0))
+    val broadcastRounds = !tiny && nN <= broadcastNodes
     val e =
       if (broadcastRounds || tiny) e0
       else {
-        val r = ck(e0.repartition(col("_src")))
+        val r = GraftPins.ck(e0.repartition(col("_src")), keepLayout = true)()._1
         // e0's blocks are dead once the relayout is materialized
-        org.apache.spark.sql.graftext.GraftPins.unpin(e0)
+        GraftPins.unpin(e0)
         r
       }
-    Graph(e, nodes, deg, nN, (Unit12 - Unit12 * 85L / 100L) / nN, broadcastRounds,
+    Graph(e, nodes, nN, nSt.getLong(1), (Unit12 - Unit12 * 85L / 100L) / nN, broadcastRounds,
       tiny)
   }
 
@@ -207,52 +202,48 @@ object PageRankOp {
     nodeIds.map(n => (n, rank.get(n))).toSeq.toDF("node", "rank_u")
   }
 
-  /** One round's shared inputs: the _dst-keyed contribution rollup and
-    * the 1-row dangling-mass aggregate, planned per the graph's layout
-    * (scaladoc above). `ranks` must be node-partitioned — round-0 ranks
-    * project off the checkpointed node table and every later round is a
-    * [[ck]] of a node-side join, so the invariant holds by
-    * construction. */
-  private def roundInputs(g: Graph, ranks: DataFrame): (DataFrame, DataFrame) = {
-    // co-partitioned left join (ranks node-keyed, deg _src-keyed):
-    // no exchange on either side
-    val rd = ranks.join(g.deg.hint("shuffle_hash"),
-      ranks("node") === g.deg("_src"), "left")
-    val contrib = rd.filter(col("_deg").isNotNull)
+  /** One round's _dst-keyed contribution rollup, planned per the
+    * graph's layout (scaladoc above). `ranks` must be node-partitioned
+    * and carry `_deg` — round-0 ranks project off the checkpointed node
+    * table and every later round is a layout-keeping checkpoint of a
+    * node-side join, so both hold by construction. */
+  private def contribs(g: Graph, ranks: DataFrame): DataFrame = {
+    val contrib = ranks.filter(col("_deg").isNotNull)
       .select(col("node").as("_csrc"), expr("rank_u DIV _deg").as("_c"))
-    val contribs =
-      if (g.broadcastRounds)
-        // node-sized broadcast onto the _dst-partitioned edges; the
-        // rollup rides the checkpoint's partitioning: zero exchanges
-        g.e.join(broadcast(contrib), col("_src") === col("_csrc"))
-          .groupBy(col("_dst")).agg(sum(col("_c")).as("_s"))
-      else
-        // co-partitioned contribution join; the _dst rollup is the
-        // round's one data-sized exchange (map-side combined)
-        contrib.hint("shuffle_hash")
-          .join(g.e, col("_csrc") === col("_src"))
-          .groupBy(col("_dst")).agg(sum(col("_c")).as("_s"))
-    val dangling = rd.filter(col("_deg").isNull)
-      .agg(coalesce(sum(col("rank_u")), lit(0L)).as("_dm"))
-    (contribs, dangling)
+    if (g.broadcastRounds)
+      // node-sized broadcast onto the _dst-partitioned edges; the
+      // rollup rides the checkpoint's partitioning: zero exchanges
+      g.e.join(broadcast(contrib), col("_src") === col("_csrc"))
+        .groupBy(col("_dst")).agg(sum(col("_c")).as("_s"))
+    else
+      // co-partitioned contribution join; the _dst rollup is the
+      // round's one data-sized exchange (map-side combined)
+      contrib.hint("shuffle_hash")
+        .join(g.e, col("_csrc") === col("_src"))
+        .groupBy(col("_dst")).agg(sum(col("_c")).as("_s"))
   }
 
+  /** The rank mass on dangling nodes (`_deg` NULL), which the next
+    * round redistributes: observed by the checkpoint that writes the
+    * ranks, so no round runs a job of its own for it. */
+  private def danglingMass =
+    coalesce(sum(when(col("_deg").isNull, col("rank_u"))), lit(0L)).as("_dm")
+
   /** One synchronous PageRank step: rank-weighted contributions along
-    * edges, dangling mass redistributed uniformly, damped at 0.85 —
-    * all in 1e-12 fixed point. Shared verbatim by the fixed-iteration
-    * and iterate-to-convergence faces, so their arithmetic can't drift.
-    * The final join is co-partitioned (nodes node-keyed, rollup
-    * _dst-keyed): no exchange. */
-  private def step(g: Graph, ranks: DataFrame): DataFrame = {
-    val (contribs, dangling) = roundInputs(g, ranks)
+    * edges, the previous round's dangling mass `dm` redistributed
+    * uniformly, damped at 0.85 — all in 1e-12 fixed point. Shared
+    * verbatim by the fixed-iteration and iterate-to-convergence faces,
+    * so their arithmetic can't drift. The final join is co-partitioned
+    * (nodes node-keyed, rollup _dst-keyed): no exchange. */
+  private def step(g: Graph, ranks: DataFrame, dm: Long): DataFrame = {
+    val c = contribs(g, ranks)
     g.nodes
-      .join(contribs.hint("shuffle_hash"),
-        g.nodes("node") === contribs("_dst"), "left")
-      .crossJoin(dangling)
+      .join(c.hint("shuffle_hash"), g.nodes("node") === c("_dst"), "left")
       .select(col("node"),
         (lit(g.teleport) +
-          expr(s"((coalesce(_s, 0L) + _dm DIV ${g.nN}) * 85) DIV 100").cast("long"))
-          .as("rank_u"))
+          expr(s"((coalesce(_s, 0L) + ${dm}L DIV ${g.nN}) * 85) DIV 100").cast("long"))
+          .as("rank_u"),
+        col("_deg"))
   }
 
   /** PageRank over `edges` (must be distinct (src, dst) pairs; node ids
@@ -269,13 +260,18 @@ object PageRankOp {
   private def pageRankOn(g: Graph, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters must be in [1,10], got $iters")
     if (g.tiny) return tinyRanks(g, iters, seeds = Set.empty, nS = 0L)
-    var ranks = g.nodes.select(col("node"), lit(Unit12 / g.nN).as("rank_u"))
+    var ranks = g.nodes.select(col("node"), lit(Unit12 / g.nN).as("rank_u"), col("_deg"))
+    var dm = g.nDangling * (Unit12 / g.nN)
     // per-round checkpoint: keeps the node partitioning flowing into
     // the next round's co-partitioned joins, bounds plan depth, and
     // (broadcast rounds) keeps the broadcast collection shallow —
     // without it round r's broadcast would re-execute rounds 1..r−1
-    for (_ <- 1 to iters) ranks = ck(step(g, ranks))
-    ranks
+    for (_ <- 1 to iters) {
+      val (next, m) = GraftPins.ck(step(g, ranks, dm), keepLayout = true)(danglingMass)
+      ranks = next
+      dm = m.getLong(0)
+    }
+    ranks.select(col("node"), col("rank_u"))
   }
 
   /** Personalized PageRank (Page et al.'s biased-teleport variant; the
@@ -294,7 +290,7 @@ object PageRankOp {
     * flag before the checkpoint; per round the same broadcast/shuffle
     * layouts apply, with the rank update reading the seed-flagged node
     * table (node-partitioned, so still co-partitioned with the
-    * rollup); |S| is a driver scalar like N. */
+    * rollup); |S|, like N, is observed by its table's checkpoint job. */
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
                            seeds: DataFrame, iters: Int): DataFrame =
     personalizedPageRankOn(buildGraph(edges, src, dst), seeds, iters)
@@ -310,12 +306,13 @@ object PageRankOp {
     require(iters >= 1 && iters <= 10, s"iters must be in [1,10], got $iters")
     val seedCol = seeds.columns.head
     // materialize the (tiny) seed set once: its upstream may be an
-    // edge-sized derivation, and it is read twice below (the count
-    // scalar + the node-flag join) — without the checkpoint that
-    // upstream runs twice (the same re-derivation trap the edge
-    // checkpoint in buildGraph closes)
-    val s = ck(seeds.select(col(seedCol).cast("long").as("node")).distinct())
-    val nS: Long = s.count() // driver scalar: seed count
+    // edge-sized derivation, and the node-flag join reads it again —
+    // without the checkpoint that upstream runs twice (the same
+    // re-derivation trap the edge checkpoint in buildGraph closes);
+    // the seed count is observed by the checkpoint's own job
+    val (s, sSt) = GraftPins.ck(seeds.select(col(seedCol).cast("long").as("node")).distinct(),
+      keepLayout = true)(count(lit(1)).as("n"))
+    val nS: Long = sSt.getLong(0)
     require(nS > 0, "personalizedPageRank: seed set is empty")
     // the tiny driver path needs the seed SET; only collect it when the
     // graph is under the gate AND the set itself is gate-sized (a huge
@@ -323,24 +320,28 @@ object PageRankOp {
     if (g.tiny && nS <= 10000L)
       return tinyRanks(g, iters, seeds = s.collect().map(_.getLong(0)).toSet, nS = nS)
     val teleportS: Long = (Unit12 - Unit12 * 85L / 100L) / nS
-    // node-sized seed flag, materialized once like the degree table;
-    // the join is co-partitioned (both sides node-keyed)
-    val nodes = ck(g.nodes
+    // node-sized seed flag, materialized once beside the out-degree;
+    // the join is co-partitioned (both sides node-keyed). Its job
+    // observes the dangling seeds, which hold round 0's dangling mass.
+    val (nodes, nSt) = GraftPins.ck(g.nodes
       .join(s.withColumn("_seed", lit(true)).hint("shuffle_hash"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_seed"), lit(false)).as("_seed")))
+      .select(col("node"), coalesce(col("_seed"), lit(false)).as("_seed"), col("_deg")),
+      keepLayout = true)(count(when(col("_seed") && col("_deg").isNull, 1)).as("n"))
     var ranks = nodes.select(col("node"),
-      when(col("_seed"), lit(Unit12 / nS)).otherwise(lit(0L)).as("rank_u"))
+      when(col("_seed"), lit(Unit12 / nS)).otherwise(lit(0L)).as("rank_u"), col("_deg"))
+    var dm = nSt.getLong(0) * (Unit12 / nS)
     for (_ <- 1 to iters) {
-      val (contribs, dangling) = roundInputs(g, ranks)
-      ranks = ck(nodes
-        .join(contribs.hint("shuffle_hash"),
-          nodes("node") === contribs("_dst"), "left")
-        .crossJoin(dangling)
+      val c = contribs(g, ranks)
+      val (next, m) = GraftPins.ck(nodes
+        .join(c.hint("shuffle_hash"), nodes("node") === c("_dst"), "left")
         .select(col("node"),
           (when(col("_seed"), lit(teleportS)).otherwise(lit(0L)) +
-            expr(s"((coalesce(_s, 0L) + (CASE WHEN _seed THEN _dm DIV ${nS}L ELSE 0L END)) * 85) DIV 100")
+            expr(s"((coalesce(_s, 0L) + (CASE WHEN _seed THEN ${dm}L DIV ${nS}L ELSE 0L END)) * 85) DIV 100")
               .cast("long"))
-            .as("rank_u")))
+            .as("rank_u"),
+          col("_deg")), keepLayout = true)(danglingMass)
+      ranks = next
+      dm = m.getLong(0)
     }
     ranks.select(col("node"), col("rank_u"))
   }
@@ -355,14 +356,13 @@ object PageRankOp {
     *  - the rank table is checkpointed EVERY round (as the fixed loop
     *    now also does), so plan depth stays constant at any iteration
     *    count;
-    *  - the L1 delta is a co-partitioned join of two already-
-    *    checkpointed node-keyed rank tables — one node-sized pass per
-    *    round whose only exchange is the 1-row aggregate. (The
-    *    previous accumulator-fused mapPartitions counter saved that
-    *    pass but erased the rank table's partitioning metadata —
-    *    SerializeFromObject reports unknown partitioning — which under
-    *    the co-partitioned round plan would re-introduce per-round
-    *    data-sized exchanges costing far more than the scan saves.)
+    *  - the round's |rank − prev| rides its rank checkpoint as a
+    *    column (a co-partitioned, exchange-free join against the
+    *    previous node-keyed checkpoint), and the L1 delta is observed
+    *    by that same checkpoint job ([[GraftPins.ck]]) — no separate
+    *    convergence pass; unlike a mapPartitions counter, the
+    *    observation keeps the rank table's partitioning metadata, so
+    *    the co-partitioned round plan stays exchange-free.
     *
     * Arithmetic per round is [[step]] — byte-identical to the fixed
     * API, so `pageRankConverged(...)._1` equals `pageRank(...)` run for
@@ -378,24 +378,28 @@ object PageRankOp {
     require(maxIters >= 1 && maxIters <= 1000,
       s"maxIters must be in [1,1000], got $maxIters")
     val g = buildGraph(edges, src, dst)
-    var ranks = ck(g.nodes.select(col("node"), lit(Unit12 / g.nN).as("rank_u")))
+    var ranks = GraftPins.ck(g.nodes.select(col("node"), lit(Unit12 / g.nN).as("rank_u"),
+      col("_deg")), keepLayout = true)()._1
+    var dm = g.nDangling * (Unit12 / g.nN)
     var iters = 0
     var converged = false
     while (!converged && iters < maxIters) {
-      val next = ck(step(g, ranks))
-      // both sides are node-keyed checkpoints: the join is
-      // exchange-free; only the 1-row sum exchanges
-      val delta = next
-        .join(ranks.withColumnRenamed("rank_u", "_prev").hint("shuffle_hash"), "node")
-        .agg(coalesce(sum(abs(col("rank_u") - col("_prev"))), lit(0L)).as("_d"))
-        .collect()(0).getLong(0)
-      ranks = next
+      // the step and the previous ranks are both node-keyed: the join
+      // is exchange-free (left, so every node of the step survives)
+      val (next, m) = GraftPins.ck(step(g, ranks, dm)
+        .join(ranks.select(col("node"), col("rank_u").as("_prev")).hint("shuffle_hash"),
+          Seq("node"), "left")
+        .select(col("node"), col("rank_u"), col("_deg"),
+          abs(col("rank_u") - col("_prev")).as("_d")),
+        keepLayout = true)(danglingMass, coalesce(sum(col("_d")), lit(0L)).as("_d"))
+      ranks = next.select(col("node"), col("rank_u"), col("_deg"))
+      dm = m.getLong(0)
       iters += 1
-      converged = delta <= epsUnits
+      converged = m.getLong(1) <= epsUnits
     }
     if (!converged) throw new IllegalStateException(
       s"pageRankConverged: L1 delta still above $epsUnits after $maxIters rounds; " +
         "raise maxIters or epsUnits")
-    (ranks, iters)
+    (ranks.select(col("node"), col("rank_u")), iters)
   }
 }

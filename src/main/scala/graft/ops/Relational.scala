@@ -3,6 +3,7 @@ package graft.ops
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Relational operator catalog over the TPC-H-ish tables.
   *
@@ -281,8 +282,8 @@ object Relational {
     * subtotal collect, output checkpoint — each executing the input
     * once more), which on a grid-sized input is pure scheduling (the
     * r15 spearman probe: 3 prefixSums ≈ half the row's fixed
-    * overhead). The tiny path checkpoints the input once, counts it
-    * (cheap on the checkpoint), and returns a LAZY single-partition
+    * overhead). The tiny path checkpoints the input once (the same job
+    * observes its row count), and returns a LAZY single-partition
     * bounded window — gate-sized by construction, zero further jobs,
     * and the identical exact integer prefix. */
   def prefixSum(df: DataFrame, orderCols: Seq[Column], valCol: String,
@@ -292,10 +293,10 @@ object Relational {
       s"prefixSum: input already carries '$out' or '_pid'")
     val spark = df.sparkSession
     // one materialization either way: the big path's range sampling and
-    // subtotal collect would re-execute the input; the tiny probe
-    // needs its count
-    val in = df.localCheckpoint()
-    if (DriverGate.admits(spark, "prefixSum", DriverGate.PrefixSumRows, in.count())) {
+    // subtotal collect would re-execute the input; the gate reads the
+    // row count the checkpoint job observes
+    val (in, st) = GraftPins.ck(df)(count(lit(1)).as("n"))
+    if (DriverGate.admits(spark, "prefixSum", DriverGate.PrefixSumRows, st.getLong(0))) {
       // pmod(…, 1) = constant partition key: the repo's bounded
       // single-partition window idiom (no "no partition" plan warning)
       val wAll = Window.partitionBy(pmod(col(valCol).cast("long"), lit(1)))

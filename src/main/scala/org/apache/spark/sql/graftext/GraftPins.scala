@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 
 /** Registry of DURABLE checkpointed datasets — shared faces a workload
   * builds once per dataset and reuses across queries (the
@@ -55,6 +55,33 @@ object GraftPins {
   def sessionUuid(s: org.apache.spark.sql.SparkSession): Option[String] = s match {
     case c: org.apache.spark.sql.classic.SparkSession => Some(c.sessionUUID)
     case _ => None
+  }
+
+  /** The one checkpoint primitive: eagerly checkpoint `df` and return
+    * the checkpoint with the named aggregates `metrics`, observed by
+    * the SAME job that writes it — a loop round's convergence scalar
+    * (or a build's row count) then costs no job of its own, where a
+    * `count()`/`agg(...).collect()` on the fresh checkpoint schedules
+    * one more (two under AQE). The returned row holds the metrics in
+    * order (`Row.empty` when none are asked); aggregates see the same
+    * rows a separate `agg` would, empty inputs included (`count` 0,
+    * `sum` NULL). DISTINCT aggregates are not observable (Spark
+    * rejects them).
+    *
+    * `keepLayout` materializes AQE-off ([[withAqeOff]]) so the
+    * checkpoint keeps the physical partitioning downstream joins ride;
+    * `reliable` writes a reliable `checkpoint()` into the context's
+    * checkpoint dir instead of a `localCheckpoint()`. A fresh
+    * `Observation` per call (one can fire once), read only after the
+    * eager checkpoint returned: a failed job throws here and never
+    * leaves the read waiting. */
+  def ck(df: DataFrame, keepLayout: Boolean = false, reliable: Boolean = false)(
+      metrics: Column*): (DataFrame, Row) = {
+    val obs = if (metrics.isEmpty) None else Some(new Observation())
+    val in = obs.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*))
+    def write = if (reliable) in.checkpoint() else in.localCheckpoint()
+    val c = if (keepLayout) withAqeOff(df.sparkSession)(write) else write
+    (c, obs.fold(Row.empty)(_.getRow))
   }
 
   /** Per-session reentrancy state for [[withAqeOff]]: only the

@@ -609,6 +609,27 @@ class EventAnalyticsSpec extends SparkSpec {
       ("b", "a", "b", 1L, 1L, 0.333333)), out.mkString(","))
   }
 
+  test("seqTriples: the session total counts NULL-ts rows and a NULL user like distinct (user, session)") {
+    import spark.implicits._
+    // user 1: two NULL-ts rows (each opens a session: its lag is NULL),
+    // then a b c — three sessions; NULL user: d | (gap) e — two; user 2:
+    // one. Distinct (user_id, session_idx) = 6 = Σ_new, the observed total
+    val ev = Seq(
+      (1L, Option.empty[String], Option(1L), "x"), (2L, None, Option(1L), "y"),
+      (3L, Option("2024-01-01 10:00:00"), Option(1L), "a"),
+      (4L, Option("2024-01-01 10:01:00"), Option(1L), "b"),
+      (5L, Option("2024-01-01 10:02:00"), Option(1L), "c"),
+      (6L, Option("2024-01-01 10:00:00"), Option.empty[Long], "d"),
+      (7L, Option("2024-01-01 15:00:00"), None, "e"),
+      (8L, Option("2024-01-01 10:00:00"), Option(2L), "f"))
+      .toDF("event_id", "ts_s", "user_id", "event_type")
+      .selectExpr("event_id", "cast(ts_s as timestamp) as ts", "user_id", "event_type")
+    val out = EventAnalytics.seqTriples(ev, gapSec = 1800L, k = 20)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getLong(4), r.getDouble(5)))
+    assert(out.toSeq == Seq(("a", "b", "c", 1L, 1L, 0.166667)), out.mkString(","))
+  }
+
   test("segmentedTrend: split at the level shift; per-side OLS lines by hand") {
     // counts: days 1-4 exactly (2,4,6,8) then days 5-8 all 20.
     // split argmax lands after day 4; left OLS: slope 2, intercept 0;

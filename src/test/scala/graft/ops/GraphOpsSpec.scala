@@ -60,31 +60,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(out == Map(5L -> 1L, 1L -> 5L, 2L -> 5L, 3L -> 5L))
   }
 
-  test("heavy-degree chunked closure returns identical triangle counts and truss trajectories") {
-    import spark.implicits._
-    // random graph with a deliberate hub (node 0 connected to all) so
-    // chunking actually splits an adjacency array at T=4
-    val rnd = new scala.util.Random(23)
-    val g = ((1L to 30L).map(v => (0L, v)) ++
-      Seq.fill(120)((rnd.nextInt(30) + 1L, rnd.nextInt(30) + 1L))).distinct
-    val df = g.toDF("src", "dst")
-    // force the distributed peel: the chunked-closure A/B pins the
-    // DISTRIBUTED triple enumeration, which the r15 driver gate would
-    // otherwise bypass on this tiny graph
-    spark.conf.set(DriverGate.ForceDistributed, "true")
-    try {
-      val base = rowSet(GraphOps.triangleStats(df))
-      val baseT = rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2))
-      spark.conf.set("spark.graft.graph.heavySplitDegree", "4")
-      try {
-        assert(rowSet(GraphOps.triangleStats(df)) == base,
-          "chunked closure must count identically (chunks partition the array)")
-        assert(rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2)) == baseT,
-          "chunked triple enumeration must explode each triangle exactly once")
-      } finally spark.conf.unset("spark.graft.graph.heavySplitDegree")
-    } finally spark.conf.unset(DriverGate.ForceDistributed)
-  }
-
   test("one shared GraphFace serves every operator with results identical to one-shot entries") {
     import spark.implicits._
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L))
@@ -254,13 +229,9 @@ class GraphOpsSpec extends SparkSpec {
         finally spark.conf.unset("spark.graft.lpa.frontierFraction")
       // shuffle dense path (node table "too big to broadcast")
       spark.conf.set("spark.graft.lpa.frontierFraction", "0")
-      spark.conf.set("spark.graft.lpa.broadcastNodesMax", "0")
       val denseShuffle =
-        try rowSet(GraphOps.labelPropagation(edges, iters = iters))
-        finally {
-          spark.conf.unset("spark.graft.lpa.frontierFraction")
-          spark.conf.unset("spark.graft.lpa.broadcastNodesMax")
-        }
+        try rowSet(GraphOps.labelPropagation(GraphOps.face(edges), iters, broadcastNodes = 0L))
+        finally spark.conf.unset("spark.graft.lpa.frontierFraction")
       val adaptive = rowSet(GraphOps.labelPropagation(edges, iters = iters))
       assert(frontier == dense, s"graph of ${g.size} edges, iters=$iters")
       assert(denseShuffle == dense,
@@ -347,15 +318,17 @@ class GraphOpsSpec extends SparkSpec {
       distributed(rowSet(GraphOps.ktrussPeel(sEdges, k = 3, rounds = 2))),
       "string-id ktrussPeel must match the distributed trajectory")
     // 2. triangle cap: the edge gate does not bound triangle count, so
-    //    a cap below the graph's triangle count must fall back to the
-    //    distributed peel with an identical trajectory
+    //    a cap below the graph's triangle count must make the driver
+    //    enumeration bail out (ktrussPeel then takes the distributed
+    //    peel), while the uncapped twin matches that distributed peel
     val k5tail = (for (a <- 1L to 5L; b <- 1L to 5L if a < b) yield (a, b)) :+ (5L, 9L)
     val k5df = k5tail.toDF("src", "dst")
+    val k5g = new GraphOps.DriverGraph(k5tail.toArray)
+    assert(GraphOps.ktrussPeelDriver(k5g, k = 4, rounds = 3, maxTriangles = 2L).isEmpty,
+      "a cap below the triangle count (10 in K5) must abandon the driver enumeration")
+    assert(GraphOps.ktrussPeelDriver(k5g, k = 4, rounds = 3,
+      maxTriangles = DriverGate.GraphTriangles).isDefined)
     val uncapped = rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3))
-    spark.conf.set("spark.graft.graph.driverMaxTriangles", "2")
-    try assert(rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3)) == uncapped,
-      "capped driver enumeration must fall back to an identical distributed peel")
-    finally spark.conf.unset("spark.graft.graph.driverMaxTriangles")
     assert(uncapped == distributed(rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3))))
     // 3. NULL seed: the distributed path keeps one inert (NULL, 0) row
     //    (NULL never equi-joins sym); the driver twin must mirror it

@@ -141,8 +141,8 @@ class PageRankOpSpec extends SparkSpec {
   test("plan: no cartesian beyond the scalar dangling cross join") {
     val p = PageRankOp.pageRank(graph.toDF("src", "dst"), "src", "dst", 2)
       .queryExecution.executedPlan.toString
-    // the dangling term is a 1-row aggregate; its cross join is benign.
-    // No nested-loop join may involve the edge or node tables directly.
+    // the dangling mass is a literal observed by the previous round's
+    // checkpoint, so no nested-loop join is left at all.
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -155,17 +155,16 @@ class PageRankOpSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     // force the shuffle layout (every graph over the broadcast ceiling;
     // tiny gate off too, else this graph would retake the driver path)
-    spark.conf.set("spark.graft.pagerank.broadcastNodesMax", "0")
     spark.conf.set(DriverGate.ForceDistributed, "true")
     try {
-      assert(PageRankOp.pageRank(df, "src", "dst", 3)
+      val shuffled = new PageRankOp.PreparedGraph(
+        PageRankOp.buildGraph(df, "src", "dst", broadcastNodes = 0L))
+      assert(!shuffled.g.broadcastRounds && !shuffled.g.tiny)
+      assert(PageRankOp.pageRank(shuffled, 3)
         .as[(Long, Long)].collect().toMap == basePr)
-      assert(PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
+      assert(PageRankOp.personalizedPageRank(shuffled, seeds, 3)
         .as[(Long, Long)].collect().toMap == basePpr)
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset(DriverGate.ForceDistributed)
-    }
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 
   test("tiny driver path equals the distributed rounds integer-for-integer") {
@@ -240,22 +239,21 @@ class PageRankOpSpec extends SparkSpec {
       val b = roundPlans(PageRankOp.pageRank(df, "src", "dst", 2))
       assert(b.nonEmpty)
       b.foreach { p =>
-        // the 1-row dangling aggregate's SinglePartition exchange is the
-        // only shuffle a broadcast round may plan
+        // the dangling mass is observed by the previous round's
+        // checkpoint: a broadcast round plans no shuffle at all
         assert(!p.contains("Exchange hashpartitioning"),
           "broadcast-path round must plan zero data-sized exchanges:\n" + p)
+        assert(!p.contains("Exchange SinglePartition") && !p.contains("NestedLoopJoin"),
+          "the dangling mass must not run as a per-round aggregate:\n" + p)
       }
-      spark.conf.set("spark.graft.pagerank.broadcastNodesMax", "0")
-      val s = roundPlans(PageRankOp.pageRank(df, "src", "dst", 2))
+      val s = roundPlans(PageRankOp.pageRank(new PageRankOp.PreparedGraph(
+        PageRankOp.buildGraph(df, "src", "dst", broadcastNodes = 0L)), 2))
       assert(s.nonEmpty)
       s.foreach { p =>
         val n = "Exchange hashpartitioning".r.findAllIn(p).length
         assert(n == 1,
           s"shuffle-path round must ride ONE data-sized exchange (the _dst rollup), saw $n:\n" + p)
       }
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset(DriverGate.ForceDistributed)
-    }
+    } finally spark.conf.unset(DriverGate.ForceDistributed)
   }
 }
