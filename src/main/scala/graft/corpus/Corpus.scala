@@ -80,11 +80,10 @@ object Corpus {
   def ngramNovelty(docs: DataFrame, w: Int = 4,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(w >= 1, s"ngramNovelty: w must be >= 1, got $w")
-    val withG = docs.select(col(idCol),
+    val withG = GraftPins.cut(docs.select(col(idCol),
       array_distinct(org.apache.spark.sql.graftext.VectorExpressions
         .md5WindowHashes60(TextAnalysis.tokens(col(textCol)), w)).as("_gs"))
-      .filter(size(col("_gs")) >= 1)
-      .localCheckpoint()
+      .filter(size(col("_gs")) >= 1))
     val novel = withG.select(col(idCol), explode(col("_gs")).as("_g"))
       .groupBy(col("_g"))
       .agg(count(lit(1)).as("_df"), min(col(idCol)).as("_owner"))
@@ -422,9 +421,10 @@ object Corpus {
     *   3. a narrow per-partition pass adds the broadcast offset to an
     *      in-partition running sum. No task ever sorts more than one
     *      partition's rows.
-    * The projection is persisted between pass 2 and 3 so both passes
-    * see the identical partitioning even if the input's own row order
-    * is nondeterministic (e.g. downstream of a shuffle); the running
+    * The range-partitioned projection is checkpointed between pass 2
+    * and 3 ([[graft.ops.Relational.rangeScan]]) so both passes see the
+    * identical partitioning even if the input's own row order is
+    * nondeterministic (e.g. downstream of a shuffle); the running
     * sum itself is exact integer arithmetic, so shard assignment is
     * reproducible anywhere. mapPartitions is justified here: Catalyst
     * has no narrow running-sum operator (SPARK windows always
@@ -437,41 +437,17 @@ object Corpus {
     import org.apache.spark.sql.types.LongType
     require(budgetTokens > 0, s"packShards: budgetTokens must be > 0, got $budgetTokens")
     val spark = docs.sparkSession
-    val nPart = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    // the partition id is BAKED INTO the cached rows (not read from
-    // TaskContext at run time): a downstream coalesce/repartition may
-    // collapse the mapPartitions stage into differently-numbered tasks,
-    // but the data-carried pid still names the range partition the row
-    // was materialized in, which is what the offsets are keyed by
-    // persist the narrow projection BEFORE range-partitioning: the
+    // checkpoint the narrow projection BEFORE range-partitioning: the
     // range sampler evaluates its child in full to draw bounds, so an
-    // unpersisted projection would pay the tokenize pass twice (the
+    // unmaterialized projection would pay the tokenize pass twice (the
     // sampling pass alone cost more than the whole r3 window plan);
-    // cached, tokenize runs once and the sampler + shuffle read ints
-    val proj = docs.select(col(idCol), col(strataCol),
-      size(TextAnalysis.tokens(col(textCol))).as("n_tokens"))
-      .persist()
-    val ranged = proj
-      .repartitionByRange(nPart, col(strataCol), col(idCol))
-      .sortWithinPartitions(col(strataCol), col(idCol))
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    // tiny: #partitions × #strata rows
-    val subs = ranged
-      .groupBy(col("_pid"), col(strataCol).as("_stratum"))
-      .agg(sum(coalesce(col("n_tokens"), lit(0))).as("_sub"))
-      .collect()
-      .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-    // ranged is materialized by the collect above; the projection cache
-    // has served both its readers (sampler + shuffle) and can go now
-    proj.unpersist(false)
-    val offsets: Map[(Int, Any), Long] = subs.groupBy(_._2).flatMap {
-      case (stratum, rows) =>
-        val inOrder = rows.sortBy(_._1)
-        val starts = inOrder.map(_._3).scanLeft(0L)(_ + _).init
-        inOrder.map(_._1).zip(starts).map { case (pid, off) => ((pid, stratum), off) }
-    }
+    // checkpointed, tokenize runs once and the sampler + shuffle read ints
+    val proj = GraftPins.cut(docs.select(col(idCol), col(strataCol),
+      size(TextAnalysis.tokens(col(textCol))).as("n_tokens")))
+    // per-(partition, stratum) token subtotals: #partitions × #strata rows
+    val (ranged, offsets, _) = graft.ops.Relational.rangeScan(proj,
+      Seq(col(strataCol), col(idCol)), sum(coalesce(col("n_tokens"), lit(0))), 0L, _ + _,
+      stratum = Some(col(strataCol)), numPartitions = numPartitions)
     val bcOffsets = spark.sparkContext.broadcast(offsets)
     val outSchema = ranged.schema
       .add("shard_id", LongType)
@@ -519,25 +495,12 @@ object Corpus {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
     require(seqLen > 0, s"packSequences: seqLen must be > 0, got $seqLen")
     val spark = docs.sparkSession
-    val nPart = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    // persist the narrow projection before range-partitioning — the
+    // checkpoint the narrow projection before range-partitioning — the
     // range sampler evaluates its child to draw bounds (see packShards)
-    val proj = docs.select(col(idCol),
-      size(TextAnalysis.tokens(col(textCol))).as("n_tokens"))
-      .persist()
-    val ranged = proj
-      .repartitionByRange(nPart, col(idCol))
-      .sortWithinPartitions(col(idCol))
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    val subs = ranged.groupBy(col("_pid"))
-      .agg(sum(coalesce(col("n_tokens"), lit(0))).as("_sub"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    proj.unpersist(false)
-    val inOrder = subs.sortBy(_._1)
-    val offsets = inOrder.map(_._1)
-      .zip(inOrder.map(_._2).scanLeft(0L)(_ + _).init).toMap
+    val proj = GraftPins.cut(docs.select(col(idCol),
+      size(TextAnalysis.tokens(col(textCol))).as("n_tokens")))
+    val (ranged, offsets, _) = graft.ops.Relational.rangeScan(proj, Seq(col(idCol)),
+      sum(coalesce(col("n_tokens"), lit(0))), 0L, _ + _, numPartitions = numPartitions)
     val bcOffsets = spark.sparkContext.broadcast(offsets)
     val outSchema = new StructType()
       .add(ranged.schema(idCol))
@@ -551,7 +514,7 @@ object Corpus {
         val p = r.getInt(2)
         if (first || p != pid) {
           pid = p; first = false
-          cum = bcOffsets.value.getOrElse(p, 0L)
+          cum = bcOffsets.value.getOrElse((p, null), 0L)
         }
         val n = if (r.isNullAt(1)) 0 else r.getInt(1)
         val gStart = cum
@@ -930,7 +893,7 @@ object Corpus {
   def cdcDedupStats(docs: DataFrame, avgChunk: Int = 16,
                     idCol: String = "doc_id", textCol: String = "text",
                     srcCol: String = "source"): DataFrame = {
-    val chunks = cdcChunks(docs, avgChunk, idCol, textCol).localCheckpoint()
+    val chunks = GraftPins.cut(cdcChunks(docs, avgChunk, idCol, textCol))
     val canon = chunks.groupBy(col("chunk_fp"))
       .agg(min(struct(col(idCol), col("chunk_idx"))).as("_c"))
     chunks.join(canon, "chunk_fp")
@@ -1165,13 +1128,12 @@ object Corpus {
     // hashes against the window hashes reproduces the (h1, h2) pairs
     // of the interpreted per-bigram struct form exactly
     val V = org.apache.spark.sql.graftext.VectorExpressions
-    val big = base.select(col(idCol),
+    val big = GraftPins.cut(base.select(col(idCol),
       explode(arrays_zip(
         slice(V.md5Hashes60(col("_toks")), lit(1), size(col("_toks")) - 1),
         V.md5WindowHashes60(col("_toks"), 2))).as("bg"))
       .select(col(idCol), col("bg").getField("0").as("h1"),
-        col("bg").getField("1").as("h2"))
-      .localCheckpoint()
+        col("bg").getField("1").as("h2")))
     val c2 = big.groupBy(col("h2")).agg(count(lit(1)).as("c2"))
     val c1 = big.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
     // V = distinct prefix-token count = c1's row count: a single exact
@@ -1221,14 +1183,13 @@ object Corpus {
     val base = docs.select(col(idCol), toks.as("_toks"))
       .filter(size(col("_toks")) >= 2)
     val V = org.apache.spark.sql.graftext.VectorExpressions
-    val big = base.select(col(idCol),
+    val big = GraftPins.cut(base.select(col(idCol),
       explode(arrays_zip(
         slice(V.md5Hashes60(col("_toks")), lit(1), size(col("_toks")) - 1),
         V.md5WindowHashes60(col("_toks"), 2),
         slice(V.md5Hashes60(col("_toks")), lit(2), size(col("_toks")) - 1))).as("bg"))
       .select(col(idCol), col("bg").getField("0").as("h1"),
-        col("bg").getField("1").as("h2"), col("bg").getField("2").as("hc"))
-      .localCheckpoint()
+        col("bg").getField("1").as("h2"), col("bg").getField("2").as("hc")))
     val c2 = big.groupBy(col("h2")).agg(count(lit(1)).as("c2"))
     val c1 = big.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
     // |bigram types|: one exact integer scalar, observed by the type
@@ -1507,13 +1468,13 @@ object Corpus {
     require(nMerges >= 1 && nMerges <= 100000, s"nMerges in [1,100000], got $nMerges")
     require(batch >= 1 && batch <= 256, s"batch in [1,256], got $batch")
     // weighted word dictionary, symbols pre-split: " a b c " per token
-    val dict = docs
+    // the only corpus-sized pass
+    val dict = GraftPins.cut(docs
       .select(explode(split(col(textCol), "\\s+")).as("tok"))
       .filter(length(col("tok")) >= 1)
       .groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .select(concat(lit(" "), regexp_replace(col("tok"), "(.)", "$1  ")).as("sp"),
-        col("n"))
-      .localCheckpoint() // the only corpus-sized pass
+        col("n")))
     var cur = dict
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var step = 0
@@ -1549,7 +1510,7 @@ object Corpus {
         }
         sinceCk += accepted.size
         // bound the stacked-replace lineage (see BpeCheckpointEvery)
-        if (sinceCk >= BpeCheckpointEvery) { cur = cur.localCheckpoint(); sinceCk = 0 }
+        if (sinceCk >= BpeCheckpointEvery) { cur = GraftPins.cut(cur); sinceCk = 0 }
         // a full candidate list that yields zero accepts cannot happen
         // (the top-1 pair is always accepted first), so progress is
         // guaranteed; a SHORT list means the dictionary is nearly
@@ -1632,8 +1593,8 @@ object Corpus {
     * allocates everything (NULL cap).
     *
     * Scale shape: one data pass to the per-source token grid; the sort
-    * window, boundary scan and broadcast cap all live on the
-    * sources-bounded grid.
+    * window and boundary scan live on the sources-bounded grid, whose
+    * checkpoint job observes the cap.
     *
     * Output: one row per `source` — `tokens`, `alloc`, `capped`. */
   def tokenWaterfill(docs: DataFrame, budget: Long): DataFrame = {
@@ -1642,19 +1603,20 @@ object Corpus {
     val t = docs.groupBy(col("source"))
       .agg(sum(graft.text.TextAnalysis.tokenCount(col("text"))).cast("long").as("tok"))
     val w = Window.orderBy(col("tok"), col("source")) // grid-sized: bounded by |sources|
-    val g = t
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // grid-sized, every row's candidate cap in the same window pass; the
+    // checkpoint job observes the boundary cap the allocation reads
+    val (g, cap) = GraftPins.ck(t
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("pre", sum(col("tok")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("ptok", coalesce(lag(col("tok"), 1).over(w), lit(0L)))
-      .crossJoin(broadcast(t.agg(count(lit(1)).cast("long").as("n"),
-        sum(col("tok")).cast("long").as("total"))))
-      .localCheckpoint() // grid-sized; serves the boundary scan and the allocation
-    val cap = g
-      .withColumn("cap", expr(s"($budget - (pre - tok)) div (n - rn + 1)"))
-      .where(col("total") > budget && col("cap") >= col("ptok") && col("cap") < col("tok"))
-      .select(col("cap"))
-    g.crossJoin(broadcast(cap.agg(min(col("cap")).as("cap"))))
+      .withColumn("n", count(lit(1)).over(all).cast("long"))
+      .withColumn("total", sum(col("tok")).over(all).cast("long"))
+      .withColumn("_cap", expr(s"($budget - (pre - tok)) div (n - rn + 1)")))(
+      min(when(col("total") > budget && col("_cap") >= col("ptok") &&
+        col("_cap") < col("tok"), col("_cap"))).as("cap"))
+    GraftPins.withScalars(g, cap)
       .select(col("source"), col("tok").as("tokens"),
         when(col("total") <= budget, col("tok"))
           .otherwise(least(col("tok"), col("cap"))).as("alloc"),
@@ -1748,11 +1710,11 @@ object Corpus {
     import org.apache.spark.sql.expressions.Window
     val V = org.apache.spark.sql.graftext.VectorExpressions
     val base = docs.select(TextAnalysis.tokens(col(textCol)).as("_toks"))
-    val vocab = base.select(explode(V.md5Hashes60(col("_toks"))).as("h"))
+    // node gate: joined twice (both edge endpoints)
+    val vocab = GraftPins.cut(base.select(explode(V.md5Hashes60(col("_toks"))).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= minCount)
-      .select(col("h"))
-      .localCheckpoint() // node gate: joined twice (both edge endpoints)
+      .select(col("h")))
     val big = base.filter(size(col("_toks")) >= 2)
       .select(explode(arrays_zip(
         slice(V.md5Hashes60(col("_toks")), lit(1), size(col("_toks")) - 1),
@@ -1791,8 +1753,8 @@ object Corpus {
     * globalRank), one map-side-combined rollup to the vocab-sized
     * first-occurrence table, then a P-way broadcast fan-out of that
     * table collapsing immediately to P rows — never a window over the
-    * stream, never a per-point rescan (globalRank's checkpoint serves
-    * both the total and the rollup).
+    * stream, never a per-point rescan (globalRank's subtotal collect
+    * counts the stream; its checkpoint serves the rollup).
     *
     * Output: one row per checkpoint — `point` (1..P), `n_tokens`
     * (prefix length), `vocab` (distinct types seen), `ttr` (6 dp). */
@@ -1804,12 +1766,11 @@ object Corpus {
     val spark = docs.sparkSession
     val stream = docs.select(col(idCol).as("_id"),
       posexplode(V.md5Hashes60(TextAnalysis.tokens(col(textCol)))).as(Seq("_pos", "_h")))
-    val ranked = graft.ops.Relational.globalRank(
+    // the rank's subtotal collect already counts the stream
+    val (ranked, t) = graft.ops.Relational.globalRankN(
       stream, Seq(col("_id"), col("_pos")), "gpos")
     val first = ranked.groupBy(col("_h")).agg(min(col("gpos")).as("f"))
-    val tot = ranked.agg(count(lit(1)).as("t"))
-    val pts = spark.range(1, nPoints + 1).select(col("id").as("p"))
-      .crossJoin(broadcast(tot))
+    val pts = spark.range(1, nPoints + 1).select(col("id").as("p"), lit(t).as("t"))
       .select(col("p"), expr(s"(p * t + $nPoints - 1) div $nPoints").as("n_prefix"))
     first.crossJoin(broadcast(pts))
       .filter(col("f") <= col("n_prefix"))

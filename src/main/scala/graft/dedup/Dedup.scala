@@ -90,16 +90,6 @@ object Dedup {
 
   // ----------------------------------------------------------- minhash/LSH
 
-  /** MinHash signature as a pure column-function chain: signature[j] =
-    * min over shingles of hash_j(shingle). Kept as the interpreted
-    * reference form; the pipeline path uses the native MinHashSignature
-    * expression (same shape, one tight loop). */
-  def minhashSignatureHof(text: Column, k: Int = 64, shingleW: Int = 3): Column = {
-    val sh = shingles(text, shingleW)
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(sh, g => xxhash64(g, j))))
-  }
-
   /** MinHash signatures, fully NARROW: one native rolling-hash pass
     * over the tokens, then one native k×|shingles| min loop per row —
     * no explode, no shuffle, no aggregation. The map stage emits
@@ -268,12 +258,14 @@ object Dedup {
     * test is the exact integer-shingle Jaccard divide both engines
     * compute identically.
     *
-    * Scale shape: one signature pass, one (band, s) exchange; stats
-    * and the pair expansion read the SAME checkpointed bucket table;
-    * the s grid is 19 literal rows crossJoined with the 1-row stats;
-    * the recall leg is a TakeOrdered of sampleN rows, one broadcast
-    * all-pairs verify over sampleN² (bounded by the parameter, never
-    * the corpus), and one semi-join against the candidate pairs. */
+    * Scale shape: one signature pass, one (band, s) exchange; the
+    * pair expansion reads the checkpointed bucket table, whose job
+    * observes the bucket stats; the s grid is 19 literal rows
+    * crossJoined with the 1-row doc count; the recall leg is a
+    * TakeOrdered of sampleN rows, one broadcast all-pairs verify over
+    * sampleN² (bounded by the parameter, never the corpus), and one
+    * left join against the candidate pairs whose job observes both
+    * recall counts. */
   def lshTuningCurve(docs: DataFrame, k: Int = 16, rowsPerBand: Int = 2,
                      shingleW: Int = 3, refThreshold: Double = 0.7,
                      sampleN: Int = 200): DataFrame = {
@@ -282,19 +274,22 @@ object Dedup {
       s"lshTuningCurve: sampleN=$sampleN out of [2, 10000]")
     val nBands = k / rowsPerBand
     def ipow(c: Column, e: Int): Column = Seq.fill(e)(c).reduce(_ * _)
-    val grouped = bandSignaturesMd5(docs, "doc_id", "text", k, rowsPerBand, shingleW)
-      .groupBy(col("band"), col("s"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .localCheckpoint() // bucket stats + the pair expansion
-    val cand = pairsFromIdLists(grouped.filter(size(col("ids")) >= 2), "ids")
-      .dropDuplicates()
-      .localCheckpoint() // candidate count + the recall semi-join
+    // each checkpoint's job observes its stats: the bucket table's
+    // (read by the pair expansion), the candidate table's (read by the
+    // recall join) and the sample pairs' (the recall itself)
+    val (grouped, bucketSt) = GraftPins.ck(
+      bandSignaturesMd5(docs, "doc_id", "text", k, rowsPerBand, shingleW)
+        .groupBy(col("band"), col("s"))
+        .agg(collect_list(col("doc_id")).as("ids")))(
+      count(lit(1)).as("n_buckets"), max(size(col("ids"))).cast("long").as("max_bucket"))
+    val (cand, candSt) = GraftPins.ck(
+      pairsFromIdLists(grouped.filter(size(col("ids")) >= 2), "ids").dropDuplicates())(
+      count(lit(1)).as("n_candidate_pairs"))
     // measured recall at refThreshold on the deterministic sample
-    val sample = docs
+    val sample = GraftPins.cut(docs
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(sampleN)
-      .select(col("doc_id"), shingles(col("text"), shingleW).as("sh"))
-      .localCheckpoint()
+      .select(col("doc_id"), shingles(col("text"), shingleW).as("sh")))
     val truePairs = sample.select(col("doc_id").as("id1"), col("sh").as("_sh1"))
       .crossJoin(broadcast(sample.select(col("doc_id").as("id2"), col("sh").as("_sh2"))))
       .filter(col("id1") < col("id2"))
@@ -304,24 +299,18 @@ object Dedup {
       .filter(col("_nc").cast("double") /
         (col("_n1") + col("_n2") - col("_nc")) >= refThreshold)
       .select(col("id1"), col("id2"))
-      .localCheckpoint()
-    val recallStats = truePairs
-      .join(cand, Seq("id1", "id2"), "left_semi")
-      .agg(count(lit(1)).as("n_true_caught"))
-      .crossJoin(broadcast(truePairs.agg(count(lit(1)).as("n_true_pairs"))))
-      .select(col("n_true_pairs"), col("n_true_caught"),
-        when(col("n_true_pairs") === 0, lit(null).cast("double"))
-          .otherwise(round(col("n_true_caught").cast("double")
-            / col("n_true_pairs").cast("double"), 6)).as("recall"))
-    val stats = grouped.agg(
-        count(lit(1)).as("n_buckets"),
-        max(size(col("ids"))).cast("long").as("max_bucket"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidate_pairs"))))
-      .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
-      .crossJoin(broadcast(recallStats))
+    // cand is distinct, so the left join marks each caught pair once
+    val (_, recallSt) = GraftPins.ck(truePairs
+      .join(cand.withColumn("_caught", lit(1)), Seq("id1", "id2"), "left"))(
+      count(lit(1)).as("n_true_pairs"), count(col("_caught")).as("n_true_caught"))
     val spark = docs.sparkSession
     val grid = spark.range(1, 20).select(col("id").cast("int").as("i"))
-    grid.crossJoin(broadcast(stats))
+    GraftPins.withScalars(grid.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs")))),
+        bucketSt, candSt, recallSt)
+      .withColumn("recall",
+        when(col("n_true_pairs") === 0, lit(null).cast("double"))
+          .otherwise(round(col("n_true_caught").cast("double")
+            / col("n_true_pairs").cast("double"), 6)))
       .withColumn("_y", lit(1.0) - ipow(col("i").cast("double") / 20.0, rowsPerBand))
       .select(round(col("i").cast("double") / 20.0, 2).as("s"),
         round(lit(1.0) - ipow(col("_y"), nBands), 6).as("p_collide"),
@@ -413,14 +402,13 @@ object Dedup {
     // each re-run the O(tokens·w) md5 window pass (no common-subplan
     // reuse), and the hash-keyed repartition makes the join co-located
     // instead of broadcasting the dup-key table (not small at 100 TB)
-    val keys = docs
+    val keys = GraftPins.cut(docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("_toks"))
       .filter(size(col("_toks")) >= w)
       .select(col(idCol),
         explode(org.apache.spark.sql.graftext.VectorExpressions
           .md5WindowHashes60(col("_toks"), w)).as("k"))
-      .repartition(col("k"))
-      .localCheckpoint()
+      .repartition(col("k")))
     val dupKeys = keys.groupBy(col("k")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("k"), lit(1).as("_dup"))
     keys.join(dupKeys, Seq("k"), "left")
@@ -466,14 +454,13 @@ object Dedup {
     require(w >= 2, s"dupSpanFamilies: window must be >= 2 tokens, got $w")
     require(topK >= 1, s"dupSpanFamilies: topK must be >= 1, got $topK")
     import org.apache.spark.sql.expressions.Window
-    val wins = docs
+    val wins = GraftPins.cut(docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("_toks"))
       .filter(size(col("_toks")) >= w)
       .select(col(idCol),
         posexplode(org.apache.spark.sql.graftext.VectorExpressions
           .md5WindowHashes60(col("_toks"), w)).as(Seq("j", "k")))
-      .repartition(col("k"))
-      .localCheckpoint()
+      .repartition(col("k")))
     val dupKeys = wins.groupBy(col("k")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("k"))
     val runs = wins.join(dupKeys, Seq("k"), "left_semi")
@@ -530,12 +517,11 @@ object Dedup {
     // hash-keyed repartition also makes the count-back join co-located
     // by partitioning instead of broadcasting the duplicated-window
     // table, which at 100 TB is NOT small (billions of repeated spans).
-    val wins = base.filter(size(col("_toks")) >= w)
+    val wins = GraftPins.cut(base.filter(size(col("_toks")) >= w)
       .select(col(idCol),
         posexplode(org.apache.spark.sql.graftext.VectorExpressions
           .md5WindowHashes60(col("_toks"), w)).as(Seq("j", "k")))
-      .repartition(col("k"))
-      .localCheckpoint()
+      .repartition(col("k")))
     val owners = wins.groupBy(col("k"))
       .agg(count(lit(1)).as("c"), min(col(idCol)).as("_owner"))
       .filter(col("c") >= 2).select(col("k"), col("_owner"))
@@ -1181,10 +1167,9 @@ object Dedup {
                          srcCol: String = "source"): DataFrame = {
     val anchor = conv(substring(org.apache.spark.sql.graftext.VectorExpressions
       .md5Min(shingles(col(textCol))), 1, 15), 16, 10).cast("long")
-    val counts = docs
+    val counts = GraftPins.cut(docs
       .select(anchor.as("anchor"), col(srcCol).as("src"))
-      .groupBy(col("anchor"), col("src")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("anchor"), col("src")).agg(count(lit(1)).as("c")))
     val l = counts.select(col("anchor"), col("src").as("source_a"), col("c").as("ca"))
     val r = counts.select(col("anchor"), col("src").as("source_b"), col("c").as("cb"))
     l.join(r, "anchor").filter(col("source_a") < col("source_b"))

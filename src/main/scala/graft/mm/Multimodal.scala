@@ -2,6 +2,7 @@ package graft.mm
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Multimodal column support: image/audio/video as opaque `binary`
   * columns plus typed metadata, with decode/feature-extraction running
@@ -752,9 +753,8 @@ object Multimodal {
     require(DHashBits % bandBits == 0,
       s"videoPhashNearDupsAnyFrame: bandBits must divide $DHashBits, got $bandBits")
     val nBands = DHashBits / bandBits
-    val hashes = frames
-      .select(col("media_id"), col("frame_no"), dhash60(col("luma")).as("dhash"))
-      .localCheckpoint()
+    val hashes = GraftPins.cut(frames
+      .select(col("media_id"), col("frame_no"), dhash60(col("luma")).as("dhash")))
     val bands = hashes
       .select(col("media_id"), col("frame_no"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"), col("dhash"))
@@ -826,9 +826,8 @@ object Multimodal {
     require(DHashBits % bandBits == 0,
       s"phashNearDups: bandBits must divide $DHashBits, got $bandBits")
     val nBands = DHashBits / bandBits
-    val hashes = grid
-      .select(col("media_id"), dhash60(col("luma")).as("dhash"))
-      .localCheckpoint()
+    val hashes = GraftPins.cut(grid
+      .select(col("media_id"), dhash60(col("luma")).as("dhash")))
     val bands = hashes
       .select(col("media_id"), explode(sequence(lit(0), lit(nBands - 1))).as("band"),
         col("dhash"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Declarative data-quality constraints and statistical anomaly
   * readouts — the validation tier a 100 TB ingest runs BEFORE letting
@@ -308,8 +309,9 @@ object DataQuality {
     * Scale shape: one map-side-combined exchange collapses both
     * sources to the shared value grid (bounded by the value DOMAIN,
     * not the row count); the running counts ride a grid-sized ordered
-    * window ([[madDaily]]'s bounded-window justification), the grid is
-    * checkpointed once for the totals, the max and the argmin.
+    * window ([[madDaily]]'s bounded-window justification); the grid's
+    * checkpoint job observes the totals and the gap table's the max,
+    * so the argmin is one filter.
     *
     * Output: one row — `n_a`, `n_b`, `ks_d` (6 dp), `ks_at` (the
     * value attaining D). */
@@ -322,16 +324,16 @@ object DataQuality {
         sum(when(col("source") === sourceB, 1L).otherwise(0L)).as("cb"))
     val w = Window.orderBy(col("v")) // grid-sized: bounded by the value domain
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val run = grid
+    // each checkpoint's job observes the scalar the next pass reads:
+    // the totals, then the max gap
+    val (run, tot) = GraftPins.ck(grid
       .withColumn("ra", sum(col("ca")).over(w))
-      .withColumn("rb", sum(col("cb")).over(w))
-      .localCheckpoint() // serves totals, max and argmin
-    val tot = run.agg(max(col("ra")).as("na"), max(col("rb")).as("nb"))
-    val gaps = run.crossJoin(broadcast(tot))
-      .withColumn("dnum", abs(col("ra") * col("nb") - col("rb") * col("na")))
-      .localCheckpoint()
-    val m = gaps.agg(max(col("dnum")).as("mx"))
-    gaps.join(broadcast(m), col("dnum") === col("mx"))
+      .withColumn("rb", sum(col("cb")).over(w)))(
+      max(col("ra")).as("na"), max(col("rb")).as("nb"))
+    val (gaps, m) = GraftPins.ck(GraftPins.withScalars(run, tot)
+      .withColumn("dnum", abs(col("ra") * col("nb") - col("rb") * col("na"))))(
+      max(col("dnum")).as("mx"))
+    GraftPins.withScalars(gaps, m).where(col("dnum") === col("mx"))
       .agg(max(col("na")).as("n_a"), max(col("nb")).as("n_b"),
         max(col("dnum")).as("_mx"), min(col("v")).as("_at"))
       // an absent side has no ECDF: NULL witness, never a NaN from 0/0
@@ -363,10 +365,9 @@ object DataQuality {
     * Output: one row per `event_type` — `n_days`, `median_daily`,
     * `mad_daily`. */
   def madDaily(events: DataFrame): DataFrame = {
-    val daily = events
+    val daily = GraftPins.cut(events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     def median2Of(df: DataFrame, v: String, out: String): DataFrame = {
       val w = Window.partitionBy(col("event_type")).orderBy(col(v), col("day"))
       val wn = Window.partitionBy(col("event_type"))
@@ -412,12 +413,11 @@ object DataQuality {
     * Output: one row per `event_type` — `n_days`, `n_pairs`,
     * `ts_slope` (events/day per day, 6 dp; NULL if n_days < 2). */
   def theilSenDaily(events: DataFrame): DataFrame = {
-    val daily = events
+    val daily = GraftPins.cut(events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"))
       .select(col("event_type"),
-        datediff(col("day"), lit("1970-01-01").cast("date")).as("d"), col("c"))
-      .localCheckpoint()
+        datediff(col("day"), lit("1970-01-01").cast("date")).as("d"), col("c")))
     val pairs = daily.select(col("event_type"), col("d").as("d1"), col("c").as("c1"))
       .join(daily.select(col("event_type"), col("d").as("d2"), col("c").as("c2")),
         Seq("event_type"))
@@ -460,12 +460,12 @@ object DataQuality {
     * stream is grid², generated per type from the checkpointed grid —
     * day-grid-sized, never data-sized. */
   def mannKendallDaily(events: DataFrame): DataFrame = {
-    val daily = events
+    // pairs + ties + n all read the grid
+    val daily = GraftPins.cut(events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"))
       .select(col("event_type"),
-        datediff(col("day"), lit("1970-01-01").cast("date")).as("d"), col("c"))
-      .localCheckpoint() // pairs + ties + n all read the grid
+        datediff(col("day"), lit("1970-01-01").cast("date")).as("d"), col("c")))
     val sTab = daily.select(col("event_type"), col("d").as("d1"), col("c").as("c1"))
       .join(daily.select(col("event_type"), col("d").as("d2"), col("c").as("c2")),
         Seq("event_type"))
@@ -512,10 +512,9 @@ object DataQuality {
     * grid-sized. Output per type: `event_type`, `n_days`,
     * `n_concordant`, `n_discordant`, `tau_b` (6 dp). */
   def kendallDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+    val daily = GraftPins.cut(events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"),
-        sum(round(col("value") * 100).cast("long")).cast("long").as("v"))
-      .localCheckpoint()
+        sum(round(col("value") * 100).cast("long")).cast("long").as("v")))
     val pairs = daily.select(col("event_type"), col("day").as("d1"),
         col("c").as("c1"), col("v").as("v1"))
       .join(daily.select(col("event_type"), col("day").as("d2"),
@@ -600,22 +599,22 @@ object DataQuality {
     val b = nBuckets
     val ref = docs.filter(col("source") === refSource)
       .select(col(valCol).cast("long").as("x"), col("doc_id"))
-    val ranked = graft.ops.Relational.globalRank(
+    // the rank's subtotal collect already counts the reference rows
+    val (ranked, nRef) = graft.ops.Relational.globalRankN(
       ref, Seq(col("x"), col("doc_id")), "r")
-    val nRef = ranked.agg(count(lit(1)).as("n"))
     val ks = ranked.sparkSession.range(1, b).select(col("id").as("k"))
-    val bounds = ranked.crossJoin(broadcast(nRef))
+    val bounds = ranked.withColumn("n", lit(nRef))
       .join(broadcast(ks), col("r") === expr(s"(k * n + $b - 1) div $b"))
       .agg(transform(array_sort(collect_list(struct(col("k"), col("x")))),
         s => s.getField("x")).as("bounds"))
-    val counts = docs
+    // the p and q branches both read it
+    val counts = GraftPins.cut(docs
       .select(col("source"), col(valCol).cast("long").as("x"))
       .crossJoin(broadcast(bounds))
       .select(col("source"),
         (lit(1) + size(filter(col("bounds"), bd => col("x") > bd))).as("bucket"))
       .groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // the p and q branches both read it
+      .agg(count(lit(1)).as("c")))
     val tot = counts.groupBy(col("source")).agg(sum(col("c")).cast("long").as("ns"))
     val bgrid = ranked.sparkSession.range(1, b + 1).select(col("id").cast("int").as("bucket"))
     val shares = tot.crossJoin(broadcast(bgrid))
@@ -652,32 +651,32 @@ object DataQuality {
     * identically-rounded terms.
     *
     * Scale shape: one map-side-combined exchange collapses the fact
-    * table to the bucket grid (≤ |feature domain| rows, checkpointed for
-    * its two readers); totals ride a broadcast 1-row sidecar; everything
-    * after the collapse is grid-sized. Output: per bucket — `bucket`,
+    * table to the bucket grid (≤ |feature domain| rows, checkpointed;
+    * its job observes the totals, and the scored grid's job the IV sum,
+    * both read as literals); everything after the collapse is
+    * grid-sized. Output: per bucket — `bucket`,
     * `n_events`, `n_good`, `n_bad`, `woe` — plus the constant `iv`. */
   def woeIv(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(
       round(col("l_discount") * 100).cast("int").as("bucket"),
       (col("l_returnflag") === "R").cast("long").as("y"))
-    val g = base.groupBy(col("bucket"))
+    // each checkpoint's job observes the totals the next pass reads
+    val (g, tot) = GraftPins.ck(base.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_events"), sum(col("y")).cast("long").as("n_good"))
-      .withColumn("n_bad", col("n_events") - col("n_good"))
-      .localCheckpoint() // serves the totals sidecar AND the woe pass
-    val tot = g.agg(sum(col("n_good")).cast("long").as("gt"),
+      .withColumn("n_bad", col("n_events") - col("n_good")))(
+      sum(col("n_good")).cast("long").as("gt"),
       sum(col("n_bad")).cast("long").as("bt"),
       count(lit(1)).cast("long").as("k"))
-    val scored = g.crossJoin(broadcast(tot))
+    val (scored, iv) = GraftPins.ck(GraftPins.withScalars(g, tot)
       .withColumn("woe", round(log(
         ((col("n_good") + 1) * (col("bt") + col("k"))).cast("double") /
           ((col("n_bad") + 1) * (col("gt") + col("k"))).cast("double")), 6))
       .withColumn("term", round(
         ((col("n_good") + 1).cast("double") / (col("gt") + col("k")).cast("double")
           - (col("n_bad") + 1).cast("double") / (col("bt") + col("k")).cast("double"))
-          * col("woe"), 6).cast("decimal(18,6)"))
-      .localCheckpoint() // bucket-grid-sized; serves rows AND the IV sum
-    val iv = scored.agg(sum(col("term")).cast("decimal(18,6)").as("ivd"))
-    scored.crossJoin(broadcast(iv))
+          * col("woe"), 6).cast("decimal(18,6)")))(
+      sum(col("term")).cast("decimal(18,6)").as("ivd"))
+    GraftPins.withScalars(scored, iv)
       .select(col("bucket"), col("n_events"), col("n_good"), col("n_bad"),
         col("woe"), col("ivd").cast("double").as("iv"))
   }
@@ -703,10 +702,10 @@ object DataQuality {
   def mannWhitney(orders: DataFrame, grpCol: String = "o_orderpriority",
                   grpA: String = "1-URGENT", grpB: String = "5-LOW",
                   valCol: String = "o_totalprice"): DataFrame = {
-    val base = orders.filter(col(grpCol).isin(grpA, grpB))
+    // the grid AND the rank join read it
+    val base = GraftPins.cut(orders.filter(col(grpCol).isin(grpA, grpB))
       .select((col(grpCol) === grpA).cast("long").as("ga"),
-        round(col(valCol) * 100).cast("long").as("v"))
-      .localCheckpoint() // the grid AND the rank join read it
+        round(col(valCol) * 100).cast("long").as("v")))
     val grid = base.groupBy(col("v")).agg(count(lit(1)).as("_cnt"))
     val pre = Relational.prefixSum(grid, Seq(col("v")), "_cnt", "_pre")
       .select(col("v"), (lit(2L) * col("_pre") - col("_cnt") + 1L).as("r2"),
@@ -764,16 +763,17 @@ object DataQuality {
     *
     * Scale shape: one tokenize+explode pass collapses to the
     * vocab-sized (hash, c_ref, c_other) rollup — the only data-sized
-    * exchange, map-side combined, checkpointed once for the totals
-    * and the term pass; the 1-row totals broadcast back; everything
-    * after is vocabulary-sized.
+    * exchange, map-side combined, checkpointed once for the term pass,
+    * whose job observes the totals; everything after is
+    * vocabulary-sized.
     *
     * Output: ONE row — n_vocab, n_tok_ref, n_tok_other, kl_ref,
     * kl_other, jsd (6 dp, nats). */
   def jsDivergence(docs: DataFrame, refSource: String, textCol: String = "text",
                    minCount: Long = 5): DataFrame = {
     require(minCount >= 1, s"jsDivergence: minCount must be >= 1, got $minCount")
-    val counts = docs
+    // the term pass reads the checkpoint; its job observes the totals
+    val (counts, totals) = GraftPins.ck(docs
       .select((col("source") === refSource).as("_ref"),
         explode(split(col(textCol), "\\s+")).as("_tok"))
       .select(col("_ref"),
@@ -781,16 +781,14 @@ object DataQuality {
       .groupBy(col("_h"))
       .agg(sum(when(col("_ref"), 1L).otherwise(0L)).cast("long").as("_cp"),
         sum(when(!col("_ref"), 1L).otherwise(0L)).cast("long").as("_cq"))
-      .filter(col("_cp") + col("_cq") >= minCount)
-      .localCheckpoint() // totals + the term pass
-    val totals = counts.agg(
+      .filter(col("_cp") + col("_cq") >= minCount))(
       count(lit(1)).cast("long").as("n_vocab"),
       sum(col("_cp")).cast("long").as("n_tok_ref"),
       sum(col("_cq")).cast("long").as("n_tok_other"))
     val pi = col("_cp").cast("double") / col("n_tok_ref")
     val qi = col("_cq").cast("double") / col("n_tok_other")
     val mi = (pi + qi) / lit(2.0)
-    counts.crossJoin(broadcast(totals))
+    GraftPins.withScalars(counts, totals)
       .select(col("n_vocab"), col("n_tok_ref"), col("n_tok_other"),
         round(when(col("_cp") > 0, pi * log(pi / mi)).otherwise(lit(0.0)), 10)
           .cast("decimal(28,10)").as("_tp"),

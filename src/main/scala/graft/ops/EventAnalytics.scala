@@ -153,8 +153,9 @@ object EventAnalytics {
     *
     * Output: `day`, `dau`, `wau`, `stickiness`. */
   def stickiness(events: DataFrame): DataFrame = {
-    val du = events.select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      .localCheckpoint() // feeds both the DAU count and the WAU explode
+    // feeds both the DAU count and the WAU explode
+    val du = GraftPins.cut(
+      events.select(to_date(col("ts")).as("day"), col("user_id")).distinct())
     val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = du
       .select(explode(sequence(col("day"), date_add(col("day"), 6))).as("day"),
@@ -441,10 +442,10 @@ object EventAnalytics {
     *
     * Scale shape: the event log collapses to the daily count grid in
     * ONE map-side-combined exchange (≤ one row per day), checkpointed
-    * so the totals, deviations and denominator all read the grid, not
-    * the data (single-pass idiom — without it each scalar sidecar
-    * re-scans the log); the lag windows, products and rollup run on
-    * that bounded grid, so the single-partition ordered window is
+    * so the deviations read the grid, not the data; the checkpoint's
+    * own job observes the totals and Σx², from which the denominator
+    * follows exactly (no scalar sidecar pass); the lag windows,
+    * products and rollup run on that bounded grid, so the single-partition ordered window is
     * days-sized, never data-sized (the [[changepointDaily]]
     * justification).
     *
@@ -458,14 +459,20 @@ object EventAnalytics {
     * `acf` (6 dp). */
   def acfDaily(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 60, s"acfDaily: maxLag must be in [1, 60], got $maxLag")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val tot = daily.agg(count(lit(1)).cast("long").as("nd"),
-      sum(col("c")).cast("long").as("st"))
-    val base = daily.crossJoin(broadcast(tot))
+    val (daily, tot) = GraftPins.ck(events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("c")))(count(lit(1)).cast("long").as("nd"),
+      sum(col("c")).cast("long").as("st"),
+      sum(col("c").cast("decimal(19,0)") * col("c").cast("decimal(19,0)"))
+        .cast("decimal(38,0)").as("sc2"))
+    val base = GraftPins.withScalars(daily, tot)
       .withColumn("dcent", (col("nd") * col("c") - col("st")).cast("decimal(18,0)"))
-    val den = base.agg(sum(col("dcent") * col("dcent")).cast("decimal(38,0)").as("den"))
+    // Σ (N·x − S)² = N·(N·Σx² − S²) exactly (Σx = S), from the observed
+    // sums: the denominator needs no pass of its own
+    val den = if (tot.isNullAt(1)) null else {
+      val (nd, st) = (BigInt(tot.getLong(0)), BigInt(tot.getLong(1)))
+      new java.math.BigDecimal(
+        (nd * (nd * BigInt(tot.getDecimal(2).toBigIntegerExact) - st * st)).bigInteger)
+    }
     val w = Window.orderBy(col("day")) // grid-sized: bounded by #days
     val lagged = base.select(Seq(col("dcent")) ++
       (1 to maxLag).map(k => lag(col("dcent"), k).over(w).as(s"l$k")): _*)
@@ -476,7 +483,7 @@ object EventAnalytics {
     stacked.groupBy(col("lag"))
       .agg(count(col("prod")).as("n_pairs"),
         sum(col("prod")).cast("decimal(38,0)").as("num"))
-      .crossJoin(broadcast(den))
+      .withColumn("den", lit(den).cast("decimal(38,0)"))
       .select(col("lag"), col("n_pairs"),
         round(col("num").cast("double") / col("den").cast("double"), 6).as("acf"))
   }
@@ -659,13 +666,13 @@ object EventAnalytics {
         datediff(col("day"), lit("1970-01-01").cast("date")).as("d"), col("c"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(-3, 3)
-    val trended = daily
+    // seasonal rollup + the final readout
+    val trended = GraftPins.cut(daily
       .withColumn("t7", sum(col("c")).over(w).cast("long"))
       .withColumn("nw", count(lit(1)).over(w))
       .filter(col("nw") === 7)
       .withColumn("dow", pmod(col("d"), lit(7)).cast("int"))
-      .withColumn("d7", lit(7L) * col("c") - col("t7"))
-      .localCheckpoint() // seasonal rollup + the final readout
+      .withColumn("d7", lit(7L) * col("c") - col("t7")))
     val seasonal = trended.groupBy(col("event_type"), col("dow"))
       .agg(sum(col("d7")).cast("long").as("sd7"),
         count(lit(1)).as("cnt"))
@@ -713,10 +720,10 @@ object EventAnalytics {
       .groupBy(col("t"))
       .agg(sum(col("d")).as("net"),
         sum(when(col("d") > 0, col("d")).otherwise(0L)).as("starts"))
-    val conc = Relational.prefixSum(deltas, Seq(col("t")), "net", "conc")
-    val peak = conc.agg(max(col("conc")).as("pk"),
-      sum(col("starts")).cast("long").as("ns"))
-    conc.crossJoin(broadcast(peak)).where(col("conc") === col("pk"))
+    val (conc, peak) = GraftPins.ck(
+      Relational.prefixSum(deltas, Seq(col("t")), "net", "conc"))(
+      max(col("conc")).as("pk"), sum(col("starts")).cast("long").as("ns"))
+    GraftPins.withScalars(conc, peak).where(col("conc") === col("pk"))
       .agg(max(col("ns")).as("n_sessions"),
         max(col("conc")).as("peak_concurrency"), min(col("t")).as("peak_at_us"))
       .select(col("n_sessions"), col("peak_concurrency"), col("peak_at_us"))
@@ -1058,9 +1065,9 @@ object EventAnalytics {
     * Output: one row per (type, day) — `n`, `prev_week_n`,
     * `growth_pct` (6 dp, NULL when no comparison row). */
   def wowGrowth(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // grid-sized; serves both join sides
+    // grid-sized; serves both join sides
+    val daily = GraftPins.cut(events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("n")))
     val prev = daily.select(col("event_type"),
       date_add(col("day"), 7).as("day"), col("n").as("prev_week_n"))
     daily.join(prev, Seq("event_type", "day"), "left")
@@ -1115,11 +1122,11 @@ object EventAnalytics {
       .select(expr("(hwm - ts_us) div 1000000").as("late_s"))
       .groupBy(col("late_s")).agg(count(lit(1)).as("cnt"))
     val wg = Window.orderBy(col("late_s")) // grid-sized: bounded by the lateness domain
-    val rc = grid.withColumn("rc", sum(col("cnt")).over(
-        wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint() // serves totals and rank stats
-    val tot = rc.agg(max(col("rc")).as("n"))
-    rc.crossJoin(broadcast(tot))
+    // its job observes the total the rank stats read
+    val (rc, tot) = GraftPins.ck(grid.withColumn("rc", sum(col("cnt")).over(
+        wg.rowsBetween(Window.unboundedPreceding, Window.currentRow))))(
+      max(col("rc")).as("n"))
+    GraftPins.withScalars(rc, tot)
       .agg(max(col("n")).as("n_events"),
         sum(when(col("late_s") > 0, col("cnt")).otherwise(0L)).as("n_late"),
         max(col("late_s")).as("max_late_s"),
@@ -1315,12 +1322,12 @@ object EventAnalytics {
       .withColumn("_rn", row_number().over(wOrd).cast("long"))
     val firstConv = base.filter(col("event_type") === convType)
       .groupBy(col("user_id")).agg(min(col("_rn")).as("_crn"))
-    val journey = base.join(firstConv, Seq("user_id"), "left")
+    // lag pass + terminal pass share it
+    val journey = GraftPins.cut(base.join(firstConv, Seq("user_id"), "left")
       .filter(col("_crn").isNull || col("_rn") <= col("_crn"))
       .select(col("user_id"), col("_rn"), col("_crn"),
         when(col("event_type") === convType, lit("_CONV"))
-          .otherwise(col("event_type")).as("_state"))
-      .localCheckpoint() // lag pass + terminal pass share it
+          .otherwise(col("event_type")).as("_state")))
     val steps_ = journey
       .select(col("user_id"),
         coalesce(lag(col("_state"), 1).over(
@@ -1330,10 +1337,10 @@ object EventAnalytics {
       .groupBy(col("user_id"))
       .agg(max(struct(col("_rn"), col("_state"))).getField("_state").as("i"))
       .select(col("user_id"), col("i"), lit("_NULL").as("j"))
-    val counts = steps_.select(col("i"), col("j"))
+    // matrix base: read per variant + for channels
+    val counts = GraftPins.cut(steps_.select(col("i"), col("j"))
       .unionAll(terminals.select(col("i"), col("j")))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // matrix base: read per variant + for channels
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("c")))
     val channels = counts.select(col("i").as("s"))
       .unionAll(counts.select(col("j").as("s"))).distinct()
       .filter(!col("s").isin("_START", "_CONV", "_NULL"))
@@ -1357,20 +1364,26 @@ object EventAnalytics {
     val loops = variantIds
       .select(col("_v"), explode(array(lit("_CONV"), lit("_NULL"))).as("i"))
       .select(col("_v"), col("i"), col("i").as("j"), lit(1.0).cast(dec).as("p"))
-    val matrix = variants.unionAll(loops).localCheckpoint()
+    val (matrix, mSt) = GraftPins.ck(variants.unionAll(loops))(count(lit(1)).as("n"))
     // The stepped mass propagation: state is (variant, state, mass) —
     // at most |variants|·|states| rows, kilobytes for any realistic
     // channel vocabulary — yet the distributed loop is `steps` chained
     // join+aggregate rounds whose stage-jobs dominate the row (the
     // textrank/ktruss scheduling lesson). Size-gated driver iteration
-    // (DriverGate.MarkovRows): collect the checkpointed matrix once
-    // and run the IDENTICAL decimal arithmetic in BigDecimal — products
-    // of two scale-12 decimals are exact at scale 24 (Spark:
+    // (DriverGate.MarkovRows, on the row count the checkpoint observed):
+    // collect the checkpointed matrix once and run the IDENTICAL
+    // decimal arithmetic in BigDecimal — products of two scale-12
+    // decimals are exact at scale 24 (Spark:
     // decimal(37,24), no rounding), sums are exact, then one HALF_UP
     // round to scale 12 per (variant, state), matching
     // round(sum(m·p), 12)::decimal(18,12) bit-for-bit (spec-pinned
     // driver == distributed on real data).
-    val pConv = DriverGate.collect("markov", DriverGate.MarkovRows, matrix).map { mRows =>
+    val spark = events.sparkSession
+    val driverRows =
+      if (DriverGate.admits(spark, "markov", DriverGate.MarkovRows, mSt.getLong(0)))
+        Some(matrix.collect())
+      else None
+    val pConv0 = driverRows.map { mRows =>
       val byVi = mRows.groupBy(r => (r.getString(0), r.getString(1)))
         .map { case (k, rs) =>
           k -> rs.map(r => (r.getString(2), r.getDecimal(3))).toSeq
@@ -1388,7 +1401,6 @@ object EventAnalytics {
           k -> s.setScale(12, java.math.RoundingMode.HALF_UP)
         }.toMap
       }
-      val spark = events.sparkSession
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vv",
           org.apache.spark.sql.types.StringType),
@@ -1412,18 +1424,17 @@ object EventAnalytics {
           .select(col("vv"), col("j").as("state"), col("m"))
       v.filter(col("state") === "_CONV")
         .select(col("vv"), col("m").as("pc"))
-        .localCheckpoint() // base row + per-channel rows both read it
     }
+    // per-channel rows read the checkpoint; its job observes the base row
+    val (pConv, baseP) = GraftPins.ck(pConv0)(
+      coalesce(max(when(col("vv") === "", col("pc"))), lit(0).cast(dec)).as("p0"))
     // a variant whose mass NEVER reaches CONV has no pConv row at all
     // (its removal killed every converting path) — that is pc = 0, not
     // a dropped channel, so the channel list left-joins the masses
     val chanRows = channels.select(col("s").as("channel"))
       .join(pConv.withColumnRenamed("vv", "channel"), Seq("channel"), "left")
       .select(col("channel"), coalesce(col("pc"), lit(0).cast(dec)).as("pc"))
-    val baseP = pConv.filter(col("vv") === "")
-      .agg(coalesce(max(col("pc")), lit(0).cast(dec)).as("p0"))
-    val effects = chanRows
-      .crossJoin(broadcast(baseP))
+    val (effects, tot) = GraftPins.ck(GraftPins.withScalars(chanRows, baseP)
       .select(col("channel"),
         round(col("p0").cast("double"), 6).as("p_conv"),
         round(col("pc").cast("double"), 6).as("p_conv_removed"),
@@ -1432,10 +1443,8 @@ object EventAnalytics {
           .as("removal_effect"),
         // exact decimal numerators so the share denominator is an
         // exact decimal sum, never an order-dependent double fold
-        (col("p0") - col("pc")).as("_re"))
-      .localCheckpoint()
-    val tot = effects.agg(sum(col("_re")).as("_tre"))
-    effects.crossJoin(broadcast(tot))
+        (col("p0") - col("pc")).as("_re")))(sum(col("_re")).as("_tre"))
+    GraftPins.withScalars(effects, tot)
       .select(col("channel"), col("p_conv"), col("p_conv_removed"),
         col("removal_effect"),
         when(col("_tre") > 0,
@@ -1577,15 +1586,19 @@ object EventAnalytics {
     * overflow-safe pattern).
     *
     * Scale shape: one user_id exchange collapses events to users (the
-    * catalog's shared discipline), the 1-row min/max and pooled-moment
-    * tables broadcast, and the per-arm rollup is a 2-group map-side
-    * combine. No window, no sort, nothing driver-side but 1-row scalars. */
+    * catalog's shared discipline), the 1-row min/max table broadcasts,
+    * the user table's checkpoint job observes the pooled moments, and
+    * the per-arm rollup is a 2-group map-side combine. No window, no
+    * sort, nothing driver-side but 1-row scalars. */
   def cupedAb(events: DataFrame): DataFrame = {
     val cents = round(col("value") * 100).cast("long")
     val mm = events.agg(min(unix_micros(col("ts"))).cast("long").as("t0"),
         max(unix_micros(col("ts"))).cast("long").as("t1"))
       .select(expr("t0 + (t1 - t0) DIV 2").as("mid"))
-    val users = events.crossJoin(broadcast(mm))
+    def d19(c: Column) = c.cast("decimal(19,0)")
+    // the per-arm adjusted pass reads the user table; its checkpoint job
+    // observes the pooled moments
+    val (users, moments) = GraftPins.ck(events.crossJoin(broadcast(mm))
       .select(col("user_id"), (unix_micros(col("ts")) < col("mid")).as("pre"),
         cents.as("c"))
       .groupBy(col("user_id"))
@@ -1593,17 +1606,15 @@ object EventAnalytics {
         coalesce(sum(when(!col("pre"), col("c")).otherwise(lit(0L))), lit(0L)).as("y"))
       .withColumn("arm_a",
         conv(substring(md5(col("user_id").cast("string").cast("binary")), 1, 13),
-          16, 10).cast("long") % 2 === 0)
-      .localCheckpoint() // pooled moments + the per-arm adjusted pass
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    val pooled = users.agg(
+          16, 10).cast("long") % 2 === 0))(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(d19(col("x"))).cast("decimal(38,0)").as("sx"),
         sum(d19(col("y"))).cast("decimal(38,0)").as("sy"),
         sum(d19(col("x")) * d19(col("y"))).cast("decimal(38,0)").as("sxy"),
         sum(d19(col("x")) * d19(col("x"))).cast("decimal(38,0)").as("sxx"),
         sum(d19(col("y")) * d19(col("y"))).cast("decimal(38,0)").as("syy"))
-      .select(
+    val pooled = GraftPins.withScalars(users, moments)
+      .select(col("*"),
         ((col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
           .cast("double") /
           (col("n") * col("sxx") - col("sx") * col("sx")).cast("decimal(38,0)")
@@ -1619,7 +1630,7 @@ object EventAnalytics {
               .cast("double"))).as("rho2"))
     val ya = col("y").cast("double") -
       col("theta") * (col("x").cast("double") - col("xbar"))
-    val byArm = users.crossJoin(broadcast(pooled))
+    val byArm = pooled
       .select(col("arm_a"), col("y"), col("theta"), col("rho2"),
         round(ya, 6).cast("decimal(28,6)").as("term"),
         round(ya * ya, 6).cast("decimal(28,6)").as("term2"))

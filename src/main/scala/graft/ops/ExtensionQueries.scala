@@ -5,6 +5,7 @@ import graft.dedup.Dedup
 import graft.mm.Multimodal
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Catalog entries for the training-data-pipeline tier: dedup,
   * similarity search, multimodal plumbing, windowed aggregation.
@@ -357,7 +358,7 @@ object ExtensionQueries {
     private val fallbackIds = java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
     private def sessionId(s: SparkSession): String =
-      org.apache.spark.sql.graftext.GraftPins.sessionUuid(s).getOrElse(
+      GraftPins.sessionUuid(s).getOrElse(
         fallbackIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString))
     private def releaseAll(uuid: String): Unit = {
       val slots = bySession.remove(uuid)
@@ -428,7 +429,7 @@ object ExtensionQueries {
   }
 
   private def releaseDf(df: org.apache.spark.sql.DataFrame): Unit =
-    org.apache.spark.sql.graftext.GraftPins.unpin(df)
+    GraftPins.unpin(df)
 
   /** The shared checkpointed embeddings table — the input of the
     * ~20-row similarity tier (kNN joins, ANN variants, SemDeDup,
@@ -446,9 +447,7 @@ object ExtensionQueries {
   private def coEmbeddings(s: org.apache.spark.sql.SparkSession,
                            d: String): org.apache.spark.sql.DataFrame =
     FaceCache.get(s, "embeddings", datasetSignature(d)) {
-      val e = Tables.embeddings(s, d).localCheckpoint()
-      org.apache.spark.sql.graftext.GraftPins.pin(e)
-      e
+      GraftPins.cut(Tables.embeddings(s, d), pinned = true)
     }(releaseDf)
 
   /** The distinct (l_orderkey, l_partkey) basket-membership table —
@@ -471,11 +470,9 @@ object ExtensionQueries {
       // AQE-off materialization: an adaptive plan's checkpoint records
       // UnknownPartitioning, silently discarding the basket-key layout
       // this face exists to provide (GraftPins.withAqeOff scaladoc)
-      val m = org.apache.spark.sql.graftext.GraftPins.ck(Tables.lineitem(s, d)
+      GraftPins.cut(Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .repartition(col("l_orderkey")), keepLayout = true)()._1
-      org.apache.spark.sql.graftext.GraftPins.pin(m)
-      m
+        .repartition(col("l_orderkey")), keepLayout = true, pinned = true)
     }(releaseDf)
 
   private def pairsFromMembership(li: org.apache.spark.sql.DataFrame) = {
@@ -499,10 +496,8 @@ object ExtensionQueries {
   private def coNdPairs(s: org.apache.spark.sql.SparkSession,
                         d: String): org.apache.spark.sql.DataFrame =
     FaceCache.get(s, "ndpairs", datasetSignature(d)) {
-      val p = Dedup.minhashNearDupsMd5(Tables.documents(s, d), threshold = 0.5,
-        maxBucketSize = Some(64)).localCheckpoint()
-      org.apache.spark.sql.graftext.GraftPins.pin(p)
-      p
+      GraftPins.cut(Dedup.minhashNearDupsMd5(
+        Tables.documents(s, d), threshold = 0.5, maxBucketSize = Some(64)), pinned = true)
     }(releaseDf)
 
   /** The duplicate-cluster labeling over [[coNdPairs]] — shared by the
@@ -512,10 +507,8 @@ object ExtensionQueries {
   private def coNdClusters(s: org.apache.spark.sql.SparkSession,
                            d: String): org.apache.spark.sql.DataFrame =
     FaceCache.get(s, "ndclusters", datasetSignature(d)) {
-      val c = Dedup.dedupClusters(coNdPairs(s, d),
-        reliableCheckpoints = ccReliable(s)).localCheckpoint()
-      org.apache.spark.sql.graftext.GraftPins.pin(c)
-      c
+      GraftPins.cut(Dedup.dedupClusters(coNdPairs(s, d),
+        reliableCheckpoints = ccReliable(s)), pinned = true)
     }(releaseDf)
 
   /** The in-session corpus near-dup index (docs with id % 5 ≠ 0 — the
@@ -536,11 +529,9 @@ object ExtensionQueries {
       val idx = Dedup.corpusNearDupIndex(
         Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)) =!= 0),
         maxBucketSize = Some(64))
-      val b = idx.bands.localCheckpoint()
-      val sh = idx.shingles.localCheckpoint()
-      org.apache.spark.sql.graftext.GraftPins.pin(b)
-      org.apache.spark.sql.graftext.GraftPins.pin(sh)
-      Dedup.CorpusNearDupIndex(b, sh)
+      Dedup.CorpusNearDupIndex(
+        GraftPins.cut(idx.bands, pinned = true),
+        GraftPins.cut(idx.shingles, pinned = true))
     }(idx => { releaseDf(idx.bands); releaseDf(idx.shingles) })
 
   /** The SemDeDup k-means centroids (nClusters 4, dim 64, iters 2 —
@@ -1849,9 +1840,9 @@ object ExtensionQueries {
   val mmPhashIndexProbe: Q = Q(
     "x_mm_phash_index",
     (s, d) => {
-      val grid = Multimodal.lumaGrid(
-        Multimodal.imageTable(Tables.documents(s, d))).toDF()
-        .localCheckpoint() // decode runs ONCE; corpus and probe both read it
+      // decode runs ONCE; corpus and probe both read it
+      val grid = GraftPins.cut(Multimodal.lumaGrid(
+        Multimodal.imageTable(Tables.documents(s, d))).toDF())
       val corpus = grid.filter(col("media_id") % 4 =!= 0)
       val probe = grid.filter(col("media_id") % 4 === 1)
         .select((col("media_id") + 10000000L).as("media_id"),
@@ -3938,8 +3929,8 @@ object ExtensionQueries {
   val packStatsQ: Q = Q(
     "x_pack_stats",
     (s, d) => {
-      val m = graft.corpus.Corpus
-        .packSequences(Tables.documents(s, d), seqLen = 256).localCheckpoint()
+      val m = GraftPins.cut(graft.corpus.Corpus
+        .packSequences(Tables.documents(s, d), seqLen = 256))
       val perDoc = m.groupBy(col("doc_id")).agg(count(lit(1)).as("pieces"))
       val a = perDoc.agg(count(lit(1)).as("n_docs"),
         sum(col("pieces")).cast("bigint").as("n_pieces"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Approximate-string (edit-distance) join via SymSpell-style deletion
   * neighborhoods — the entity-resolution / typo-normalization primitive a
@@ -141,9 +142,8 @@ object FuzzyJoin {
     val bn = blockCols.indices.map(i => s"_jw_b$i")
     val proj = df.select(blockCols.zip(bn).map { case (c, n) => c.as(n) } ++
       Seq(col(idCol).as("_jw_id"), col(nameCol).as("_jw_name")): _*)
-    val reps = proj.groupBy(bn.map(col) :+ col("_jw_name"): _*)
-      .agg(min(col("_jw_id")).as("_jw_rep"), count(lit(1)).as("_jw_n"))
-      .localCheckpoint()
+    val reps = GraftPins.cut(proj.groupBy(bn.map(col) :+ col("_jw_name"): _*)
+      .agg(min(col("_jw_id")).as("_jw_rep"), count(lit(1)).as("_jw_n")))
     (proj, bn, reps)
   }
 
@@ -217,11 +217,11 @@ object FuzzyJoin {
     val weights = toks.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
       .crossJoin(broadcast(nf))
       .select(col("_t"), expr(s"CAST($weightScale * _nf AS BIGINT) DIV _df").as("_w"))
-    val packed = toks.join(weights, "_t")
+    // vocabulary-sized; both pair sides read it
+    val packed = GraftPins.cut(toks.join(weights, "_t")
       .groupBy(col("_jw_name"))
       .agg(sort_array(collect_list(struct(col("_t").as("t"), col("_w").as("w")))).as("_tw"),
-        sum(col("_w")).cast("long").as("_ws"))
-      .localCheckpoint() // vocabulary-sized; both pair sides read it
+        sum(col("_w")).cast("long").as("_ws")))
     val a = reps.join(packed, "_jw_name").select(bn.map(col) ++ Seq(
       col("_jw_rep").as("id1"), col("_jw_n").as("n1"),
       col("_tw").as("_tw1"), col("_ws").as("_ws1")): _*)
@@ -263,12 +263,12 @@ object FuzzyJoin {
         Seq(col("_jw_name").as("_jw_n1"), col("_jw_rep").as("id1")): _*)
       val b = reps.select(bn.map(col) ++
         Seq(col("_jw_name").as("_jw_n2"), col("_jw_rep").as("id2")): _*)
-      a.join(b, bn, "inner")
+      // read by the CC loop AND the fuzzy-rep node set
+      GraftPins.cut(a.join(b, bn, "inner")
         .filter(col("id1") < col("id2"))
         .filter(graft.functions.VectorFunctions
           .jaroWinkler(col("_jw_n1"), col("_jw_n2")) >= threshold)
-        .select(col("id1"), col("id2"))
-        .localCheckpoint() // read by the CC loop AND the fuzzy-rep node set
+        .select(col("id1"), col("id2")))
     }
     val fuzzyCl = graft.dedup.Dedup.dedupClusters(edges)
       .select(col("doc_id").as("_jw_rep"), col("cluster_id"))

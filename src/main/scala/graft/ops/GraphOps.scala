@@ -90,8 +90,7 @@ object GraphOps {
       * small-table partition coalescing and buys nothing (measured: the
       * sf0.1 ktruss 2x-vs-floor flag). */
     private def ck(df: DataFrame, keepLayout: Boolean): DataFrame = {
-      val c = GraftPins.ck(df, keepLayout)()._1
-      if (pinned) GraftPins.pin(c)
+      val c = GraftPins.cut(df, keepLayout, pinned)
       materialized.add(c)
       c
     }
@@ -384,11 +383,19 @@ object GraphOps {
   }
 
   def labelPropagation(f: GraphFace, iters: Int): DataFrame =
-    labelPropagation(f, iters, DriverGate.BroadcastNodes)
+    labelPropagation(f, iters, DriverGate.BroadcastNodes, LpaFrontierFraction)
 
-  /** [[labelPropagation]] with the broadcast-round node limit as a
-    * parameter (specs reach the shuffle rounds with 0). */
-  private[ops] def labelPropagation(f: GraphFace, iters: Int, broadcastNodes: Long): DataFrame = {
+  /** A round after the first recomputes only the previous round's
+    * changed neighborhood iff |changed| < this fraction of the nodes
+    * (the frontier rounds in [[labelPropagation]]). */
+  val LpaFrontierFraction: Double = 0.25
+
+  /** [[labelPropagation]] with the broadcast-round node limit and the
+    * frontier fraction as parameters (specs reach the shuffle rounds
+    * with a 0 limit, force dense rounds with fraction 0 and frontier
+    * rounds with a fraction above 1). */
+  private[ops] def labelPropagation(f: GraphFace, iters: Int, broadcastNodes: Long,
+                                    frontierFraction: Double): DataFrame = {
     require(iters >= 1 && iters <= 20, s"labelPropagation: iters must be in [1, 20], got $iters")
     val d = f.driver.map(lpaDriver(f, _, iters))
     if (d.isDefined) return d.get
@@ -409,14 +416,12 @@ object GraphOps {
     // ran ~7% SLOWER than dense (BENCH_SCALE §LPA-FRONTIER); on
     // stabilizing graphs (the common LPA regime past a few rounds) the
     // delta rounds approach free. Hence adaptive: run the frontier
-    // round iff |changed| < frontierFraction · |nodes| (default 0.25,
-    // `spark.graft.lpa.frontierFraction`; 0 disables — the dense A/B
-    // face; the changed-set bookkeeping is a node-sized join per
+    // round iff |changed| < frontierFraction · |nodes|
+    // ([[LpaFrontierFraction]]; 0 disables — the dense A/B face; the
+    // changed-set bookkeeping is a node-sized join per
     // round, noise next to the edge-sized rollup it can retire, and
     // its count is observed by the round's checkpoint). An empty
     // changed set ends the loop — every later round is a no-op.
-    val frontierFraction = f.spark.conf
-      .getOption("spark.graft.lpa.frontierFraction").map(_.toDouble).getOrElse(0.25)
     val useFrontier = frontierFraction > 0
     // Dense-round exchange budget. The naive round pays TWO data-sized
     // exchanges (the (v, label) rollup, then the per-node argmax).

@@ -74,27 +74,28 @@ object Ols {
     * q̂. Rank ⌈q·(n_cal+1)⌉ is clamped to [1, n_cal] (q̂ = max residual
     * when the calibration half is smaller than 1/(1−q)).
     *
-    * Scale shape: one moment pass (fit), one residual pass with the
-    * 1-row coefficient table broadcast, one range exchange for the rank,
+    * Scale shape: the keyed table's checkpoint job observes the fit's
+    * moments, one residual pass reads the coefficients as literals, one
+    * range exchange for the rank,
     * one more broadcast of the 1-row q̂ for coverage. n_cal is a single
     * count() driver scalar (the pmi-totals pattern). No global sort, no
     * window over data. */
   def conformal2(df: DataFrame, id: Column, y: Column, x1: Column,
                  x2: Column, q: Double = 0.9): DataFrame = {
     require(q > 0 && q < 1, s"conformal2: q must be in (0,1), got $q")
-    val keyed = df.select(id.cast("long").as("_id"), y.cast("long").as("_y"),
-        x1.cast("long").as("_x1"), x2.cast("long").as("_x2"))
+    // the residual pass reads the keyed table; its checkpoint job
+    // observes the train half's moments, so the fit is a literal
+    val (keyed, m) = GraftPins.ck(df.select(id.cast("long").as("_id"),
+        y.cast("long").as("_y"), x1.cast("long").as("_x1"), x2.cast("long").as("_x2"))
       .withColumn("_cal",
         conv(substring(md5(col("_id").cast("string").cast("binary")), 1, 13),
-          16, 10).cast("long") % 2 === 1)
-      .localCheckpoint() // read three times: fit, residuals, coverage
-    val fit = fit2(keyed.filter(!col("_cal")),
-      col("_y"), col("_x1"), col("_x2"))
+          16, 10).cast("long") % 2 === 1))(
+      momentAggs(col("_y"), col("_x1"), col("_x2"), keep = Some(!col("_cal"))): _*)
+    val fit = solveFromMoments(GraftPins.withScalars(keyed, m), keyCols = keyed.columns)
     // checkpointed for the calibration rank + train coverage; its job
     // observes the calibration size
-    val (resid, cal) = GraftPins.ck(keyed.crossJoin(broadcast(
-        fit.select(col("n_rows").as("_ntr"), col("b0"), col("b1"), col("b2"))))
-      .select(col("_id"), col("_cal"), col("_ntr"),
+    val (resid, cal) = GraftPins.ck(fit
+      .select(col("_id"), col("_cal"), col("n_rows").as("_ntr"),
         abs(col("_y").cast("double") - (col("b0")
           + col("b1") * col("_x1").cast("double")
           + col("b2") * col("_x2").cast("double"))).as("_resid")))(
@@ -143,22 +144,22 @@ object Ols {
   def conformalPerGroup(df: DataFrame, grp: Column, id: Column, y: Column,
                         x1: Column, x2: Column, q: Double = 0.9): DataFrame = {
     require(q > 0 && q < 1, s"conformalPerGroup: q must be in (0,1), got $q")
-    val keyed = df.select(grp.cast("string").as("_g"), id.cast("long").as("_id"),
+    // read three times: fit, residuals, coverage
+    val keyed = GraftPins.cut(df.select(grp.cast("string").as("_g"), id.cast("long").as("_id"),
         y.cast("long").as("_y"), x1.cast("long").as("_x1"), x2.cast("long").as("_x2"))
       .withColumn("_cal",
         conv(substring(md5(col("_id").cast("string").cast("binary")), 1, 13),
-          16, 10).cast("long") % 2 === 1)
-      .localCheckpoint() // read three times: fit, residuals, coverage
+          16, 10).cast("long") % 2 === 1))
     val fits = fit2PerGroup(keyed.filter(!col("_cal")), "_g",
       col("_y"), col("_x1"), col("_x2"))
-    val resid = keyed.join(broadcast(
+    // calibration grid + train coverage
+    val resid = GraftPins.cut(keyed.join(broadcast(
         fits.select(col("_g"), col("n_rows").as("_ntr"),
           col("b0"), col("b1"), col("b2"))), "_g")
       .select(col("_g"), col("_id"), col("_cal"), col("_ntr"),
         abs(col("_y").cast("double") - (col("b0")
           + col("b1") * col("_x1").cast("double")
-          + col("b2") * col("_x2").cast("double"))).as("_resid"))
-      .localCheckpoint() // calibration grid + train coverage
+          + col("b2") * col("_x2").cast("double"))).as("_resid")))
     val qhat = Relational
       .groupedValueRanks(resid.filter(col("_cal")).select(col("_g"), col("_resid")),
         "_g", "_resid")
@@ -182,15 +183,24 @@ object Ols {
 
   private def moments(df: DataFrame, y: Column, x1: Column, x2: Column,
                       groupCols: Seq[String]): DataFrame = {
+    val aggs = momentAggs(y, x1, x2)
+    df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The 9 moment sums over the rows where `keep` holds (all rows by
+    * default). */
+  private def momentAggs(y: Column, x1: Column, x2: Column,
+                         keep: Option[Column] = None): Seq[Column] = {
+    def k(c: Column): Column = keep.fold(c)(when(_, c))
     // widen BEFORE multiplying: the per-row product of two DECIMAL(19,0)
     // longs is exact in DECIMAL(38,0) (max |long|² < 8.6e37), and the
     // DECIMAL sums NULL on overflow instead of wrapping the way BIGINT
     // sums do in non-ANSI mode — overflow is a visible witness, not a
     // plausible-looking wrong coefficient.
-    def w(c: Column): Column = c.cast("long").cast("decimal(19,0)")
+    def w(c: Column): Column = k(c.cast("long").cast("decimal(19,0)"))
     val (yd, x1d, x2d) = (w(y), w(x1), w(x2))
-    df.groupBy(groupCols.map(col): _*).agg(
-      count(lit(1)).as("s00"),
+    Seq(
+      count(k(lit(1))).as("s00"),
       sum(x1d).as("s01"),
       sum(x2d).as("s02"),
       sum(x1d * x1d).as("s11"),

@@ -103,19 +103,15 @@ object PageRankOp {
     * checkpointed tables with GraftPins so between-query pinned-block
     * sweeps (graft.Bench) don't destroy the shared face. */
   def prepare(edges: DataFrame, src: String, dst: String,
-              pinned: Boolean = false): PreparedGraph = {
-    val g = buildGraph(edges, src, dst)
-    if (pinned) {
-      GraftPins.pin(g.e)
-      GraftPins.pin(g.nodes)
-    }
-    new PreparedGraph(g)
-  }
+              pinned: Boolean = false): PreparedGraph =
+    new PreparedGraph(buildGraph(edges, src, dst, pinned = pinned))
 
   /** `broadcastNodes` is the broadcast-round node limit (specs reach
-    * the shuffle rounds with 0). */
+    * the shuffle rounds with 0); `pinned` pins the graph's checkpoints
+    * ([[GraftPins.ck]]). */
   private[ops] def buildGraph(edges: DataFrame, src: String, dst: String,
-                              broadcastNodes: Long = DriverGate.BroadcastNodes): Graph = {
+                              broadcastNodes: Long = DriverGate.BroadcastNodes,
+                              pinned: Boolean = false): Graph = {
     // Materialize the edge list and the node set with its out-degrees
     // ONCE: every iteration reads both, and without the checkpoint
     // Catalyst re-derives the (possibly expensive) upstream edge plan
@@ -131,14 +127,14 @@ object PageRankOp {
     // are observed by their table's own checkpoint job.
     val (e0, eSt) = GraftPins.ck(edges
       .select(col(src).cast("long").as("_src"), col(dst).cast("long").as("_dst"))
-      .repartition(col("_dst")), keepLayout = true)(count(lit(1)).as("n"))
+      .repartition(col("_dst")), keepLayout = true, pinned = pinned)(count(lit(1)).as("n"))
     // the out-degree joins co-partitioned (both sides node-keyed); a
     // node without out-edges (or the NULL node) keeps _deg NULL
     val deg = e0.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
     val (nodes, nSt) = GraftPins.ck(e0.select(col("_src").as("node"))
       .union(e0.select(col("_dst").as("node"))).distinct()
       .join(deg.hint("shuffle_hash"), col("node") === col("_src"), "left")
-      .select(col("node"), col("_deg")), keepLayout = true)(
+      .select(col("node"), col("_deg")), keepLayout = true, pinned = pinned)(
       count(lit(1)).as("n"), count(when(col("_deg").isNull, 1)).as("dangling"))
     val nN: Long = nSt.getLong(0)
     val tiny = DriverGate.admits(spark, "pagerank_nodes", DriverGate.PageRankNodes, nN) &&
@@ -147,7 +143,7 @@ object PageRankOp {
     val e =
       if (broadcastRounds || tiny) e0
       else {
-        val r = GraftPins.ck(e0.repartition(col("_src")), keepLayout = true)()._1
+        val r = GraftPins.cut(e0.repartition(col("_src")), keepLayout = true, pinned)
         // e0's blocks are dead once the relayout is materialized
         GraftPins.unpin(e0)
         r

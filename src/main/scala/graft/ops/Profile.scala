@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Table profiling and categorical statistics — the ANALYZE-side of an
   * analytics engine: column statistics for planning/data-quality
@@ -197,9 +198,8 @@ object Profile {
     // there), so the full-grid densification never re-scans the data —
     // measured 1.9x at 10x with the three-scan formulation, linear-in-
     // grid after this cut
-    val observed = df.groupBy(col(colA).as("a"), col(colB).as("b"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+    val observed = GraftPins.cut(df.groupBy(col(colA).as("a"), col(colB).as("b"))
+      .agg(count(lit(1)).as("o")))
     val cells = observed.select(col("a")).distinct()
       .crossJoin(observed.select(col("b")).distinct())
       .join(observed, Seq("a", "b"), "left")
@@ -359,8 +359,7 @@ object Profile {
     * 4.42s at sf0.1 (BENCH_SF01_SPEAR_B_SOLO_r10.json). */
   private def spearmanRanksPerColumn(df: DataFrame, cols: Seq[String],
                                      ix: String => Column): DataFrame = {
-    val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
-      .localCheckpoint()
+    val keyed = GraftPins.cut(df.select(cols.map(c => ix(c).as(s"_v_$c")): _*))
     var ranked = keyed
     for (c <- cols) {
       val grid = keyed.groupBy(col(s"_v_$c")).agg(count(lit(1)).as("_cnt"))

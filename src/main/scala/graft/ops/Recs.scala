@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Neighborhood-based recommendation primitives: item-item
   * collaborative filtering over co-occurrence baskets (Sarwar et al.,
@@ -49,11 +50,11 @@ object Recs {
     require(minCo >= 1, s"itemCf: minCo must be >= 1, got $minCo")
     require(maxBasket >= 2, s"itemCf: maxBasket must be >= 2, got $maxBasket")
     val renamed = lineitem.select(col(basketCol).as("ok"), col(itemCol).as("item"))
-    val bi0 = if (assumeDistinct) renamed else renamed.distinct().localCheckpoint()
+    val bi0 = if (assumeDistinct) renamed else GraftPins.cut(renamed.distinct())
     // skew fuse: drop baskets whose pair cost would be quadratic-pathological
     val big = bi0.groupBy(col("ok")).agg(count(lit(1)).as("bs"))
       .where(col("bs") > maxBasket).select(col("ok"))
-    val bi = bi0.join(big, Seq("ok"), "left_anti").localCheckpoint()
+    val bi = GraftPins.cut(bi0.join(big, Seq("ok"), "left_anti"))
     val itemCnt = bi.groupBy(col("item")).agg(count(lit(1)).as("c"))
     val pairs = bi.as("a").join(bi.as("b"),
         col("a.ok") === col("b.ok") && col("a.item") < col("b.item"))

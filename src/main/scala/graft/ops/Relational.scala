@@ -128,10 +128,9 @@ object Relational {
     * DECIMAL(18,4) ([[dsum]] discipline) with zero-fill applied in
     * decimal before the final double cast. */
   def calendarFillDaily(orders: DataFrame): DataFrame = {
-    val rollup = orders
+    val rollup = GraftPins.cut(orders
       .groupBy(to_date(col("o_orderdate")).as("day"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), sum(col("o_totalprice").cast("decimal(18,4)")).as("rev"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n"), sum(col("o_totalprice").cast("decimal(18,4)")).as("rev")))
     val bounds = rollup.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val days = bounds.select(explode(sequence(col("d0"), col("d1"))).as("day"))
     val prios = rollup.select(col("o_orderpriority")).distinct()
@@ -181,40 +180,75 @@ object Relational {
     * therefore the same rank. */
   def exactNtile(df: DataFrame, nBuckets: Int, orderCols: Seq[String],
                  out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nBuckets > 0, s"exactNtile: nBuckets must be > 0, got $nBuckets")
-    require(!df.columns.contains(out) && !df.columns.contains("_pid"),
-      s"exactNtile: input already carries '$out' or '_pid'")
+    rangeRun("exactNtile", df, orderCols.map(col), out, count(lit(1)), 0L, _ + _) {
+      (w, offset, n) =>
+        val base = n / nBuckets
+        val rem = n % nBuckets
+        val rank = row_number().over(w).cast("long") + offset
+        val bucket =
+          if (base == 0) rank
+          else when(rank <= lit((base + 1) * rem),
+              (rank - 1) / lit(base + 1) + 1)
+            .otherwise(lit(rem) + (rank - 1 - lit((base + 1) * rem)) / lit(base) + 1)
+        bucket.cast("long")
+    }._1
+  }
+
+  /** The two-phase range scan behind [[exactNtile]], [[prefixSum]],
+    * [[prefixMax]], [[globalRank]] and Corpus' `packShards` /
+    * `packSequences` — a global order with no single-partition sort:
+    * range-shuffle `df` on `orderCols` into `numPartitions` (default:
+    * the session's shuffle partitions) partitions, sorted within, tag
+    * each row with its partition `_pid` (baked into the rows, so a
+    * later coalesce cannot rename it) and checkpoint that once
+    * (AQE-off: one job, the range layout kept). Then collect the
+    * partial aggregate `part` (a LONG) per (`_pid`, `stratum`) —
+    * nPart·|strata| rows, driver-tiny, one AQE-off job over the
+    * checkpoint — and fold each stratum's partials in partition order
+    * from `zero` with `op`: the result is each slice's starting offset,
+    * keyed (pid, stratum value; null without a stratum), plus the fold
+    * of every partial (the row count when `part` counts). */
+  private[graft] def rangeScan(df: DataFrame, orderCols: Seq[Column], part: Column,
+                               zero: Long, op: (Long, Long) => Long,
+                               stratum: Option[Column] = None, numPartitions: Int = 0)
+      : (DataFrame, Map[(Int, Any), Long], Long) = {
     val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val ord = orderCols.map(col)
-    val ranged = df.repartitionByRange(nPart, ord: _*)
-      .sortWithinPartitions(ord: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    val subs = ranged.groupBy(col("_pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = subs.map(_._2).sum
-    val offsets = subs.map(_._1).zip(subs.map(_._2).scanLeft(0L)(_ + _).init)
-    val offsetCol =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(
-        map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*), col("_pid"))
-    val base = n / nBuckets
-    val rem = n % nBuckets
-    val rank = row_number().over(
-      Window.partitionBy(col("_pid")).orderBy(ord: _*)).cast("long") + offsetCol
-    val bucket =
-      if (base == 0) rank
-      else when(rank <= lit((base + 1) * rem),
-          (rank - 1) / lit(base + 1) + 1)
-        .otherwise(lit(rem) + (rank - 1 - lit((base + 1) * rem)) / lit(base) + 1)
-    // materialize BEFORE releasing the persisted rank input (lazy
-    // consumers would otherwise recompute the range shuffle)
-    val outDf = ranged.withColumn(out, bucket.cast("long")).drop("_pid")
-      .localCheckpoint()
-    ranged.unpersist(false)
-    outDf
+    val nPart = if (numPartitions > 0) numPartitions
+      else spark.sessionState.conf.numShufflePartitions
+    val ranged = GraftPins.cut(df.repartitionByRange(nPart, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+      .withColumn("_pid", spark_partition_id()), keepLayout = true)
+    val keys = col("_pid") +: stratum.map(_.as("_stratum")).toSeq
+    val subs = GraftPins.withAqeOff(spark)(ranged.groupBy(keys: _*).agg(part).collect())
+      .map(r => (r.getInt(0), if (stratum.isEmpty) null else r.get(1), r.getLong(keys.size)))
+    val offsets = subs.groupBy(_._2).values.flatMap { rows =>
+      val inOrder = rows.sortBy(_._1)
+      inOrder.map(r => (r._1, r._2)).zip(inOrder.map(_._3).scanLeft(zero)(op).init)
+    }.toMap
+    (ranged, offsets, subs.map(_._3).foldLeft(zero)(op))
+  }
+
+  /** [[rangeScan]] with one output column: `value(w, offset, total)`
+    * gets the per-partition window `w` (partitioned by `_pid`,
+    * ordered by `orderCols`), the partition's starting offset as a
+    * column and the fold of all partials; the result is checkpointed
+    * (AQE-off: the `_pid` exchange, window and write are one job). */
+  private def rangeRun(name: String, df: DataFrame, orderCols: Seq[Column], out: String,
+                       part: Column, zero: Long, op: (Long, Long) => Long)(
+      value: (org.apache.spark.sql.expressions.WindowSpec, Column, Long) => Column)
+      : (DataFrame, Long) = {
+    import org.apache.spark.sql.expressions.Window
+    require(!df.columns.contains(out) && !df.columns.contains("_pid"),
+      s"$name: input already carries '$out' or '_pid'")
+    val (ranged, offsets, total) = rangeScan(df, orderCols, part, zero, op)
+    val offset =
+      if (offsets.isEmpty) lit(zero)
+      else element_at(map(offsets.toSeq.sortBy(_._1._1)
+        .flatMap { case ((p, _), o) => Seq(lit(p), lit(o)) }: _*), col("_pid"))
+    val w = Window.partitionBy(col("_pid")).orderBy(orderCols: _*)
+    (GraftPins.cut(ranged.withColumn(out, value(w, offset, total)).drop("_pid"),
+      keepLayout = true), total)
   }
 
   /** Cohort LTV (lifetime-value) matrix — the subscription-analytics
@@ -277,10 +311,10 @@ object Relational {
     *
     * Tiny inputs (≤ [[DriverGate.PrefixSumRows]] — value GRIDS, not
     * data: spearman's rounded-quantity grid is 50 rows, the discount
-    * grid 11) skip the whole range machinery: the
-    * big path costs ~4 scheduled jobs per call (range sampling,
-    * subtotal collect, output checkpoint — each executing the input
-    * once more), which on a grid-sized input is pure scheduling (the
+    * grid 11) skip the whole range machinery: the big path
+    * ([[rangeScan]]) costs ~4 scheduled jobs per call (range sampling,
+    * range checkpoint, subtotal collect, output checkpoint), which on a
+    * grid-sized input is pure scheduling (the
     * r15 spearman probe: 3 prefixSums ≈ half the row's fixed
     * overhead). The tiny path checkpoints the input once (the same job
     * observes its row count), and returns a LAZY single-partition
@@ -304,27 +338,10 @@ object Relational {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       return in.withColumn(out, sum(col(valCol)).over(wAll).cast("long"))
     }
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val ranged = in.repartitionByRange(nPart, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    val subs = ranged.groupBy(col("_pid"))
-      .agg(sum(col(valCol)).cast("long").as("s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = subs.map(_._1).zip(subs.map(_._2).scanLeft(0L)(_ + _).init)
-    val offsetCol =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(
-        map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*), col("_pid"))
-    val wRun = Window.partitionBy(col("_pid")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outDf = ranged
-      .withColumn(out, sum(col(valCol)).over(wRun).cast("long") + offsetCol)
-      .drop("_pid")
-      .localCheckpoint()
-    ranged.unpersist(false)
-    outDf
+    rangeRun("prefixSum", in, orderCols, out, sum(col(valCol)).cast("long"), 0L, _ + _) {
+      (w, offset, _) => sum(col(valCol)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long") + offset
+    }._1
   }
 
   /** Distributed exact prefix MAX over a total order — [[prefixSum]]'s
@@ -338,31 +355,11 @@ object Relational {
   def prefixMax(df: DataFrame, orderCols: Seq[Column], valCol: String,
                 out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(!df.columns.contains(out) && !df.columns.contains("_pid"),
-      s"prefixMax: input already carries '$out' or '_pid'")
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nPart, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    val subs = ranged.groupBy(col("_pid"))
-      .agg(max(col(valCol)).cast("long").as("m"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = subs.map(_._1).zip(
-      subs.map(_._2).scanLeft(Long.MinValue)(math.max).init)
-    val offsetCol =
-      if (offsets.isEmpty) lit(Long.MinValue)
-      else element_at(
-        map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*), col("_pid"))
-    val wRun = Window.partitionBy(col("_pid")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outDf = ranged
-      .withColumn(out, greatest(max(col(valCol)).over(wRun).cast("long"), offsetCol))
-      .drop("_pid")
-      .localCheckpoint()
-    ranged.unpersist(false)
-    outDf
+    rangeRun("prefixMax", df, orderCols, out, max(col(valCol)).cast("long"), Long.MinValue,
+      math.max) { (w, offset, _) =>
+      greatest(max(col(valCol)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"), offset)
+    }._1
   }
 
   /** Distributed exact global rank over a total order — the third
@@ -371,31 +368,16 @@ object Relational {
     * 1-based rank): range shuffle, parallel per-partition row_numbers,
     * driver-tiny per-partition counts folded into broadcast offsets.
     * Same total-order contract (include a unique id). */
-  def globalRank(df: DataFrame, orderCols: Seq[Column], out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(!df.columns.contains(out) && !df.columns.contains("_pid"),
-      s"globalRank: input already carries '$out' or '_pid'")
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nPart, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
-    val subs = ranged.groupBy(col("_pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = subs.map(_._1).zip(subs.map(_._2).scanLeft(0L)(_ + _).init)
-    val offsetCol =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(
-        map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*), col("_pid"))
-    val wRun = Window.partitionBy(col("_pid")).orderBy(orderCols: _*)
-    val outDf = ranged
-      .withColumn(out, row_number().over(wRun).cast("long") + offsetCol)
-      .drop("_pid")
-      .localCheckpoint()
-    ranged.unpersist(false)
-    outDf
-  }
+  def globalRank(df: DataFrame, orderCols: Seq[Column], out: String): DataFrame =
+    globalRankN(df, orderCols, out)._1
+
+  /** [[globalRank]] and its row count, which the subtotal collect
+    * already holds (no job of its own). */
+  private[graft] def globalRankN(df: DataFrame, orderCols: Seq[Column],
+                                 out: String): (DataFrame, Long) =
+    rangeRun("globalRank", df, orderCols, out, count(lit(1)), 0L, _ + _) {
+      (w, offset, _) => row_number().over(w).cast("long") + offset
+    }
 
   /** Customer revenue concentration — the exact Gini coefficient of
     * lifetime revenue across customers (the "do 1% of accounts carry
@@ -440,23 +422,20 @@ object Relational {
     * never an order-dependent double fold.
     *
     * Scale shape: one map-side-combined exchange collapses orders to
-    * customers; the total is a broadcast 1-row crossJoin; the term
-    * rollup is a second map-side-combined aggregation. No window, no
-    * sort, no global single partition anywhere.
+    * customers; the total is observed by the customer table's
+    * checkpoint job and read as a literal; the term rollup is a second
+    * map-side-combined aggregation. No window, no sort, no global
+    * single partition anywhere.
     *
     * Output: one row — `n_customers`, `theil` (6 dp),
     * `theil_norm` (6 dp). */
   def theilRevenue(orders: DataFrame): DataFrame = {
-    // checkpointed (the globalRank precedent): the total AND the term
-    // pass both read the customer table — without the cut, each branch
-    // re-scans orders and re-runs the customer exchange
-    val rev = orders.groupBy(col("o_custkey"))
+    // checkpointed once; its job observes the total the term pass reads
+    val (rev, tot) = GraftPins.ck(orders.groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).cast("long").as("cents"))
-      .filter(col("cents") > 0) // 0·ln 0 is NaN; zero-mass holders carry no entropy
-      .localCheckpoint()
-    val tot = rev.agg(count(lit(1)).as("n"),
-      sum(col("cents")).cast("decimal(38,0)").as("s"))
-    rev.crossJoin(broadcast(tot))
+      .filter(col("cents") > 0))( // 0·ln 0 is NaN; zero-mass holders carry no entropy
+      count(lit(1)).as("n"), sum(col("cents")).cast("decimal(38,0)").as("s"))
+    GraftPins.withScalars(rev, tot)
       .select(col("n"),
         round((col("cents").cast("double") * col("n") / col("s").cast("double")) *
             log(col("cents").cast("double") * col("n") / col("s").cast("double")), 6)
@@ -486,30 +465,29 @@ object Relational {
     *
     * Scale shape: one customer-key exchange (map-side combined), the
     * nation dim broadcast, the group table broadcast back into the
-    * term pass (|nations| rows), two grid-sized rollups. Output per
+    * term pass (|nations| rows), two grid-sized rollups; the grand
+    * totals are observed by the group table's checkpoint job. Output per
     * nation: `nationkey`, `n_customers`, `income_share`,
     * `theil_within`, `between_term` (all 6 dp). */
   def theilDecomposition(orders: DataFrame, customer: DataFrame): DataFrame = {
-    val rev = orders.groupBy(col("o_custkey"))
+    // group totals AND the term pass read it
+    val rev = GraftPins.cut(orders.groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).cast("long").as("cents"))
       .filter(col("cents") > 0)
       .join(broadcast(customer.select(col("c_custkey"),
         col("c_nationkey").cast("int").as("nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .select(col("nationkey"), col("cents"))
-      .localCheckpoint() // group totals AND the term pass read it
-    val g = rev.groupBy(col("nationkey"))
-      .agg(count(lit(1)).as("ng"), sum(col("cents")).cast("decimal(38,0)").as("sg"))
-      .localCheckpoint()
-    val tot = g.agg(sum(col("ng")).cast("long").as("n"),
-      sum(col("sg")).cast("decimal(38,0)").as("s"))
+      .select(col("nationkey"), col("cents")))
+    val (g, tot) = GraftPins.ck(rev.groupBy(col("nationkey"))
+      .agg(count(lit(1)).as("ng"), sum(col("cents")).cast("decimal(38,0)").as("sg")))(
+      sum(col("ng")).cast("long").as("n"), sum(col("sg")).cast("decimal(38,0)").as("s"))
     val terms = rev.join(broadcast(g), Seq("nationkey"))
       .select(col("nationkey"),
         round((col("cents").cast("double") * col("ng") / col("sg").cast("double")) *
           log(col("cents").cast("double") * col("ng") / col("sg").cast("double")), 6)
           .cast("decimal(18,6)").as("term"))
       .groupBy(col("nationkey")).agg(sum(col("term")).as("tsum"))
-    g.join(terms, Seq("nationkey")).crossJoin(broadcast(tot))
+    GraftPins.withScalars(g.join(terms, Seq("nationkey")), tot)
       .select(col("nationkey"), col("ng").as("n_customers"),
         round(col("sg").cast("double") / col("s").cast("double"), 6).as("income_share"),
         round(col("tsum").cast("double") / col("ng"), 6).as("theil_within"),
@@ -528,8 +506,9 @@ object Relational {
     * [[prefixSum]] over (revenue desc, partkey) — parts are
     * data-sized in a real catalog, so no single-partition window —
     * and the class cuts compare exact integer cents cross-multiplied
-    * against the broadcast 1-row total (cum·5 ≤ tot·4 IS share ≤ 0.8:
-    * no float share ever decides a boundary).
+    * against the total, observed by the running sum's checkpoint job
+    * (cum·5 ≤ tot·4 IS share ≤ 0.8: no float share ever decides a
+    * boundary).
     *
     * Output: one row per class — `abc_class`, `n_parts`, `revenue`
     * (2 dp), `share` (6 dp). */
@@ -537,9 +516,10 @@ object Relational {
     val rev = lineitem.groupBy(col("l_partkey"))
       .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
         .cast("long")).as("cents"))
-    val cum = prefixSum(rev, Seq(col("cents").desc, col("l_partkey")), "cents", "cum")
-    val tot = cum.agg(max(col("cum")).as("tot"))
-    cum.crossJoin(broadcast(tot))
+    val (cum, tot) = GraftPins.ck(
+      prefixSum(rev, Seq(col("cents").desc, col("l_partkey")), "cents", "cum"))(
+      max(col("cum")).as("tot"))
+    GraftPins.withScalars(cum, tot)
       .withColumn("abc_class",
         when(col("cum") * 5 <= col("tot") * 4, lit("A"))
           .when(col("cum") * 20 <= col("tot") * 19, lit("B"))
@@ -578,12 +558,11 @@ object Relational {
       .where(col("gap").isNotNull)
     val grid = gaps.groupBy(col("gap")).agg(count(lit(1)).as("cnt"))
     val wg = Window.orderBy(col("gap")) // grid-sized: bounded by the day domain
-    val run = grid.withColumn("rc", sum(col("cnt")).over(
-      wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint() // grid-sized; serves the totals AND the rank stats
-
-    val tot = run.agg(max(col("rc")).as("n"), sum(col("gap") * col("cnt")).as("gs"))
-    run.crossJoin(broadcast(tot))
+    // grid-sized; its job observes the totals the rank stats read
+    val (run, tot) = GraftPins.ck(grid.withColumn("rc", sum(col("cnt")).over(
+      wg.rowsBetween(Window.unboundedPreceding, Window.currentRow))))(
+      max(col("rc")).as("n"), sum(col("gap") * col("cnt")).as("gs"))
+    GraftPins.withScalars(run, tot)
       .agg(
         max(col("n")).as("n_gaps"),
         round(max(col("gs")).cast("double") / max(col("n")), 6).as("mean_gap"),
@@ -609,9 +588,10 @@ object Relational {
     * at-risk counts are exact window-cumulated integers.
     *
     * Scale shape: ONE custkey exchange collapses orders to the
-    * checkpointed per-customer (first, last) table; the horizon, the
-    * population size and the lifetimes all derive from that table
-    * (orders is never re-scanned), and everything after lives on the
+    * checkpointed per-customer (first, last) table; the horizon (observed
+    * by its checkpoint job) and the lifetimes derive from that table
+    * (orders is never re-scanned), the population size from the
+    * duration grid's checkpoint job, and everything after lives on the
     * duration grid (bounded by the day domain) — cumulative at-risk
     * via a grid window, the sequential KM product as a day-array
     * `aggregate()` fold that EMITS the running curve (the
@@ -623,24 +603,23 @@ object Relational {
   def kmSurvival(orders: DataFrame, censorDays: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(censorDays >= 0, s"kmSurvival: censorDays must be >= 0, got $censorDays")
-    val perCust = orders
+    // one custkey exchange serves lifetimes; its job observes the horizon
+    val (perCust, horizon) = GraftPins.ck(orders
       .groupBy(col("o_custkey"))
       .agg(min(to_date(col("o_orderdate"))).as("first"),
-        max(to_date(col("o_orderdate"))).as("last"))
-      .localCheckpoint() // one custkey exchange serves horizon, N and lifetimes
-    val horizon = perCust.agg(max(col("last")).as("dmax"))
-    val life = perCust.crossJoin(broadcast(horizon))
+        max(to_date(col("o_orderdate"))).as("last")))(max(col("last")).as("dmax"))
+    val life = GraftPins.withScalars(perCust, horizon)
       .select(datediff(col("last"), col("first")).as("t"),
         when(datediff(col("dmax"), col("last")) > censorDays, 1L).otherwise(0L)
           .as("event"))
-    val grid = life.groupBy(col("t"))
-      .agg(count(lit(1)).cast("long").as("tot"), sum(col("event")).as("d"))
-      .localCheckpoint() // grid-sized; serves N, at-risk and the fold
+    // grid-sized; serves at-risk and the fold, its job observes N
+    val (grid, n) = GraftPins.ck(life.groupBy(col("t"))
+      .agg(count(lit(1)).cast("long").as("tot"), sum(col("event")).as("d")))(
+      sum(col("tot")).cast("long").as("n"))
     val wg = Window.orderBy(col("t")) // grid-sized: bounded by the day domain
-    val risked = grid
+    val risked = GraftPins.withScalars(grid
       .withColumn("before", coalesce(sum(col("tot")).over(
-        wg.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .crossJoin(broadcast(grid.agg(sum(col("tot")).cast("long").as("n"))))
+        wg.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))), n)
       .select(col("t"), (col("n") - col("before")).as("risk"), col("d"))
       .where(col("d") > 0)
     val arr = risked

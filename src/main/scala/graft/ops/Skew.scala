@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Skew mitigation for shuffled equi-joins.
   *
@@ -94,30 +95,29 @@ object Skew {
     * `top_share` name the hottest key's output share — the straggler
     * and the salting decision in one number.
     *
-    * Both count tables are localCheckpointed: each feeds its 1-row
-    * total AND the matched-key join — without the materialization the
-    * data-sized scan+agg would run twice per side. The count-table
-    * join reuses the groupBy's hash partitioning (no extra exchange);
-    * totals ride broadcast-scalar crossJoins (the house 1-row-sidecar
-    * pattern). Products/sums are exact DECIMAL(38,0); the one double
-    * is the final top_share divide. */
+    * Both count tables are checkpointed: each feeds the matched-key
+    * join, and its checkpoint job observes its 1-row total — without
+    * the materialization the data-sized scan+agg would run twice per
+    * side. The count-table join reuses the groupBy's hash partitioning
+    * (no extra exchange). Products/sums are exact DECIMAL(38,0); the
+    * one double is the final top_share divide. */
   def joinSizeEstimate(left: DataFrame, leftKey: String,
                        right: DataFrame, rightKey: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val lc = left.select(col(leftKey).as("k")).groupBy(col("k"))
-      .agg(count(lit(1)).as("cl")).localCheckpoint()
-    val rc = right.select(col(rightKey).as("k")).groupBy(col("k"))
-      .agg(count(lit(1)).as("cr")).localCheckpoint()
-    val lt = lc.agg(coalesce(sum(col("cl")), lit(0L)).cast("bigint").as("left_rows"),
+    val (lc, lt) = GraftPins.ck(left.select(col(leftKey).as("k")).groupBy(col("k"))
+      .agg(count(lit(1)).as("cl")))(
+      coalesce(sum(col("cl")), lit(0L)).cast("bigint").as("left_rows"),
       count(lit(1)).as("left_keys"))
-    val rt = rc.agg(coalesce(sum(col("cr")), lit(0L)).cast("bigint").as("right_rows"),
+    val (rc, rt) = GraftPins.ck(right.select(col(rightKey).as("k")).groupBy(col("k"))
+      .agg(count(lit(1)).as("cr")))(
+      coalesce(sum(col("cr")), lit(0L)).cast("bigint").as("right_rows"),
       count(lit(1)).as("right_keys"))
     val j = lc.join(rc, "k")
       .agg(count(lit(1)).as("matched_keys"),
         coalesce(sum(col("cl").cast(dec) * col("cr").cast(dec)), lit(0).cast(dec))
           .cast(dec).as("est"),
         max(col("cl").cast(dec) * col("cr").cast(dec)).as("mx"))
-    lt.crossJoin(rt).crossJoin(j)
+    GraftPins.withScalars(j, lt, rt)
       .select(col("left_rows"), col("left_keys"), col("right_rows"),
         col("right_keys"), col("matched_keys"),
         col("est").cast("bigint").as("est_rows"),

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -319,10 +320,9 @@ object Similarity {
       graft.dedup.Dedup.md5Hash60(
         concat(lit(s"$saltPrefix$s:"), col(idCol).cast("string"))).as("_draw"),
       slice(col("v"), s * sub + 1, sub).as("sv"))): _*)
-    val ex = v.select(col(idCol).as("_id"), explode(pieces).as("e"))
+    val ex = GraftPins.cut(v.select(col(idCol).as("_id"), explode(pieces).as("e"))
       .select(col("_id"), col("e.s").as("s"), col("e._draw").as("_draw"),
-        col("e.sv").as("sv"))
-      .localCheckpoint()
+        col("e.sv").as("sv")))
     val seedRows = ex
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("s")).orderBy(col("_draw"), col("_id"))))
@@ -1397,7 +1397,7 @@ object Similarity {
     * 6 dp. At scale the cost is the probes — the eval adds nothing. */
   def annRecall(emb: DataFrame, queryId: Long, dim: Int, k: Int = 20,
                 nLists: Int = 4, iters: Int = 2): DataFrame = {
-    val bf = knnBruteForce(emb, queryId, k).select(col("vec_id")).localCheckpoint()
+    val bf = GraftPins.cut(knnBruteForce(emb, queryId, k).select(col("vec_id")))
     def hits(probe: DataFrame, out: String): DataFrame =
       probe.select(col("vec_id")).join(broadcast(bf), Seq("vec_id"))
         .agg(count(lit(1)).as(out))

@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming corpus ingest: the pretraining-data preparation flow
@@ -138,7 +139,7 @@ object CorpusStream {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val chunks = graft.corpus.Corpus.cdcChunks(batch, avgChunk).localCheckpoint()
+        val chunks = GraftPins.cut(graft.corpus.Corpus.cdcChunks(batch, avgChunk))
         val known =
           if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexPath)))
             spark.read.parquet(indexPath)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import graft.etl.Scd
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SCD type-2 dimension maintenance: a CDC update stream
@@ -103,8 +104,8 @@ object DimStream {
         .withColumn("valid_from", ts)
         .withColumn("valid_to", when(lit(false), ts))
         .withColumn("is_current", lit(true)))
-    val merged = Scd.scd2Merge(dim, compacted, key, tracked, ts)
-      .localCheckpoint() // materialize before touching either dir
+    // materialize before touching either dir
+    val merged = GraftPins.cut(Scd.scd2Merge(dim, compacted, key, tracked, ts))
     merged.filter(!col("is_current"))
       .withColumn("_batch_id", lit(batchId))
       .write.mode("overwrite")

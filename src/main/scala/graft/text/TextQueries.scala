@@ -2,6 +2,7 @@ package graft.text
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftPins
 
 /** Catalog entries for the text-analysis tier, over `documents`.
   * Oracles mirror the exact integer/regex arithmetic in DuckDB —
@@ -408,11 +409,10 @@ object TextQueries {
   val cohensKappa: Q = Q(
     "x_cohens_kappa",
     (s, d) => {
-      val cells = Tables.documents(s, d)
+      // tiny; read by the marginals, its job observes the totals
+      val (cells, tot) = GraftPins.ck(Tables.documents(s, d)
         .select(col("lang").as("a"), TextAnalysis.detectLang(col("text")).as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n"))
-        .localCheckpoint() // tiny; read by three aggregates below
-      val tot = cells.agg(
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n")))(
         sum(col("n")).cast("long").as("n_rows"),
         coalesce(sum(when(col("a") === col("b"), col("n"))), lit(0L))
           .cast("long").as("n_agree"))
@@ -423,7 +423,7 @@ object TextQueries {
           * col("_cm").cast("decimal(19,0)")), lit(0).cast("decimal(38,0)"))
           .cast("decimal(38,0)").as("_pes"))
       val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-      tot.crossJoin(pes).select(
+      GraftPins.withScalars(pes, tot).select(
         col("n_rows"), col("n_agree"),
         round(col("n_agree").cast("double") / col("n_rows"), 6).as("po"),
         round(col("_pes").cast("double")

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graftext
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
+import org.apache.spark.sql.functions.{col, lit}
 
-/** Registry of DURABLE checkpointed datasets — shared faces a workload
-  * builds once per dataset and reuses across queries (the
+/** The engine's one materialization primitive ([[GraftPins.ck]] and
+  * its short form [[GraftPins.cut]]) and the registry of DURABLE
+  * checkpointed datasets — shared faces a workload builds once per
+  * dataset and reuses across queries (the
   * [[graft.ops.GraphOps.GraphFace]] cache). A benchmark harness
   * that sweeps leftover pinned blocks between queries (unpersisting
   * every `getPersistentRDDs` entry — the right hygiene for per-query
@@ -57,32 +60,58 @@ object GraftPins {
     case _ => None
   }
 
-  /** The one checkpoint primitive: eagerly checkpoint `df` and return
-    * the checkpoint with the named aggregates `metrics`, observed by
-    * the SAME job that writes it — a loop round's convergence scalar
-    * (or a build's row count) then costs no job of its own, where a
-    * `count()`/`agg(...).collect()` on the fresh checkpoint schedules
-    * one more (two under AQE). The returned row holds the metrics in
-    * order (`Row.empty` when none are asked); aggregates see the same
-    * rows a separate `agg` would, empty inputs included (`count` 0,
-    * `sum` NULL). DISTINCT aggregates are not observable (Spark
-    * rejects them).
+  /** The one checkpoint primitive — every materialization in main goes
+    * through it (a source-scan spec keeps it that way). It eagerly
+    * checkpoints `df` and returns the checkpoint with the named
+    * aggregates `metrics`, observed by the SAME job that writes it.
+    * The policy, one argument each:
+    *  - local or reliable: a `localCheckpoint()` by default;
+    *    `reliable` writes a `checkpoint()` into the context's
+    *    checkpoint dir instead (executor loss cannot lose it).
+    *  - layout: `keepLayout` materializes AQE-off ([[withAqeOff]]),
+    *    so the checkpoint keeps the physical partitioning downstream
+    *    joins ride, and the whole write is one job instead of one per
+    *    shuffle stage.
+    *  - pin: `pinned` registers the checkpoint as a durable face
+    *    ([[pin]]) that between-query sweeps must skip.
+    *  - observed scalars: a loop round's convergence scalar, a gate's
+    *    row count or an operator's 1-row total costs no job of its
+    *    own, where a `count()`/`agg(...).collect()` or a
+    *    `crossJoin(broadcast(agg))` over the fresh checkpoint
+    *    schedules more (two under AQE). The returned row holds the
+    *    metrics in order, with their schema (`Row.empty` when none
+    *    are asked); aggregates see the same rows a separate `agg`
+    *    would, empty inputs included (`count` 0, `sum` NULL).
+    *    [[withScalars]] turns the row into typed literal columns.
+    *    DISTINCT aggregates are not observable (Spark rejects them).
     *
-    * `keepLayout` materializes AQE-off ([[withAqeOff]]) so the
-    * checkpoint keeps the physical partitioning downstream joins ride;
-    * `reliable` writes a reliable `checkpoint()` into the context's
-    * checkpoint dir instead of a `localCheckpoint()`. A fresh
-    * `Observation` per call (one can fire once), read only after the
-    * eager checkpoint returned: a failed job throws here and never
-    * leaves the read waiting. */
-  def ck(df: DataFrame, keepLayout: Boolean = false, reliable: Boolean = false)(
-      metrics: Column*): (DataFrame, Row) = {
+    * A fresh `Observation` per call (one can fire once), read only
+    * after the eager checkpoint returned: a failed job throws here and
+    * never leaves the read waiting. */
+  def ck(df: DataFrame, keepLayout: Boolean = false, reliable: Boolean = false,
+         pinned: Boolean = false)(metrics: Column*): (DataFrame, Row) = {
     val obs = if (metrics.isEmpty) None else Some(new Observation())
     val in = obs.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*))
     def write = if (reliable) in.checkpoint() else in.localCheckpoint()
     val c = if (keepLayout) withAqeOff(df.sparkSession)(write) else write
+    if (pinned) pin(c)
     (c, obs.fold(Row.empty)(_.getRow))
   }
+
+  /** [[ck]] without metrics: the checkpoint alone. */
+  def cut(df: DataFrame, keepLayout: Boolean = false, pinned: Boolean = false): DataFrame =
+    ck(df, keepLayout, pinned = pinned)()._1
+
+  /** `df` with every field of the observed `rows` ([[ck]]) appended as
+    * a literal column of the aggregate's declared type — what a
+    * `crossJoin` with the 1-row aggregate appended, without its job.
+    * The cast matters: `lit` alone types a decimal by its value
+    * (`lit(BigDecimal)` of 12.5 is DECIMAL(3,1), not the aggregate's
+    * DECIMAL(38,1)) and a NULL scalar (an empty input's `sum`) as
+    * VOID, and the type feeds every expression downstream. */
+  def withScalars(df: DataFrame, rows: Row*): DataFrame =
+    df.select(col("*") +: rows.flatMap(r => r.schema.fields.indices.map(i =>
+      lit(r.get(i)).cast(r.schema(i).dataType).as(r.schema(i).name))): _*)
 
   /** Per-session reentrancy state for [[withAqeOff]]: only the
     * OUTERMOST entry snapshots the previous conf value and only the

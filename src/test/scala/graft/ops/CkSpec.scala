@@ -139,11 +139,8 @@ class CkSpec extends SparkSpec {
         "ktruss" -> perRound(2)(r => GraphOps.ktrussPeel(GraphOps.face(g), 4, r)),
         // LPA dense rounds: the label broadcast + one checkpoint that
         // observes the changed count (frontier rounds are data-dependent)
-        "lpa" -> {
-          spark.conf.set("spark.graft.lpa.frontierFraction", "0.0001")
-          try perRound(2)(r => GraphOps.labelPropagation(GraphOps.face(g), r))
-          finally spark.conf.unset("spark.graft.lpa.frontierFraction")
-        },
+        "lpa" -> perRound(2)(r => GraphOps.labelPropagation(GraphOps.face(g), r,
+          DriverGate.BroadcastNodes, frontierFraction = 0.0001)),
         // pageRankConverged: the contribution broadcast + one
         // checkpoint that carries |rank − prev| and observes its sum
         // and the dangling mass the next round spreads

@@ -219,19 +219,13 @@ class GraphOpsSpec extends SparkSpec {
     for (g <- graphs; iters <- 1 to 5) {
       val edges = g.toDF("src", "dst")
       // fraction 2.0: EVERY round after the first is a frontier round
-      spark.conf.set("spark.graft.lpa.frontierFraction", "2.0")
-      val frontier =
-        try rowSet(GraphOps.labelPropagation(edges, iters = iters))
-        finally spark.conf.unset("spark.graft.lpa.frontierFraction")
-      spark.conf.set("spark.graft.lpa.frontierFraction", "0")
-      val dense =
-        try rowSet(GraphOps.labelPropagation(edges, iters = iters))
-        finally spark.conf.unset("spark.graft.lpa.frontierFraction")
+      val frontier = rowSet(GraphOps.labelPropagation(GraphOps.face(edges), iters,
+        DriverGate.BroadcastNodes, frontierFraction = 2.0))
+      val dense = rowSet(GraphOps.labelPropagation(GraphOps.face(edges), iters,
+        DriverGate.BroadcastNodes, frontierFraction = 0.0))
       // shuffle dense path (node table "too big to broadcast")
-      spark.conf.set("spark.graft.lpa.frontierFraction", "0")
-      val denseShuffle =
-        try rowSet(GraphOps.labelPropagation(GraphOps.face(edges), iters, broadcastNodes = 0L))
-        finally spark.conf.unset("spark.graft.lpa.frontierFraction")
+      val denseShuffle = rowSet(GraphOps.labelPropagation(GraphOps.face(edges), iters,
+        broadcastNodes = 0L, frontierFraction = 0.0))
       val adaptive = rowSet(GraphOps.labelPropagation(edges, iters = iters))
       assert(frontier == dense, s"graph of ${g.size} edges, iters=$iters")
       assert(denseShuffle == dense,
