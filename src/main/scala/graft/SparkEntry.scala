@@ -12,7 +12,9 @@ object SparkEntry {
 
   def catalog: Seq[Q] =
     ops.Relational.all ++ ops.EventOps.all ++ ops.TpchQueries.all ++
-      ops.CoverageQueries.all ++ text.TextQueries.all ++ ops.ExtensionQueries.all
+      ops.CoverageQueries.all ++ text.TextQueries.all ++ ops.catalog.DedupCatalog.all ++
+      ops.catalog.SimCatalog.all ++ ops.catalog.MmCatalog.all ++ ops.catalog.CorpusCatalog.all ++
+      ops.catalog.EventsCatalog.all ++ ops.catalog.StatsCatalog.all ++ ops.catalog.GraphCatalog.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The composed C1..C13 pipeline shape (select branches ∪ → timezone →

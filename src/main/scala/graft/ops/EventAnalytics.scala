@@ -1596,6 +1596,9 @@ object EventAnalytics {
         max(unix_micros(col("ts"))).cast("long").as("t1"))
       .select(expr("t0 + (t1 - t0) DIV 2").as("mid"))
     def d19(c: Column) = c.cast("decimal(19,0)")
+    // a zero divisor (one user, one user per arm, a constant covariate)
+    // leaves the statistic undefined: NULL, as the oracle's division
+    def div(a: Column, b: Column) = when(b =!= 0, a / b)
     // the per-arm adjusted pass reads the user table; its checkpoint job
     // observes the pooled moments
     val (users, moments) = GraftPins.ck(events.crossJoin(broadcast(mm))
@@ -1615,19 +1618,19 @@ object EventAnalytics {
         sum(d19(col("y")) * d19(col("y"))).cast("decimal(38,0)").as("syy"))
     val pooled = GraftPins.withScalars(users, moments)
       .select(col("*"),
-        ((col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
-          .cast("double") /
+        div((col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
+          .cast("double"),
           (col("n") * col("sxx") - col("sx") * col("sx")).cast("decimal(38,0)")
             .cast("double")).as("theta"),
         (col("sx").cast("double") / col("n").cast("double")).as("xbar"),
-        ((col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
+        div((col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
             .cast("double") *
           (col("n") * col("sxy") - col("sx") * col("sy")).cast("decimal(38,0)")
-            .cast("double") /
-          ((col("n") * col("sxx") - col("sx") * col("sx")).cast("decimal(38,0)")
+            .cast("double"),
+          (col("n") * col("sxx") - col("sx") * col("sx")).cast("decimal(38,0)")
             .cast("double") *
             (col("n") * col("syy") - col("sy") * col("sy")).cast("decimal(38,0)")
-              .cast("double"))).as("rho2"))
+              .cast("double")).as("rho2"))
     val ya = col("y").cast("double") -
       col("theta") * (col("x").cast("double") - col("xbar"))
     val byArm = pooled
@@ -1654,17 +1657,17 @@ object EventAnalytics {
     def meanOf(s: String, n: String) =
       col(s).cast("double") / col(n).cast("double")
     def varOf(n: String, q: String, s: String) =
-      (col(n).cast("double") * col(q).cast("double") -
-        col(s).cast("double") * col(s).cast("double")) /
-        (col(n).cast("double") * (col(n) - 1).cast("double"))
+      div(col(n).cast("double") * col(q).cast("double") -
+        col(s).cast("double") * col(s).cast("double"),
+        col(n).cast("double") * (col(n) - 1).cast("double"))
     wide.select(col("na").as("n_a"), col("nb").as("n_b"),
       round(col("theta"), 6).as("theta"),
-      round((meanOf("sga", "na") - meanOf("sgb", "nb")) /
+      round(div(meanOf("sga", "na") - meanOf("sgb", "nb"),
         sqrt(varOf("na", "qga", "sga") / col("na").cast("double") +
-          varOf("nb", "qgb", "sgb") / col("nb").cast("double")), 6).as("z_unadj"),
-      round((meanOf("saa", "na") - meanOf("sab", "nb")) /
+          varOf("nb", "qgb", "sgb") / col("nb").cast("double"))), 6).as("z_unadj"),
+      round(div(meanOf("saa", "na") - meanOf("sab", "nb"),
         sqrt(varOf("na", "qaa", "saa") / col("na").cast("double") +
-          varOf("nb", "qab", "sab") / col("nb").cast("double")), 6).as("z_cuped"),
+          varOf("nb", "qab", "sab") / col("nb").cast("double"))), 6).as("z_cuped"),
       round(col("rho2"), 6).as("var_reduction"))
   }
 }

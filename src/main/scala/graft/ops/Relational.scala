@@ -221,7 +221,9 @@ object Relational {
       .withColumn("_pid", spark_partition_id()), keepLayout = true)
     val keys = col("_pid") +: stratum.map(_.as("_stratum")).toSeq
     val subs = GraftPins.withAqeOff(spark)(ranged.groupBy(keys: _*).agg(part).collect())
-      .map(r => (r.getInt(0), if (stratum.isEmpty) null else r.get(1), r.getLong(keys.size)))
+      // an all-NULL partition's partial is NULL: it contributes nothing
+      .map(r => (r.getInt(0), if (stratum.isEmpty) null else r.get(1),
+        if (r.isNullAt(keys.size)) zero else r.getLong(keys.size)))
     val offsets = subs.groupBy(_._2).values.flatMap { rows =>
       val inOrder = rows.sortBy(_._1)
       inOrder.map(r => (r._1, r._2)).zip(inOrder.map(_._3).scanLeft(zero)(op).init)
@@ -428,7 +430,7 @@ object Relational {
     * single partition anywhere.
     *
     * Output: one row — `n_customers`, `theil` (6 dp),
-    * `theil_norm` (6 dp). */
+    * `theil_norm` (6 dp; NULL for one customer, where ln n = 0). */
   def theilRevenue(orders: DataFrame): DataFrame = {
     // checkpointed once; its job observes the total the term pass reads
     val (rev, tot) = GraftPins.ck(orders.groupBy(col("o_custkey"))
@@ -444,7 +446,9 @@ object Relational {
       .agg(sum(col("term")).as("ts"))
       .select(col("n").as("n_customers"),
         round(col("ts").cast("double") / col("n"), 6).as("theil"),
-        round(col("ts").cast("double") / col("n") / log(col("n").cast("double")), 6)
+        // one customer: ln 1 = 0 leaves the normalized index undefined
+        when(col("n") > 1,
+          round(col("ts").cast("double") / col("n") / log(col("n").cast("double")), 6))
           .as("theil_norm"))
   }
 

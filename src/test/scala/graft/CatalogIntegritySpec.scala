@@ -28,6 +28,18 @@ class CatalogIntegritySpec extends AnyFunSuite {
     }
   }
 
+  /** Every row carries a non-blank oracle: a row that loses its
+    * `Some(sql)` in a move between catalog objects, or whose borrowed
+    * `otherRow.oracle` is read before that row is initialized, would
+    * otherwise drop out of the oracle gate without an error. */
+  test("every catalog row carries a non-blank oracle SQL") {
+    val blank = SparkEntry.catalog.collect {
+      case q if q.oracle.forall(sql => sql == null || sql.trim.isEmpty) => q.name
+    }
+    assert(blank.isEmpty, s"rows without oracle SQL: $blank")
+    assert(SparkEntry.oracleSql.size == SparkEntry.catalog.size)
+  }
+
   /** Queries that once had rolling-ref floors and were deliberately
     * removed or renamed. A name goes here ONLY with a commit message
     * explaining the retirement; an unexplained ref-orphan is exactly

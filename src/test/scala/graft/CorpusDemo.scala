@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * main demonstrates that their id/column contracts COMPOSE (the thing
   * unit queries can't show).
   *
-  * Usage: runMain graft.CorpusDemo [sfDir] [outDir]
+  * A dev main in test scope, beside CorpusDemoSpec.
+  *
+  * Usage: sbt "Test/runMain graft.CorpusDemo [sfDir] [outDir]"
   */
 object CorpusDemo {
 
