@@ -71,7 +71,7 @@ object Corpus {
     * and n_grams is size(grams) read off the doc table itself. The
     * full gram table is never joined back (that join was measured as
     * the 10×-scale ratio driver — two extra gram-sized shuffle sides;
-    * BENCH_SCALE.md r9 x_ngram_novelty decomposition). The only
+    * history/BENCH_SCALE.md r9 x_ngram_novelty decomposition). The only
     * gram-sized exchange left is the df aggregation's (8B, 8B)
     * shuffle; everything downstream is doc-sized. Arithmetic is exact
     * integer counts; the single novelty division is the only float
@@ -973,7 +973,6 @@ object Corpus {
   def bm25TopDocs(docs: DataFrame, queryTerms: Seq[String], k: Int = 10,
                   k1: Double = 1.2, b: Double = 0.75,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(queryTerms.nonEmpty, "bm25TopDocs: queryTerms must be non-empty")
     val base = docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("_toks"))
       .select(col(idCol), col("_toks"), size(col("_toks")).as("dl"))
@@ -1373,7 +1372,7 @@ object Corpus {
     * plan depth and per-round cost stay FLAT in nMerges (without it,
     * round i replays all i−1 stacked `replace`s from the initial
     * checkpoint — quadratic). Measured curve at nMerges=500: see
-    * BENCH_SCALE.md §BPE (marginal cost FLAT at ~0.15 s/merge of
+    * history/BENCH_SCALE.md §BPE (marginal cost FLAT at ~0.15 s/merge of
     * argmax-job latency on local[32]; the loop is 2 shuffle rounds per
     * merge over a vocabulary-sized table at any depth).
     */
@@ -1441,7 +1440,7 @@ object Corpus {
   /** Core BPE loop shared by the three faces. `batch` > 1 learns up to
     * that many merges per pair-count round (the scheduling fix for real
     * 10⁴–10⁵-merge tokenizers: the measured per-merge floor is pure
-    * per-round JOB LATENCY, not data — BENCH_SCALE.md §BPE — so fewer
+    * per-round JOB LATENCY, not data — history/BENCH_SCALE.md §BPE — so fewer
     * rounds is the only lever). A round collects the top 4·batch
     * candidate pairs (a driver-tiny ≤1024-row collect of 3-column
     * rows), then greedily accepts candidates in (count DESC, a, b)

@@ -33,7 +33,7 @@ object DriverGate {
   /** Node tables up to this size run LPA and PageRank rounds with the
     * node-sized table broadcast onto the partitioned edges (zero
     * data-sized exchanges per round); past it the rounds shuffle. A
-    * few-hundred-MB broadcast ceiling (OPTIMIZATION_r15 §4: the
+    * few-hundred-MB broadcast ceiling (history/OPTIMIZATION_r15.md §4: the
     * shuffle layout wins from ~5M nodes). Not a driver twin: both
     * arms are distributed, so the switch leaves it alone. */
   val BroadcastNodes: Long = 4000000L

@@ -200,7 +200,7 @@ object ExtensionQueries {
     * embedding corpus re-scanned by every catalog row IS the tier's
     * dominant repeated cost and one materialization per (session,
     * dataset) is the difference between 1 and N corpus reads
-    * (measured locally as a no-op, recorded in BENCH_SCALE; the
+    * (measured locally as a no-op, recorded in history/BENCH_SCALE.md; the
     * GraphFace amortization argument at corpus scale). */
   private[ops] def coEmbeddings(s: org.apache.spark.sql.SparkSession,
                                 d: String): org.apache.spark.sql.DataFrame =
@@ -362,14 +362,12 @@ object ExtensionQueries {
     * (metric-name, build-seconds) per artifact. Bench calls this
     * BEFORE the timed loop (full legs only) so the shared-face build
     * cost is attributed to its own `face:<name>` metric instead of
-    * landing on whichever tier row happens to run first: amortized
-    * rolling floors exclude the build by convention (the EMBTIER
-    * precedent), so a full leg's first tier row otherwise self-flags
-    * at norm ~20× (r14: x_sample_semantic 3.01 s vs its 0.14
-    * post-fold floor) and every record leg needs manual adjudication.
-    * Build order follows the dependency chain (membership before the
-    * graph faces, embeddings before centroids/PQ/IVF) so each metric
-    * prices exactly its own artifact, not a dependency's. */
+    * landing on whichever tier row happens to run first (r14: a full
+    * leg billed x_sample_semantic 3.01 s, where the row itself costs
+    * 0.14 s over a built face). Build order follows the dependency
+    * chain (membership before the graph faces, embeddings before
+    * centroids/PQ/IVF) so each metric prices exactly its own
+    * artifact, not a dependency's. */
   def warmFaces(s: org.apache.spark.sql.SparkSession,
                 d: String): Seq[(String, Double)] = {
     def timed(name: String)(body: => Any): (String, Double) = {

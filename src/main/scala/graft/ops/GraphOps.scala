@@ -284,7 +284,7 @@ object GraphOps {
     * intersections run in the codegen'd
     * [[org.apache.spark.sql.graftext.SortedIntersectCount]] merge-scan
     * kernel (the explicit wedge-stream + closure-join plan measured
-    * 6.5× slower at sf1 — BENCH_SCALE §TRI). The only super-linear
+    * 6.5× slower at sf1 — history/BENCH_SCALE.md §TRI). The only super-linear
     * term is the wedge-bounded intersect work itself, capped by the
     * orientation. */
   def triangleStats(f: GraphFace): DataFrame = {
@@ -331,7 +331,7 @@ object GraphOps {
   /** The shared argmax: most-frequent label per node from (nodeCol,
     * label) rows, ties to the SMALLEST label — two codegen'd hash
     * aggregates (one deterministic mode() measured slower at sf1,
-    * BENCH_SCALE §LPA-MODE). */
+    * history/BENCH_SCALE.md §LPA-MODE). */
   private def argmaxLabel(joined: DataFrame, nodeCol: String): DataFrame =
     joined.groupBy(col(nodeCol), col("label")).agg(count(lit(1)).as("c"))
       .groupBy(col(nodeCol))
@@ -413,7 +413,7 @@ object GraphOps {
     // the changed set has genuinely collapsed. Measured on the sf1
     // co-occurrence graph at iters=3 the label field does NOT settle
     // (changed: 200k → 150k → 146k of 200k nodes), so always-frontier
-    // ran ~7% SLOWER than dense (BENCH_SCALE §LPA-FRONTIER); on
+    // ran ~7% SLOWER than dense (history/BENCH_SCALE.md §LPA-FRONTIER); on
     // stabilizing graphs (the common LPA regime past a few rounds) the
     // delta rounds approach free. Hence adaptive: run the frontier
     // round iff |changed| < frontierFraction · |nodes|

@@ -22,7 +22,7 @@ object Profile {
     * fused scan. The fused alternative (all countDistincts in one
     * statement) plans via Expand, which multiplies every input row
     * (N+1)× BEFORE partial aggregation — measured 3.7× slower at
-    * sf0.1 (1.18s vs 4.37s, BENCH_SCALE.md). Each branch's exchange
+    * sf0.1 (1.18s vs 4.37s, history/BENCH_SCALE.md). Each branch's exchange
     * carries per-partition distinct values only (map-side partial agg
     * keyed by value), identical either way; at 100 TB the branch shape
     * wins on scan-stage CPU and loses nothing on I/O or shuffle.
@@ -155,7 +155,7 @@ object Profile {
     // alone would silently drop exactly the cells that prove
     // association). Category lists are contingency-sized by contract;
     // the cross join is tiny. SHAPE DECISION, measured both ways in one
-    // phase (BENCH_SCALE.md): the checkpoint-the-contingency variant
+    // phase (history/BENCH_SCALE.md): the checkpoint-the-contingency variant
     // that wins for [[cramersV]] on orders (2.13 -> 0.96s) LOSES here
     // (0.98 -> 1.28s at sf1) — lineitem's two dictionary-encoded flag
     // columns re-scan cheaper than one scan + eager materialization —
@@ -251,7 +251,7 @@ object Profile {
     def ix(c: String): Column =
       round(col(c) * pow(lit(10), lit(scale))).cast("long")
     // r16 size-gated driver tiny path (the textrank/peel discipline —
-    // OPTIMIZATION_r15 "Not yet" #1): at gate size the per-column shape
+    // history/OPTIMIZATION_r15.md "Not yet" #1): at gate size the per-column shape
     // is ~15 tiny scheduled jobs around microseconds of integer rank
     // arithmetic (sf0.1 floor 2.76 s ≈ sf1 floor 2.84 s at 10× data),
     // so inputs whose KEYED table is at or under
@@ -356,7 +356,7 @@ object Profile {
     * prefixSum range exchanges, k hash joins of the data-sized key
     * table — checkpointed ON EVIDENCE: the re-scan variant (k+1
     * column-pruned parquet scans, no materialization) measured 5.78s vs
-    * 4.42s at sf0.1 (BENCH_SF01_SPEAR_B_SOLO_r10.json). */
+    * 4.42s at sf0.1 (history/BENCH_SF01_SPEAR_B_SOLO_r10.json). */
   private def spearmanRanksPerColumn(df: DataFrame, cols: Seq[String],
                                      ix: String => Column): DataFrame = {
     val keyed = GraftPins.cut(df.select(cols.map(c => ix(c).as(s"_v_$c")): _*))

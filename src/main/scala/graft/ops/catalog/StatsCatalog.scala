@@ -806,7 +806,7 @@ object StatsCatalog {
     * grid: the original `Window.partitionBy(event_type)` plan put each
     * type's millions of rows through ONE task's sort and measured 3.7×
     * at 10× data; the replacement is parallel in the data, not in the
-    * type count (A/B in BENCH_SCALE.md). Ties share a rank by grid
+    * type count (A/B in history/BENCH_SCALE.md). Ties share a rank by grid
     * construction, so the result needs no id tiebreak. */
   val quantileNormQ: Q = Q(
     "x_quantile_norm",

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Bench, and the oracle gate with no error anywhere (r14: a second
   * `x_hybrid_rrf` compiled and went green while masking the r8 row;
   * caught only because the rolling bench ref still carried the old
-  * floor). Pin uniqueness and the name convention here so the failure
-  * class is a test failure, not an archaeology exercise. */
+  * floor). Pin uniqueness, the name convention and the committed row
+  * set here so the failure class is a test failure, not an
+  * archaeology exercise. */
 class CatalogIntegritySpec extends AnyFunSuite {
 
   test("catalog query names are unique — no silent Map shadowing") {
@@ -40,39 +41,19 @@ class CatalogIntegritySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.size == SparkEntry.catalog.size)
   }
 
-  /** Queries that once had rolling-ref floors and were deliberately
-    * removed or renamed. A name goes here ONLY with a commit message
-    * explaining the retirement; an unexplained ref-orphan is exactly
-    * the r14 shadowing tell (the stale x_hybrid_rrf floor was the only
-    * witness that the r8 row had vanished), so it must fail this spec,
-    * not wait for floor archaeology. */
-  val retiredRefKeys: Set[String] = Set.empty
-
-  test("every rolling-ref floor names a live catalog row (or is retired)") {
-    val names = SparkEntry.catalog.map(_.name).toSet
-    val refFiles = Seq("BENCH_SOLO_REF.json", "BENCH_SOLO_REF_SF1.json")
-      .map(new java.io.File(_)).filter(_.isFile)
-    assume(refFiles.nonEmpty, "no rolling refs in cwd (non-repo-root test run)")
-    refFiles.foreach { f =>
-      val txt = java.nio.file.Files.readString(f.toPath)
-      val keys = Bench.parseSoloRef(txt, sfDir = parseSf(txt)).keySet
-      assert(keys.nonEmpty, s"${f.getName}: parsed no keys — ref format drifted?")
-      // face:<slot> rows are shared-face build metrics (Bench pre-warm
-      // accounting), not catalog queries — validated by shape only
-      val (faceKeys, queryKeys) = keys.partition(_.startsWith("face:"))
-      faceKeys.foreach { k =>
-        assert(k.matches("face:[a-z][a-z0-9_]*"), s"${f.getName}: malformed face key '$k'")
-      }
-      val orphans = queryKeys -- names -- retiredRefKeys
-      assert(orphans.isEmpty,
-        s"${f.getName}: floors for queries not in the catalog (silent " +
-          s"shadowing or un-retired rename?): ${orphans.toSeq.sorted}")
-      val zombie = retiredRefKeys.intersect(names)
-      assert(zombie.isEmpty, s"retired keys that are live again: $zombie")
-    }
+  /** The committed row manifest (`src/test/resources/catalog_rows.txt`,
+    * one name a line, sorted). A row that vanishes — a dropped list
+    * entry, a bad move between catalog objects, a duplicate name that
+    * shadows another — leaves every other check green and silently
+    * shrinks Verify, Bench and the oracle gate; the manifest makes that
+    * a test failure. Adding, removing or renaming a row edits the
+    * manifest in the same commit. */
+  test("catalog row names equal the committed manifest") {
+    val src = scala.io.Source.fromResource("catalog_rows.txt")
+    val manifest = try src.getLines().filter(_.nonEmpty).toVector finally src.close()
+    val names = SparkEntry.catalog.map(_.name).sorted.toVector
+    if (names != manifest)
+      fail(s"in the manifest, not the catalog: ${manifest.diff(names)}; " +
+        s"in the catalog, not the manifest: ${names.diff(manifest)}")
   }
-
-  /** The ref's own "sf" field, so parseSoloRef's SF gate matches. */
-  private def parseSf(txt: String): String =
-    """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
 }

@@ -70,7 +70,7 @@ object IdPairsBench {
 
     // context: the REAL pair volume the dedup pipelines push through the
     // generator — the candidate exchange that feeds it costs seconds at
-    // this scale (BENCH_SCALE.md), so expansion share = pairs * ns/pair
+    // this scale (history/BENCH_SCALE.md), so expansion share = pairs * ns/pair
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sh = docs.select(col("doc_id"), explode(array_distinct(

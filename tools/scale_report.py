@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Build BENCH_SCALE.md from two graft.Bench JSON lines (sf0.1 and sf1).
+"""Build a scale report (the form of history/BENCH_SCALE.md) from two
+graft.Bench JSON lines (sf0.1 and sf1), printed as markdown on stdout.
 
 Usage: python3 tools/scale_report.py /tmp/bench_sf01.json /tmp/bench_sf1.json
 
@@ -28,7 +29,7 @@ def main(p01, p1):
         rows.append((name, t0, t1, ratio))
     rows.sort(key=lambda r: -r[3])
     lines = []
-    lines.append("# BENCH_SCALE — sf0.1 vs sf1 (10x) scale validation")
+    lines.append("# Scale report — sf0.1 vs sf1 (10x) scale validation")
     lines.append("")
     lines.append(f"- sf0.1: **{b01['value']:.1f}s** total, {len(q01)} queries, "
                  f"{b01['failed']} failed ({b01['sf']})")
