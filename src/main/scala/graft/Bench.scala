@@ -25,12 +25,13 @@ object Bench {
 
   /** The result line. A failed row is recorded as -1: it counts in
     * `failed` and not in `value`, the total seconds of the rows that
-    * ran. `face:<slot>` rows count like any other row. */
-  def resultLine(rows: Seq[(String, Double)], sfDir: String): String = {
+    * ran. `face:<slot>` rows count like any other row. `cpus` is the
+    * run's local slot count. */
+  def resultLine(rows: Seq[(String, Double)], sfDir: String, cpus: Int): String = {
     val failed = rows.count(_._2 < 0)
     val total = rows.map(_._2).filter(_ >= 0).sum
     val qs = rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","cpus":$cpus}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -160,7 +161,7 @@ object Bench {
           }
         name -> best
       }
-    val json = resultLine(faceTimes ++ queryTimes, sfDir)
+    val json = resultLine(faceTimes ++ queryTimes, sfDir, cpus.toInt)
     println(json)
     // Also leave the line on disk, so a logger-prefixed stdout can't
     // lose the per-row measurements (tools/scale_report.py reads it).

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftPins
 
@@ -116,31 +116,6 @@ object Dedup {
             slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))).as(Seq("band", "bucket")))
   }
 
-  /** Expand each per-key doc-id list into its i<j pairs via the native
-    * IdPairs generator. Replaces a bucket self-join: the upstream plan
-    * is consumed ONCE (a self-join would execute it per side), and the
-    * only shuffle is the groupBy on the key. The generator STREAMS the
-    * O(f²) pairs per key — constant memory even for a hot key, unlike
-    * the HOF form, which materializes the full f²-element array before
-    * exploding (that form remains in the spec as the semantic oracle);
-    * the maxShingleDocFreq cap below remains the CPU-skew escape
-    * hatch. */
-  private[dedup] def pairsFromIdLists(grouped: DataFrame, idsCol: String): DataFrame =
-    grouped
-      .filter(size(col(idsCol)) > 1)
-      .select(org.apache.spark.sql.graftext.VectorExpressions.idPairs(col(idsCol)))
-
-  /** The column-function form of pairsFromIdLists (test oracle for the
-    * IdPairs generator). */
-  private[dedup] def pairsFromIdListsHof(grouped: DataFrame, idsCol: String): DataFrame =
-    grouped
-      .filter(size(col(idsCol)) > 1)
-      .select(explode(filter(
-        flatten(transform(col(idsCol),
-          x => transform(col(idsCol), y => struct(x.as("id1"), y.as("id2"))))),
-        p => p("id1") < p("id2"))).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-
   /** MinHash+LSH near-dup candidate pairs with exact Jaccard verify.
     * Candidates come from grouping band buckets and expanding id pairs
     * (the signature pipeline — shingle, explode, 64-way min agg — runs
@@ -151,15 +126,9 @@ object Dedup {
                       textCol: String = "text", threshold: Double = 0.7,
                       k: Int = 64, rowsPerBand: Int = 8, shingleW: Int = 3,
                       maxBucketSize: Option[Int] = None): DataFrame = {
-    val buckets = lshBuckets(docs, idCol, textCol, k, rowsPerBand, shingleW)
-    val grouped = buckets.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col(idCol)).as("ids"))
-    // A band bucket of f docs expands to f²/2 pairs in one task; a
-    // degenerate corpus (all-identical docs) puts the WHOLE corpus in
-    // one bucket per band. The cap drops buckets above it — same skew
-    // escape hatch as maxShingleDocFreq below; None keeps it exact.
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ids")) <= m))
-    val candidates = pairsFromIdLists(capped, "ids")
+    val candidates = Banding.pairsFromIdLists(Banding.idLists(
+        lshBuckets(docs, idCol, textCol, k, rowsPerBand, shingleW),
+        Seq("band", "bucket"), idCol, maxBucketSize))
       .dropDuplicates()
     // exact Jaccard over hashed shingle SETS — same value as over the
     // shingle strings modulo 64-bit collisions, at a fraction of the
@@ -213,12 +182,9 @@ object Dedup {
                          k: Int = 16, rowsPerBand: Int = 2,
                          shingleW: Int = 3,
                          maxBucketSize: Option[Int] = None): DataFrame = {
-    val sigs = bandSignaturesMd5(docs, idCol, textCol, k, rowsPerBand, shingleW)
-    val grouped = sigs.groupBy(col("band"), col("s"))
-      .agg(collect_list(col(idCol)).as("ids"))
-    // same degenerate-bucket cap as minhashNearDups (see there)
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ids")) <= m))
-    val candidates = pairsFromIdLists(capped, "ids")
+    val candidates = Banding.pairsFromIdLists(Banding.idLists(
+        bandSignaturesMd5(docs, idCol, textCol, k, rowsPerBand, shingleW),
+        Seq("band", "s"), idCol, maxBucketSize))
       .dropDuplicates()
     // deliberately NOT checkpointed: the native shingle recompute for
     // the two verify-side probes is cheaper than materializing
@@ -277,13 +243,12 @@ object Dedup {
     // each checkpoint's job observes its stats: the bucket table's
     // (read by the pair expansion), the candidate table's (read by the
     // recall join) and the sample pairs' (the recall itself)
-    val (grouped, bucketSt) = GraftPins.ck(
-      bandSignaturesMd5(docs, "doc_id", "text", k, rowsPerBand, shingleW)
-        .groupBy(col("band"), col("s"))
-        .agg(collect_list(col("doc_id")).as("ids")))(
+    val (grouped, bucketSt) = GraftPins.ck(Banding.idLists(
+      bandSignaturesMd5(docs, "doc_id", "text", k, rowsPerBand, shingleW),
+      Seq("band", "s"), "doc_id", None))(
       count(lit(1)).as("n_buckets"), max(size(col("ids"))).cast("long").as("max_bucket"))
     val (cand, candSt) = GraftPins.ck(
-      pairsFromIdLists(grouped.filter(size(col("ids")) >= 2), "ids").dropDuplicates())(
+      Banding.pairsFromIdLists(grouped).dropDuplicates())(
       count(lit(1)).as("n_candidate_pairs"))
     // measured recall at refThreshold on the deterministic sample
     val sample = GraftPins.cut(docs
@@ -801,129 +766,39 @@ object Dedup {
                                    rowsPerBand: Int = 2, shingleW: Int = 3,
                                    maxBucketSize: Option[Int] = None): DataFrame =
     dedupAgainstCorpusNearDupIndexed(incoming,
-      corpusNearDupIndex(existing, idCol, textCol, k, rowsPerBand, shingleW, maxBucketSize),
+      nearDupIndex(existing, idCol, textCol, k, rowsPerBand, shingleW, maxBucketSize),
       idCol, textCol, threshold, k, rowsPerBand, shingleW)
 
-  /** The reusable corpus half of [[dedupAgainstCorpusNearDupMd5]]:
-    * per-(band, s) id groups (bucket-capped) + per-doc shingle sets.
-    * Build ONCE, persist/cache, and probe with every ingest batch —
-    * per-batch cost then excludes the corpus passes entirely. This is
-    * the object a deployment writes bucketed by (band, s) / `_ex_id`
-    * next to the corpus, and what the streaming twin holds static
-    * across micro-batches. */
-  case class CorpusNearDupIndex(bands: DataFrame, shingles: DataFrame) {
-    def cache(): this.type = { bands.cache(); shingles.cache(); this }
-    def unpersist(): Unit = { bands.unpersist(); shingles.unpersist() }
-  }
-
-  def corpusNearDupIndex(existing: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text", k: Int = 16,
-                         rowsPerBand: Int = 2, shingleW: Int = 3,
-                         maxBucketSize: Option[Int] = None): CorpusNearDupIndex = {
-    val grouped = bandSignaturesMd5(existing, idCol, textCol, k, rowsPerBand, shingleW)
-      .groupBy(col("band"), col("s")).agg(collect_list(col(idCol)).as("ex_ids"))
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ex_ids")) <= m))
-    val sh = existing.select(col(idCol).as("_ex_id"),
-      shingles(col(textCol), shingleW).as("_sh2"))
-    CorpusNearDupIndex(capped, sh)
-  }
-
-  /** Materialize the corpus near-dup index to parquet — the daily-
-    * ingest amortization twin of `Similarity.saveIndexIvf`: the
-    * corpus-side shingling, signatures, and band grouping (the part of
-    * incremental near-dup dedup that grows with the CORPUS, not the
-    * batch) are paid once at build; every batch then reads two parquet
-    * tables and pays only batch-proportional work. Rebuild on corpus
-    * growth — the same contract as the bloom ingest path. */
-  def saveNearDupIndex(existing: DataFrame, path: String,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       k: Int = 16, rowsPerBand: Int = 2, shingleW: Int = 3,
-                       maxBucketSize: Option[Int] = None): Unit = {
-    val idx = corpusNearDupIndex(existing, idCol, textCol, k, rowsPerBand,
-      shingleW, maxBucketSize)
-    idx.bands.write.mode("overwrite").parquet(s"$path/bands")
-    idx.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-  }
-
-  /** Load a [[saveNearDupIndex]] index for [[dedupAgainstCorpusNearDupIndexed]].
-    * Probe parameters must match the build's. */
-  def loadNearDupIndex(spark: SparkSession, path: String): CorpusNearDupIndex =
-    CorpusNearDupIndex(
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/shingles"))
-
-  /** Index MERGE — append a batch of new docs to an existing
-    * [[CorpusNearDupIndex]] at DELTA cost (the q-digest persisted-union
-    * precedent: per-batch fragments unioned, no rescan of what's
-    * already indexed). The merged band table is FRAGMENTED: a (band, s)
-    * key that exists in both sides keeps two rows, which
-    * [[dedupAgainstCorpusNearDupIndexed]] handles by construction (the
-    * probe equi-join matches every fragment row, the explode +
-    * dropDuplicates unions the id groups) — so probing a merged index
-    * equals probing a full rebuild, with ONE divergence: `maxBucketSize`
-    * judges each fragment's bucket on its own rather than the combined
-    * bucket (a batch-local cap — the price of never reading the
-    * existing fragments; run [[compactNearDupIndex]] with the cap to
-    * restore build-time semantics). Compute cost: shingling/signatures/
-    * grouping over `newDocs` only. */
-  def corpusNearDupIndexMerge(index: CorpusNearDupIndex, newDocs: DataFrame,
-                              idCol: String = "doc_id", textCol: String = "text",
-                              k: Int = 16, rowsPerBand: Int = 2, shingleW: Int = 3,
-                              maxBucketSize: Option[Int] = None): CorpusNearDupIndex = {
-    val delta = corpusNearDupIndex(newDocs, idCol, textCol, k, rowsPerBand,
-      shingleW, maxBucketSize)
-    CorpusNearDupIndex(index.bands.unionByName(delta.bands),
-      index.shingles.unionByName(delta.shingles))
-  }
-
-  /** Persisted twin of [[corpusNearDupIndexMerge]]: append ONLY the new
-    * batch's band/shingle fragments to a [[saveNearDupIndex]] tree —
-    * write volume scales with the batch, never the corpus.
-    * [[loadNearDupIndex]] reads fragments transparently. */
-  def appendNearDupIndex(newDocs: DataFrame, path: String,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         k: Int = 16, rowsPerBand: Int = 2, shingleW: Int = 3,
-                         maxBucketSize: Option[Int] = None): Unit = {
-    val idx = corpusNearDupIndex(newDocs, idCol, textCol, k, rowsPerBand,
-      shingleW, maxBucketSize)
-    idx.bands.write.mode("append").parquet(s"$path/bands")
-    idx.shingles.write.mode("append").parquet(s"$path/shingles")
-  }
-
-  /** Re-group a fragmented (merged/appended) index into the canonical
-    * one-row-per-(band, s) form and re-apply `maxBucketSize` against
-    * the COMBINED buckets — after which the index is exactly what
-    * [[corpusNearDupIndex]] over the whole corpus builds (spec-pinned
-    * up to id order inside a bucket). The compaction is one (band, s)-
-    * keyed exchange over the band table — corpus-index-sized, which is
-    * why it's an occasional maintenance pass, not part of the per-batch
-    * ingest path. */
-  def compactNearDupIndex(index: CorpusNearDupIndex,
-                          maxBucketSize: Option[Int] = None): CorpusNearDupIndex = {
-    val grouped = index.bands
-      .select(col("band"), col("s"), explode(col("ex_ids")).as("_id"))
-      .groupBy(col("band"), col("s")).agg(collect_list(col("_id")).as("ex_ids"))
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ex_ids")) <= m))
-    CorpusNearDupIndex(capped, index.shingles)
-  }
+  /** The reusable corpus half of [[dedupAgainstCorpusNearDupMd5]] as a
+    * [[Banding.Index]]: per-(band, s) id groups, buckets over
+    * `maxBucketSize` dropped, and the per-doc shingle sets (`_ex_id`,
+    * `_sh2`) as its payload. Build ONCE, persist or cache, and probe
+    * with every ingest batch; a batch merged in or appended is this
+    * index over the batch. */
+  def nearDupIndex(existing: DataFrame, idCol: String = "doc_id",
+                   textCol: String = "text", k: Int = 16,
+                   rowsPerBand: Int = 2, shingleW: Int = 3,
+                   maxBucketSize: Option[Int] = None): Banding.Index =
+    Banding.Index(Banding.idLists(
+        bandSignaturesMd5(existing, idCol, textCol, k, rowsPerBand, shingleW),
+        Seq("band", "s"), idCol, maxBucketSize),
+      existing.select(col(idCol).as("_ex_id"), shingles(col(textCol), shingleW).as("_sh2")))
 
   /** [[dedupAgainstCorpusNearDupMd5]] against a prebuilt
-    * [[CorpusNearDupIndex]]. `k`/`rowsPerBand`/`shingleW` must match
-    * the index's build parameters (band keys are compared verbatim). */
-  def dedupAgainstCorpusNearDupIndexed(incoming: DataFrame, index: CorpusNearDupIndex,
+    * [[nearDupIndex]]. `k`/`rowsPerBand`/`shingleW` must match the
+    * index's build parameters (band keys are compared verbatim). */
+  def dedupAgainstCorpusNearDupIndexed(incoming: DataFrame, index: Banding.Index,
                                        idCol: String = "doc_id",
                                        textCol: String = "text",
                                        threshold: Double = 0.7, k: Int = 16,
                                        rowsPerBand: Int = 2,
                                        shingleW: Int = 3): DataFrame = {
-    val candidates = bandSignaturesMd5(incoming, idCol, textCol, k, rowsPerBand, shingleW)
-      .join(index.bands, Seq("band", "s"))
-      .select(col(idCol).as("_in_id"), explode(col("ex_ids")).as("_ex_id"))
-      .dropDuplicates()
+    val candidates = index.candidates(
+      bandSignaturesMd5(incoming, idCol, textCol, k, rowsPerBand, shingleW), idCol)
     val shIn = incoming.select(col(idCol).as("_in_id"),
       shingles(col(textCol), shingleW).as("_sh1"))
     val matched = candidates
-      .join(shIn, "_in_id").join(index.shingles, "_ex_id")
+      .join(shIn, "_in_id").join(index.payload, "_ex_id")
       .select(col("_in_id"),
         size(array_intersect(col("_sh1"), col("_sh2"))).as("_nc"),
         size(col("_sh1")).as("_n1"), size(col("_sh2")).as("_n2"))
@@ -1133,11 +1008,9 @@ object Dedup {
       if (exact) shingles(col(textCol), shingleW)
       else array_distinct(org.apache.spark.sql.graftext.VectorExpressions
         .md5Hashes60(shingles(col(textCol), shingleW)))
-    val sh = docs.select(col(idCol), explode(keyed).as("g"))
-    val grouped = sh.groupBy(col("g")).agg(collect_list(col(idCol)).as("ids"))
-    val capped = maxShingleDocFreq.fold(grouped)(f => grouped.filter(size(col("ids")) <= f))
     val sizes = docs.select(col(idCol), size(keyed).as("n"))
-    pairsFromIdLists(capped, "ids")
+    Banding.pairsFromIdLists(Banding.idLists(docs.select(col(idCol), explode(keyed).as("g")),
+        Seq("g"), idCol, maxShingleDocFreq))
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_common"))
       .join(sizes.withColumnRenamed(idCol, "id1").withColumnRenamed("n", "n1"), "id1")
       .join(sizes.withColumnRenamed(idCol, "id2").withColumnRenamed("n", "n2"), "id2")

@@ -1,6 +1,7 @@
 package graft.mm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.dedup.Banding
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftPins
 
@@ -815,41 +816,17 @@ object Multimodal {
     *
     * Scale shape: decode+hash runs once (checkpointed — band explode
     * and the two verify join-backs all read the 16-byte (id, hash)
-    * table, never luma or payload); every exchange carries (int band,
-    * 8-byte key, id); buckets above `maxBucketSize` are dropped on BOTH
-    * sides of the candidate join (the [[graft.dedup.Dedup]] skew
-    * policy — a bucket of f members expands to f²/2 pairs in one task;
-    * the oracle replays the cap with HAVING COUNT(*) <=). Output:
-    * (id1, id2, dist), id1 < id2, dist ≤ threshold. */
+    * table, never luma or payload); the only candidate exchange is the
+    * (band, bkey) grouping of ids ([[graft.dedup.Banding.idLists]]),
+    * whose buckets above `maxBucketSize` are dropped before the i<j
+    * pairs stream out (the oracle replays the cap with HAVING COUNT(*)
+    * <=). Output: (id1, id2, dist), id1 < id2, dist ≤ threshold. */
   def phashNearDups(grid: DataFrame, threshold: Int = 6, bandBits: Int = 15,
                     maxBucketSize: Option[Int] = Some(1024)): DataFrame = {
-    require(DHashBits % bandBits == 0,
-      s"phashNearDups: bandBits must divide $DHashBits, got $bandBits")
-    val nBands = DHashBits / bandBits
-    val hashes = GraftPins.cut(grid
-      .select(col("media_id"), dhash60(col("luma")).as("dhash")))
-    val bands = hashes
-      .select(col("media_id"), explode(sequence(lit(0), lit(nBands - 1))).as("band"),
-        col("dhash"))
-      .withColumn("bkey",
-        expr(s"shiftrightunsigned(dhash, band * $bandBits)")
-          .bitwiseAND(lit((1L << bandBits) - 1)))
-      .select(col("media_id"), col("band"), col("bkey"))
-    val capped = maxBucketSize match {
-      case Some(cap) =>
-        bands.join(
-          bands.groupBy(col("band"), col("bkey"))
-            .agg(count(lit(1)).as("_f")).filter(col("_f") <= cap)
-            .select(col("band"), col("bkey")),
-          Seq("band", "bkey"))
-      case None => bands
-    }
-    val cand = capped.select(col("band"), col("bkey"), col("media_id").as("id1"))
-      .join(capped.select(col("band"), col("bkey"), col("media_id").as("id2")),
-        Seq("band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    cand
+    val hashes = GraftPins.cut(hashesOf(grid))
+    Banding.pairsFromIdLists(Banding.idLists(phashBands(hashes, bandBits),
+        Seq("band", "bkey"), "media_id", maxBucketSize))
+      .distinct()
       .join(hashes.select(col("media_id").as("id1"), col("dhash").as("h1")), Seq("id1"))
       .join(hashes.select(col("media_id").as("id2"), col("dhash").as("h2")), Seq("id2"))
       .withColumn("dist", bit_count(col("h1").bitwiseXOR(col("h2"))))
@@ -859,154 +836,58 @@ object Multimodal {
 
   // ------------------------------------------- incremental pHash index
 
-  /** The reusable corpus half of media near-dup dedup — the pHash twin
-    * of [[graft.dedup.Dedup.CorpusNearDupIndex]]: per-(band, bkey) id
-    * groups (bucket-capped) + the per-media 8-byte dHash for the exact
-    * popcount verify. Build ONCE over the corpus (the only pass that
-    * ever touches payload bytes), persist/cache, and probe with every
-    * ingest batch — per-batch cost then excludes the corpus decode +
-    * hash entirely. */
-  final case class MediaPhashIndex(bands: DataFrame, hashes: DataFrame) {
-    def cache(): this.type = { bands.cache(); hashes.cache(); this }
-    def unpersist(): Unit = { bands.unpersist(); hashes.unpersist() }
-  }
-
-  /** Per-media (band, bkey) rows of a luma grid — the banding half of
-    * [[phashNearDups]], factored so build and probe can never drift. */
-  private def bandRows(grid: DataFrame, bandBits: Int): DataFrame = {
+  /** The (media_id, dhash, band, bkey) band rows of a (media_id, dhash)
+    * table: the 60-bit hash split into 60/`bandBits` bands, each band's
+    * bits its key. Shared by [[phashNearDups]], [[phashIndex]] and
+    * [[phashProbe]], so build and probe can never drift. */
+  private def phashBands(hashes: DataFrame, bandBits: Int): DataFrame = {
     require(DHashBits % bandBits == 0,
-      s"bandRows: bandBits must divide $DHashBits, got $bandBits")
+      s"phashBands: bandBits must divide $DHashBits, got $bandBits")
     val nBands = DHashBits / bandBits
-    grid
-      .select(col("media_id"), dhash60(col("luma")).as("dhash"))
+    hashes
       .select(col("media_id"), col("dhash"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
       .withColumn("bkey",
         expr(s"shiftrightunsigned(dhash, band * $bandBits)")
           .bitwiseAND(lit((1L << bandBits) - 1)))
-      .select(col("media_id"), col("dhash"), col("band"), col("bkey"))
   }
 
-  /** Build a [[MediaPhashIndex]] over a corpus luma grid: decode+hash
-    * each media once, group band keys into id buckets (dropping buckets
-    * above `maxBucketSize` — a bucket of f members fans every colliding
-    * probe out f ways; the [[graft.dedup.Dedup]] skew policy), and keep
-    * the (media_id, dhash) table for the verify. Everything after the
-    * grid is 8-byte hashes and ids. */
-  def mediaPhashIndex(grid: DataFrame, bandBits: Int = 15,
-                      maxBucketSize: Option[Int] = Some(1024)): MediaPhashIndex = {
-    val rows = bandRows(grid, bandBits)
-    val grouped = rows.groupBy(col("band"), col("bkey"))
-      .agg(collect_list(col("media_id")).as("ex_ids"))
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ex_ids")) <= m))
-    MediaPhashIndex(capped,
-      rows.select(col("media_id").as("_ex_id"), col("dhash").as("_ex_hash")).distinct())
+  private def hashesOf(grid: DataFrame): DataFrame =
+    grid.select(col("media_id"), dhash60(col("luma")).as("dhash"))
+
+  /** The media near-dup corpus index over a luma grid, as a
+    * [[graft.dedup.Banding.Index]]: per-(band, bkey) id groups with
+    * buckets over `maxBucketSize` dropped (a bucket of f members fans
+    * every colliding probe out f ways), and the per-media 8-byte dHash
+    * (`_ex_id`, `_ex_hash`) as the payload of the popcount verify.
+    * Decode + hash run once here; everything after the grid is hashes
+    * and ids. A batch merged in or appended is this index over the
+    * batch's grid. */
+  def phashIndex(grid: DataFrame, bandBits: Int = 15,
+                 maxBucketSize: Option[Int] = Some(1024)): Banding.Index = {
+    val hashes = hashesOf(grid)
+    Banding.Index(
+      Banding.idLists(phashBands(hashes, bandBits), Seq("band", "bkey"), "media_id", maxBucketSize),
+      hashes.select(col("media_id").as("_ex_id"), col("dhash").as("_ex_hash")).distinct())
   }
 
-  /** Probe a [[MediaPhashIndex]] with an ingest batch's luma grid:
+  /** Probe a [[phashIndex]] with an ingest batch's luma grid:
     * (in_id, ex_id, dist) for every batch media within Hamming
-    * `threshold` of an indexed one. The batch pays decode+hash over
-    * ITSELF only; the probe is one equi-join on (band, bkey) against
-    * the bucket table, an explode + dropDuplicates over the candidate
-    * id pairs, and two 8-byte hash joins for the exact popcount verify
-    * — the [[graft.dedup.Dedup.dedupAgainstCorpusNearDupIndexed]]
-    * shape on hashes instead of shingle sets. `bandBits` must match
-    * the index build (band keys are compared verbatim). */
-  def probeMediaPhashIndex(grid: DataFrame, index: MediaPhashIndex,
-                           threshold: Int = 6, bandBits: Int = 15): DataFrame = {
-    val inRows = bandRows(grid, bandBits)
-    val cand = inRows.select(col("media_id").as("in_id"), col("band"), col("bkey"))
-      .join(index.bands, Seq("band", "bkey"))
-      .select(col("in_id"), explode(col("ex_ids")).as("ex_id"))
-      .dropDuplicates()
-    cand
-      .join(inRows.select(col("media_id").as("in_id"), col("dhash").as("h1")).distinct(),
-        Seq("in_id"))
-      .join(index.hashes.select(col("_ex_id").as("ex_id"), col("_ex_hash").as("h2")),
-        Seq("ex_id"))
+    * `threshold` of an indexed one. The batch pays decode + hash over
+    * ITSELF only; the probe is [[graft.dedup.Banding.Index.candidates]]
+    * plus two 8-byte hash joins for the exact popcount verify.
+    * `bandBits` must match the index build. Anti-join `in_id` away for
+    * an ingest keep set: batch-internal near-dups all survive that
+    * (run [[phashNearDups]] within the batch first when that matters). */
+  def phashProbe(grid: DataFrame, index: Banding.Index,
+                 threshold: Int = 6, bandBits: Int = 15): DataFrame = {
+    val hashes = hashesOf(grid)
+    index.candidates(phashBands(hashes, bandBits), "media_id")
+      .join(hashes.select(col("media_id").as("_in_id"), col("dhash").as("h1")).distinct(),
+        Seq("_in_id"))
+      .join(index.payload.select(col("_ex_id"), col("_ex_hash").as("h2")), Seq("_ex_id"))
       .withColumn("dist", bit_count(col("h1").bitwiseXOR(col("h2"))))
       .filter(col("dist") <= threshold)
-      .select(col("in_id"), col("ex_id"), col("dist"))
-  }
-
-  /** Batch media that are NOT near-dups of the corpus — the keep set
-    * of an ingest step: [[probeMediaPhashIndex]] matches anti-joined
-    * away. Batch-internal near-dups all survive (the incremental-dedup
-    * family contract; run [[phashNearDups]] within the batch first
-    * when that matters). */
-  def dedupAgainstMediaPhashIndex(media: DataFrame, grid: DataFrame,
-                                  index: MediaPhashIndex, threshold: Int = 6,
-                                  bandBits: Int = 15): DataFrame = {
-    val matched = probeMediaPhashIndex(grid, index, threshold, bandBits)
-      .select(col("in_id")).distinct()
-    media.join(matched, media("media_id") === col("in_id"), "left_anti")
-  }
-
-  /** Index MERGE — append a batch's media to an existing
-    * [[MediaPhashIndex]] at DELTA cost (the
-    * [[graft.dedup.Dedup.corpusNearDupIndexMerge]] fragment
-    * semantics): per-batch fragments unioned, no rescan (and no
-    * re-decode) of what's already indexed. The merged band table is
-    * FRAGMENTED — a (band, bkey) key present in both sides keeps two
-    * rows, which [[probeMediaPhashIndex]] handles by construction (the
-    * probe equi-join matches every fragment row; explode +
-    * dropDuplicates unions the id groups) — so probing a merged index
-    * equals probing a full rebuild, with ONE divergence:
-    * `maxBucketSize` judges each fragment's bucket on its own rather
-    * than the combined bucket (the price of never reading the existing
-    * fragments; run [[compactMediaPhashIndex]] with the cap to restore
-    * build-time semantics). Compute cost: decode + hash over `newGrid`
-    * only. */
-  def mediaPhashIndexMerge(index: MediaPhashIndex, newGrid: DataFrame,
-                           bandBits: Int = 15,
-                           maxBucketSize: Option[Int] = Some(1024)): MediaPhashIndex = {
-    val delta = mediaPhashIndex(newGrid, bandBits, maxBucketSize)
-    MediaPhashIndex(index.bands.unionByName(delta.bands),
-      index.hashes.unionByName(delta.hashes))
-  }
-
-  /** Materialize a [[MediaPhashIndex]] to parquet — the persisted twin
-    * (the [[graft.dedup.Dedup.saveNearDupIndex]] amortization): the
-    * corpus decode + hash + banding are paid once at build; every
-    * batch then reads two hash-sized parquet tables. */
-  def saveMediaPhashIndex(grid: DataFrame, path: String, bandBits: Int = 15,
-                          maxBucketSize: Option[Int] = Some(1024)): Unit = {
-    val idx = mediaPhashIndex(grid, bandBits, maxBucketSize)
-    idx.bands.write.mode("overwrite").parquet(s"$path/bands")
-    idx.hashes.write.mode("overwrite").parquet(s"$path/hashes")
-  }
-
-  /** Append ONLY a new batch's band/hash fragments to a
-    * [[saveMediaPhashIndex]] tree — write volume scales with the
-    * batch, never the corpus. [[loadMediaPhashIndex]] reads fragments
-    * transparently. */
-  def appendMediaPhashIndex(newGrid: DataFrame, path: String, bandBits: Int = 15,
-                            maxBucketSize: Option[Int] = Some(1024)): Unit = {
-    val idx = mediaPhashIndex(newGrid, bandBits, maxBucketSize)
-    idx.bands.write.mode("append").parquet(s"$path/bands")
-    idx.hashes.write.mode("append").parquet(s"$path/hashes")
-  }
-
-  /** Load a persisted [[MediaPhashIndex]]. Probe `bandBits` must match
-    * the build's. */
-  def loadMediaPhashIndex(spark: SparkSession, path: String): MediaPhashIndex =
-    MediaPhashIndex(
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/hashes"))
-
-  /** Re-group a fragmented (merged/appended) index into the canonical
-    * one-row-per-(band, bkey) form and re-apply `maxBucketSize`
-    * against the COMBINED buckets — after which the index is exactly
-    * what [[mediaPhashIndex]] over the whole corpus builds
-    * (spec-pinned up to id order inside a bucket). One (band, bkey)
-    * exchange over the band table — index-sized, an occasional
-    * maintenance pass, not part of the per-batch ingest path. */
-  def compactMediaPhashIndex(index: MediaPhashIndex,
-                             maxBucketSize: Option[Int] = Some(1024)): MediaPhashIndex = {
-    val grouped = index.bands
-      .select(col("band"), col("bkey"), explode(col("ex_ids")).as("_id"))
-      .groupBy(col("band"), col("bkey")).agg(collect_list(col("_id")).as("ex_ids"))
-    val capped = maxBucketSize.fold(grouped)(m => grouped.filter(size(col("ex_ids")) <= m))
-    MediaPhashIndex(capped, index.hashes.dropDuplicates())
+      .select(col("_in_id").as("in_id"), col("_ex_id").as("ex_id"), col("dist"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.dedup.Dedup
+import graft.dedup.{Banding, Dedup}
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftPins
@@ -149,7 +149,6 @@ object ExtensionQueries {
       }
     /** Test observability. */
     private[ops] val builds = new java.util.concurrent.atomic.AtomicLong()
-    private[ops] def sessionCount: Int = bySession.size
     private[ops] def retiredCount: Int = graveyard.size
     private[ops] def hasSession(s: SparkSession): Boolean =
       bySession.containsKey(sessionId(s))
@@ -283,15 +282,15 @@ object ExtensionQueries {
     * shingle arrays in block storage — the memory-for-CPU trade the
     * persisted rows resolve toward disk. */
   private[ops] def coNdCorpusIndex(s: org.apache.spark.sql.SparkSession,
-                                   d: String): Dedup.CorpusNearDupIndex =
+                                   d: String): Banding.Index =
     FaceCache.get(s, "ndcorpusindex", datasetSignature(d)) {
-      val idx = Dedup.corpusNearDupIndex(
+      val idx = Dedup.nearDupIndex(
         Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)) =!= 0),
         maxBucketSize = Some(64))
-      Dedup.CorpusNearDupIndex(
+      Banding.Index(
         GraftPins.cut(idx.bands, pinned = true),
-        GraftPins.cut(idx.shingles, pinned = true))
-    }(idx => { releaseDf(idx.bands); releaseDf(idx.shingles) })
+        GraftPins.cut(idx.payload, pinned = true))
+    }(idx => { releaseDf(idx.bands); releaseDf(idx.payload) })
 
   /** The SemDeDup k-means centroids (nClusters 4, dim 64, iters 2 —
     * the two semantic-dedup rows' shared clustering) — a DRIVER-HELD
@@ -412,22 +411,20 @@ object ExtensionQueries {
 
   private[ops] def ndIndexFor(s: org.apache.spark.sql.SparkSession, d: String): String =
     indexFace(s, d, "ndindex_saved") { path =>
-      // ride the ndcorpusindex face: saveNearDupIndex would recompute
-      // corpusNearDupIndex on the IDENTICAL input (docs with id%5 != 0,
-      // same k/rowsPerBand/shingleW/maxBucketSize) — the face already
-      // holds those two tables checkpointed, so the build is just the
-      // two writes; loaded probes join the tables, so row order is
+      // ride the ndcorpusindex face: a fresh Dedup.nearDupIndex would
+      // recompute the IDENTICAL index (docs with id%5 != 0, same
+      // k/rowsPerBand/shingleW/maxBucketSize) — the face already holds
+      // its two tables checkpointed, so the build is just the two
+      // writes; loaded probes join the tables, so row order is
       // immaterial and results are unchanged (oracle-pinned)
-      val idx = coNdCorpusIndex(s, d)
-      idx.bands.write.mode("overwrite").parquet(s"$path/bands")
-      idx.shingles.write.mode("overwrite").parquet(s"$path/shingles")
+      coNdCorpusIndex(s, d).save(path)
     }
 
   private[ops] def ndMergeIndexFor(s: org.apache.spark.sql.SparkSession, d: String): String =
     indexFace(s, d, "ndindex_merged") { path =>
-      Dedup.saveNearDupIndex(
-        Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)).isin(1, 2, 3)), path,
-        maxBucketSize = Some(64))
+      Dedup.nearDupIndex(
+        Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)).isin(1, 2, 3)),
+        maxBucketSize = Some(64)).save(path)
     }
 
   private[ops] def pqIndexFor(s: org.apache.spark.sql.SparkSession, d: String): String =

@@ -2,7 +2,7 @@ package graft.ops
 package catalog
 
 import graft.{Q, Tables}
-import graft.dedup.Dedup
+import graft.dedup.{Banding, Dedup}
 import graft.ops.ExtensionQueries.{coNdPairs, coNdClusters, coNdCorpusIndex, ndIndexFor, ndMergeIndexFor}
 import org.apache.spark.sql.functions._
 
@@ -163,7 +163,7 @@ object DedupCatalog {
     * index: the corpus-side shingling/signatures/band grouping — the
     * part that grows with the corpus, and the reason the in-flight form
     * scales with |corpus| per batch — materializes once
-    * ([[Dedup.saveNearDupIndex]]); each ingest batch then pays only
+    * ([[Banding.Index.save]]); each ingest batch then pays only
     * batch-proportional work. Identical parameters and result as
     * x_dedup_incremental_neardup, so the oracle is the same replay —
     * what changes is WHERE the corpus cost is paid. */
@@ -173,7 +173,7 @@ object DedupCatalog {
       val docs = Tables.documents(s, d)
       Dedup.dedupAgainstCorpusNearDupIndexed(
         incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-        index = Dedup.loadNearDupIndex(s, ndIndexFor(s, d)),
+        index = Banding.Index.load(s, ndIndexFor(s, d)),
         threshold = 0.5)
         .select(col("doc_id"), col("lang"))
     },
@@ -183,7 +183,7 @@ object DedupCatalog {
   /** Incremental near-dup dedup against a MERGED index: the persisted
     * corpus index (docs with id%5 ∈ {1,2,3}, built once) plus an
     * in-flight DELTA fragment for yesterday's batch (id%5 = 4), merged
-    * at delta cost ([[Dedup.corpusNearDupIndexMerge]] — no rescan of
+    * at delta cost ([[Banding.Index.merge]] — no rescan of
     * the persisted fragments), probed by today's batch (id%5 = 0).
     * This is the shape that fixes the catalog's worst scale row: the
     * non-persisted face rebuilds the WHOLE index per call (its 3.8×
@@ -197,10 +197,8 @@ object DedupCatalog {
     "x_dedup_index_merged",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val merged = Dedup.corpusNearDupIndexMerge(
-        Dedup.loadNearDupIndex(s, ndMergeIndexFor(s, d)),
-        docs.filter(pmod(col("doc_id"), lit(5)) === 4),
-        maxBucketSize = Some(64))
+      val merged = Banding.Index.load(s, ndMergeIndexFor(s, d)).merge(Dedup.nearDupIndex(
+        docs.filter(pmod(col("doc_id"), lit(5)) === 4), maxBucketSize = Some(64)))
       Dedup.dedupAgainstCorpusNearDupIndexed(
         incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0),
         index = merged, threshold = 0.5)

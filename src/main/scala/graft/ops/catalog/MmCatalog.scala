@@ -135,17 +135,6 @@ object MmCatalog {
     """.trim)
   )
 
-  /** Probe-against-persisted-index media near-dup: the corpus (docs
-    * with id % 4 ≠ 0) is decoded+hashed ONCE into a
-    * [[graft.mm.Multimodal.MediaPhashIndex]] (bucket-capped band
-    * groups + 8-byte hashes); the ingest batch (+16-luma re-encodes of
-    * corpus members, plus brand-new media) pays decode over itself
-    * only and probes with one (band, bkey) equi-join + popcount
-    * verify — the media twin of x_dedup_index_merged's text path.
-    * MERGE/append/compact fragment semantics are spec-pinned
-    * (merged == rebuilt); this row pins the probe arithmetic: the
-    * oracle replays stub luma, banding, the CORPUS-side bucket cap,
-    * the candidate join and the distance filter bit-for-bit. */
   /** Multi-keyframe video near-dup through the any-frame machine
     * ([[graft.mm.Multimodal.videoFrameGrid]]: up to 4 evenly-sampled
     * keyframes per video — real AVI chunk sampling on real
@@ -215,6 +204,17 @@ object MmCatalog {
     """.trim)
   )
 
+  /** Probe-against-persisted-index media near-dup: the corpus (docs
+    * with id % 4 ≠ 0) is decoded+hashed ONCE into a
+    * [[graft.mm.Multimodal.phashIndex]] (bucket-capped band
+    * groups + 8-byte hashes); the ingest batch (+16-luma re-encodes of
+    * corpus members, plus brand-new media) pays decode over itself
+    * only and probes with one (band, bkey) equi-join + popcount
+    * verify — the media twin of x_dedup_index_merged's text path.
+    * MERGE/append/compact fragment semantics are spec-pinned
+    * (merged == rebuilt); this row pins the probe arithmetic: the
+    * oracle replays stub luma, banding, the CORPUS-side bucket cap,
+    * the candidate join and the distance filter bit-for-bit. */
   val mmPhashIndexProbe: Q = Q(
     "x_mm_phash_index",
     (s, d) => {
@@ -226,8 +226,7 @@ object MmCatalog {
         .select((col("media_id") + 10000000L).as("media_id"),
           transform(col("luma"), v => least(v + 16, lit(255))).as("luma"))
         .unionByName(grid.filter(col("media_id") % 4 === 0))
-      val idx = Multimodal.mediaPhashIndex(corpus)
-      Multimodal.probeMediaPhashIndex(probe, idx, threshold = 6)
+      Multimodal.phashProbe(probe, Multimodal.phashIndex(corpus), threshold = 6)
     },
     Some("""
       WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),

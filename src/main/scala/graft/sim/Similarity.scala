@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.dedup.Banding
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -870,15 +871,9 @@ object Similarity {
     topKPerQuery(scored, k, fanout, qidCol, idCol)
   }
 
-  /** Cosine-nearest centroid id (the probe-side twin of
-    * [[kmeansAssign]], which argmins squared L2): argmax cosine, ties
-    * to the smallest list id, matching `ORDER BY cos DESC, list` in
-    * SQL. Same native-kernel transport as kmeansAssign. */
-  def nearestListByCosine(vec: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    element_at(nearestListsByCosine(vec, cents, 1), 1)
-
   /** The top-`nprobe` cosine-nearest centroid ids (multi-probe IVF) via
-    * the native KmeansNearestLists kernel — ordering (−cosine, list),
+    * the native KmeansNearestLists kernel — the probe-side twin of
+    * [[kmeansAssign]], which argmins squared L2 — ordering (−cosine, list),
     * replayable in SQL as `ROW_NUMBER() ... ORDER BY cos DESC, list`
     * with `rn <= nprobe`. Asking for more probes than lists returns
     * them all. The centroid matrix ships as a reference array or a
@@ -1075,10 +1070,8 @@ object Similarity {
                 .flatPlanes(dim, nBands * MaxBitsPerBand),
               dim, nBands, bits, MaxBitsPerBand))
             .as(Seq("band", "bucket")))
-        val cand = banded.groupBy(col("band"), col("bucket"))
-          .agg(collect_list(col("id")).as("ids"))
-          .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucketSize)
-          .select(org.apache.spark.sql.graftext.VectorExpressions.idPairs(col("ids")))
+        val cand = Banding.pairsFromIdLists(Banding.idLists(
+            banded, Seq("band", "bucket"), "id", Some(maxBucketSize)))
           .dropDuplicates()
         cand.join(v, "id1").join(u, "id2")
       }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.dedup.Dedup
+import graft.dedup.{Banding, Dedup}
 import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -56,7 +56,7 @@ object CorpusStream {
     * `Dedup.dedupAgainstCorpusNearDupMd5`.
     *
     * Shape: `foreachBatch` applying the BATCH operator against a
-    * prebuilt (cached/persisted) [[Dedup.CorpusNearDupIndex]]. The
+    * prebuilt (cached/persisted) [[Dedup.nearDupIndex]]. The
     * per-row keep decision needs a NOT-EXISTS over the row's band
     * fan-out — an aggregation back to the row — which Structured
     * Streaming cannot express stream-side without unsupported
@@ -158,7 +158,7 @@ object CorpusStream {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  def ingestNearDupDedup(docs: DataFrame, index: Dedup.CorpusNearDupIndex,
+  def ingestNearDupDedup(docs: DataFrame, index: Banding.Index,
                          outPath: String, checkpoint: String,
                          threshold: Double = 0.7, k: Int = 16,
                          rowsPerBand: Int = 2, shingleW: Int = 3): StreamingQuery =

@@ -48,9 +48,6 @@ object GraftPins {
   /** Is this RDD a registered durable face? (Sweepers must skip it.) */
   def isPinned(rddId: Int): Boolean = ids.contains(rddId)
 
-  /** Registered pin count (test observability). */
-  def pinnedCount: Int = ids.size
-
   /** The session's collision-free stable id (`sessionUUID` is
     * private[sql]; this is the face-cache key — identity hashes can
     * repeat across GC'd sessions, a UUID cannot). None for a

@@ -1,7 +1,6 @@
 package graft.corpus
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 

@@ -800,7 +800,6 @@ class CorpusSpec extends SparkSpec {
 
   test("zipfSlope: constant counts fit slope 0 / intercept ln(n) exactly; minCount truncates") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // three tokens x8 each (>= minCount 5) + one hapax (dropped)
     val text = (Seq.fill(8)("aa") ++ Seq.fill(8)("bb") ++ Seq.fill(8)("cc") :+ "zz").mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")

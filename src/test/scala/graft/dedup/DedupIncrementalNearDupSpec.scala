@@ -46,9 +46,9 @@ class DedupIncrementalNearDupSpec extends SparkSpec {
       incoming, existing, threshold = 0.5, maxBucketSize = Some(64))
       .select("doc_id").as[Long].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("nd-index").toString
-    Dedup.saveNearDupIndex(existing, dir, maxBucketSize = Some(64))
+    Dedup.nearDupIndex(existing, maxBucketSize = Some(64)).save(dir)
     val probed = Dedup.dedupAgainstCorpusNearDupIndexed(
-      incoming, Dedup.loadNearDupIndex(spark, dir), threshold = 0.5)
+      incoming, Banding.Index.load(spark, dir), threshold = 0.5)
       .select("doc_id").as[Long].collect().toSet
     assert(probed == inflight,
       s"persisted-index probe diverges: only-inflight=${inflight -- probed} only-probed=${probed -- inflight}")

@@ -64,11 +64,11 @@ class DedupSpec extends SparkSpec {
       (i.toLong, Seq.fill(rnd.nextInt(8) + 1)(rnd.nextInt(6).toLong))
     }
     val df = lists.toDF("key", "ids")
-    def pairs(f: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame) =
-      f(df, "ids").collect().map(r => (r.getLong(0), r.getLong(1)))
+    def pairs(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      f(df).collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
-    val fast = pairs(Dedup.pairsFromIdLists)
-    val hof = pairs(Dedup.pairsFromIdListsHof)
+    val fast = pairs(Banding.pairsFromIdLists)
+    val hof = pairs(Banding.pairsFromIdListsHof)
     assert(fast == hof)
   }
 
@@ -118,7 +118,7 @@ class DedupSpec extends SparkSpec {
       (11L, base + " extra trailing words appended here!"), // near-dup of B's 3
       (12L, "nothing like anything indexed before in either fragment batch")
     ).toDF("doc_id", "text")
-    val merged = Dedup.corpusNearDupIndexMerge(Dedup.corpusNearDupIndex(partA), partB)
+    val merged = Dedup.nearDupIndex(partA).merge(Dedup.nearDupIndex(partB))
     val viaMerged = Dedup.dedupAgainstCorpusNearDupIndexed(incoming, merged, threshold = 0.5)
       .collect().map(_.getLong(0)).toSet
     val viaFull = Dedup.dedupAgainstCorpusNearDupMd5(incoming, partA.unionByName(partB),
@@ -127,7 +127,7 @@ class DedupSpec extends SparkSpec {
     assert(viaMerged == Set(12L), viaMerged.toString)
     // the merged band table really is fragmented (shared keys keep 2 rows)
     assert(merged.bands.count() >=
-      Dedup.corpusNearDupIndex(partA.unionByName(partB)).bands.count())
+      Dedup.nearDupIndex(partA.unionByName(partB)).bands.count())
   }
 
   test("compactNearDupIndex(merge(A, B), cap) == corpusNearDupIndex(A ∪ B, cap), bucket order aside") {
@@ -137,22 +137,20 @@ class DedupSpec extends SparkSpec {
     val partB = Seq((3L, base),
       (4L, "wholly distinct vocabulary about orchestras rehearsing symphonies nightly")
     ).toDF("doc_id", "text")
-    def canon(idx: Dedup.CorpusNearDupIndex) =
-      idx.bands.select(col("band"), col("s"), array_sort(col("ex_ids")).as("ids"))
+    def canon(idx: Banding.Index) =
+      idx.bands.select(col("band"), col("s"), array_sort(col("ids")).as("ids"))
         .collect().map(r => (r.getInt(0), r.getString(1), r.getSeq[Long](2))).toSet
-    val compacted = Dedup.compactNearDupIndex(
-      Dedup.corpusNearDupIndexMerge(Dedup.corpusNearDupIndex(partA), partB),
-      maxBucketSize = Some(3))
-    val rebuilt = Dedup.corpusNearDupIndex(partA.unionByName(partB), maxBucketSize = Some(3))
+    val compacted = Dedup.nearDupIndex(partA).merge(Dedup.nearDupIndex(partB))
+      .compact(Some(3))
+    val rebuilt = Dedup.nearDupIndex(partA.unionByName(partB), maxBucketSize = Some(3))
     assert(canon(compacted) == canon(rebuilt))
     // the cap applies to COMBINED buckets after compaction: base's
     // bucket has 3 members across fragments (1, 5, 3) and survives at
     // cap 3; at cap 2 it must be dropped even though each fragment's
     // share is <= 2
-    val compact2 = Dedup.compactNearDupIndex(
-      Dedup.corpusNearDupIndexMerge(Dedup.corpusNearDupIndex(partA), partB),
-      maxBucketSize = Some(2))
-    val rebuilt2 = Dedup.corpusNearDupIndex(partA.unionByName(partB), maxBucketSize = Some(2))
+    val compact2 = Dedup.nearDupIndex(partA).merge(Dedup.nearDupIndex(partB))
+      .compact(Some(2))
+    val rebuilt2 = Dedup.nearDupIndex(partA.unionByName(partB), maxBucketSize = Some(2))
     assert(canon(compact2) == canon(rebuilt2))
     assert(canon(compact2) != canon(compacted), "cap 2 must drop the 3-member bucket")
   }
@@ -166,11 +164,11 @@ class DedupSpec extends SparkSpec {
       (11L, "a separate batch document with entirely novel token contents"),
       (12L, "unmatched probe text with no counterpart anywhere at all ok")).toDF("doc_id", "text")
     try {
-      Dedup.saveNearDupIndex(partA, dir)
+      Dedup.nearDupIndex(partA).save(dir)
       val filesAfterBuild = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => p.toString.endsWith(".parquet")).count()
-      Dedup.appendNearDupIndex(partB, dir)
-      val loaded = Dedup.loadNearDupIndex(spark, dir)
+      Dedup.nearDupIndex(partB).append(dir)
+      val loaded = Banding.Index.load(spark, dir)
       val kept = Dedup.dedupAgainstCorpusNearDupIndexed(incoming, loaded, threshold = 0.5)
         .collect().map(_.getLong(0)).toSet
       val full = Dedup.dedupAgainstCorpusNearDupMd5(incoming, partA.unionByName(partB),

@@ -493,18 +493,17 @@ class MultimodalSpec extends SparkSpec {
     val corpusB = grids(25 until 40, _ % 13)
     val all = grids(0 until 40, _ % 13)
     val probe = grids(100 until 110, _ % 13) // seeds 9..5 → exact stub collisions
-    val rebuilt = mediaPhashIndex(all, maxBucketSize = Some(8))
-    val merged = mediaPhashIndexMerge(
-      mediaPhashIndex(corpusA, maxBucketSize = Some(8)), corpusB,
-      maxBucketSize = Some(8))
-    val compacted = compactMediaPhashIndex(merged, maxBucketSize = Some(8))
-    def bandSet2(ix: MediaPhashIndex) = ix.bands
-      .select(col("band"), col("bkey"), col("ex_ids")).collect()
+    val rebuilt = phashIndex(all, maxBucketSize = Some(8))
+    val merged = phashIndex(corpusA, maxBucketSize = Some(8))
+      .merge(phashIndex(corpusB, maxBucketSize = Some(8)))
+    val compacted = merged.compact(Some(8))
+    def bandSet2(ix: graft.dedup.Banding.Index) = ix.bands
+      .select(col("band"), col("bkey"), col("ids")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toSet)).toSet
     assert(bandSet2(compacted) == bandSet2(rebuilt),
       "compacted merge must equal the full rebuild (up to in-bucket id order)")
     // probe equality: fragmented merged index == rebuilt index
-    def probeSet(ix: MediaPhashIndex) = probeMediaPhashIndex(probe, ix, threshold = 3)
+    def probeSet(ix: graft.dedup.Banding.Index) = phashProbe(probe, ix, threshold = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val pm = probeSet(merged)
     assert(pm == probeSet(rebuilt), "fragmented probe must equal rebuilt probe")
@@ -512,9 +511,9 @@ class MultimodalSpec extends SparkSpec {
     // persisted append path
     val dir = java.nio.file.Files.createTempDirectory("graft-mm-idx").toString
     try {
-      saveMediaPhashIndex(corpusA, dir, maxBucketSize = Some(8))
-      appendMediaPhashIndex(corpusB, dir, maxBucketSize = Some(8))
-      assert(probeSet(loadMediaPhashIndex(spark, dir)) == pm,
+      phashIndex(corpusA, maxBucketSize = Some(8)).save(dir)
+      phashIndex(corpusB, maxBucketSize = Some(8)).append(dir)
+      assert(probeSet(graft.dedup.Banding.Index.load(spark, dir)) == pm,
         "persisted fragments must probe identically to the in-memory merge")
     } finally {
       import scala.reflect.io.Directory
@@ -523,7 +522,8 @@ class MultimodalSpec extends SparkSpec {
     // ingest keep set: matched probes dropped, novel media kept
     val probeMedia = probe.select(col("media_id"),
       lit(Array.emptyByteArray).as("payload"), lit("image").as("media_type"))
-    val kept = dedupAgainstMediaPhashIndex(probeMedia, probe, rebuilt, threshold = 3)
+    val kept = probeMedia.join(phashProbe(probe, rebuilt, threshold = 3),
+        col("media_id") === col("in_id"), "left_anti")
       .select(col("media_id")).collect().map(_.getLong(0)).toSet
     val matchedIds = pm.map(_._1)
     assert(kept == (100L until 110L).toSet -- matchedIds, s"kept=$kept matched=$matchedIds")

@@ -156,4 +156,21 @@ class CkSpec extends SparkSpec {
     assert(measured + ("dedupClusters" -> cc) == Map("kcore" -> 1, "ktruss" -> 9, "lpa" -> 2,
       "pageRankConverged" -> 2, "dedupClusters" -> 7))
   }
+
+  test("phashNearDups: the id-list candidates run no more jobs than the band self-join did") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val base = (0L until 40L).map(i => (i, Array.fill(66)(rnd.nextInt(256))))
+    val dups = base.collect { case (i, lu) if i % 4 == 0 =>
+      val v = lu.clone(); v(rnd.nextInt(66)) = rnd.nextInt(256); (i + 1000L, v)
+    }
+    // six copies of the first grid: its buckets pass the cap below
+    val same = (2000L until 2006L).map(i => (i, base.head._2))
+    val grid = (base ++ dups ++ same).toDF("media_id", "luma")
+    val (pairs, jobs) = jobsOf(graft.mm.Multimodal.phashNearDups(grid, threshold = 3,
+      maxBucketSize = Some(6)).collect())
+    assert(pairs.nonEmpty)
+    // 6: the count measured for the self-join form this replaced
+    assert(jobs <= 6, s"phashNearDups ran $jobs jobs")
+  }
 }

@@ -8,7 +8,6 @@ import graft.SparkSpec
   * graph (the same independence idea as the catalog oracle, in-suite).
   */
 class GraphOpsSpec extends SparkSpec {
-  import org.apache.spark.sql.DataFrame
 
   private def stats(edges: Seq[(Long, Long)]): (Long, Long, Long, Long, Double) = {
     import spark.implicits._

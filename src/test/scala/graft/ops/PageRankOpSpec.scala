@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** PageRankOp: the distributed fixed-point iteration must agree EXACTLY
   * (integer-for-integer) with an independent single-threaded replay of

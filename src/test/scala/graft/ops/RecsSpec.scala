@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Semantics pins for item-item CF: the binary-cosine formula on exact
   * basket counts, the minCo prune, and the maxBasket skew fuse (a

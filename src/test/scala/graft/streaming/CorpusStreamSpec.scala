@@ -95,7 +95,6 @@ class CorpusStreamSpec extends SparkSpec {
 
   test("streaming near-dup ingest == batch operator, across micro-batches") {
     import graft.dedup.Dedup
-    import org.apache.spark.sql.functions.col
     val base = "the quick brown fox jumps over the lazy dog and runs far away " +
       "through fields of green grass under a bright blue summer sky today"
     val fresh = "a short story about mountains rivers forests and the many " +
@@ -103,7 +102,7 @@ class CorpusStreamSpec extends SparkSpec {
     val corpus = Seq((100L, base), (101L, "unrelated corpus text about engines " +
       "and query optimization with columnar storage and vectorized execution"))
       .toDF("doc_id", "text")
-    val index = Dedup.corpusNearDupIndex(corpus).cache()
+    val index = Dedup.nearDupIndex(corpus).cache()
 
     val dir = java.nio.file.Files.createTempDirectory("neardup-stream").toString
     val b1 = Seq((1L, base.replace("today", "tonight")), (2L, fresh)) // near-dup + new
@@ -131,7 +130,6 @@ class CorpusStreamSpec extends SparkSpec {
   }
 
   test("cdc chunk-store ingest: re-crawled doc with an insertion re-uses post-boundary chunks") {
-    import org.apache.spark.sql.functions.col
     // fixture built under the operator's own boundary rule (md5 % 16 == 0)
     val words = (1 to 300).map(i => s"c$i")
     val (bnd, plain) = words.partition(w => graft.dedup.Dedup.md5Hash60Value(w) % 16 == 0)

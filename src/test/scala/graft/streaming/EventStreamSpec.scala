@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 

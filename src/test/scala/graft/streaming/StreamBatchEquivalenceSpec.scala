@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp

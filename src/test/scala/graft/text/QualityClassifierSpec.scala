@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** QualityClassifier pinned three ways: an independent plain-JVM replay
   * of the whole chain (tokenize → grams → md5-60 buckets → synthetic

@@ -25,7 +25,6 @@ object IdPairsBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     // 200k buckets x fanout 24 -> 200k * 24*23/2 = 55.2M pairs
     val nKeys = 200000

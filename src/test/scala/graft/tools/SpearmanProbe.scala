@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decomposition probe for x_spearman at sf0.1 (scratch, not part of

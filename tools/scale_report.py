@@ -41,7 +41,8 @@ def main(p01, p1):
     lines.append("sf1 is generated by `graft.GenData` from the driver's sf0.1 "
                  "(10 key-shifted copies preserving join selectivities, dup-group "
                  "sizes, and per-copy embedding geometry — see GenData's scaladoc). "
-                 "Both runs: `graft.Bench`, local[32], min of 2 runs per query. "
+                 f"Runs: `graft.Bench`, local[{b01.get('cpus', '?')}] at sf0.1 and "
+                 f"local[{b1.get('cpus', '?')}] at sf1, min of 2 runs per query. "
                  "Sub-second queries are dominated by fixed per-query overhead "
                  "(job scheduling, codegen), so their ratios understate efficiency; "
                  "the ratio column matters for queries ≥ ~0.5s at sf1.")
