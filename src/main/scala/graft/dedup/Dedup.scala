@@ -17,31 +17,20 @@ object Dedup {
 
   // ---------------------------------------------------------------- exact
 
-  /** Exact dedup: groupBy the full text (or its fingerprint at scale —
-    * shuffling a 64-bit hash beats shuffling document bodies), keep the
-    * smallest id as canonical. */
+  /** Exact dedup: groupBy the full text (or its fingerprint at scale,
+    * [[exactByFingerprint128]] — shuffling a hash beats shuffling
+    * document bodies), keep the smallest id as canonical. */
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.groupBy(col(textCol))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-
-  /** Exact dedup at scale: hash first, shuffle the hash. 64-bit
-    * birthday bound n²/2^65: ~3e-4 expected collisions at 10^8 docs,
-    * but ~270 at 10^11 — at that scale use exact() or
-    * [[exactByFingerprint128]] so distinct docs aren't silently
-    * merged. */
-  def exactByFingerprint(docs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** 120-bit engine-portable fingerprint: both md5 halves of the
     * normalized text (first/second 15 hex chars) as 60-bit longs in a
     * struct — a 16-byte shuffle key with a birthday bound of
-    * n²/2^121 ≈ 4e-15 expected collisions even at 10^11 docs, the
-    * design point where the 64-bit key's ~270 expected collisions start
-    * silently merging distinct documents. DuckDB replays both halves
-    * exactly (same md5-hex-prefix construction as [[md5Hash60]]). */
+    * n²/2^121 ≈ 4e-15 expected collisions even at 10^11 docs, where a
+    * 64-bit key's ~270 expected collisions would silently merge
+    * distinct documents. DuckDB replays both halves exactly (same
+    * md5-hex-prefix construction as [[md5Hash60]]). */
   def fingerprint128(text: Column): Column = {
     val h = md5Fingerprint(text)
     struct(
@@ -49,10 +38,10 @@ object Dedup {
       conv(substring(h, 17, 15), 16, 10).cast("long").as("f2"))
   }
 
-  /** [[exactByFingerprint]] on the collision-hardened 120-bit md5-pair
-    * key — the default for corpus-scale (≥ 10^10 docs) exact dedup.
-    * Same shape: one hash-keyed groupBy, 16 bytes per row through the
-    * exchange instead of the document body. */
+  /** Exact dedup keyed on the collision-hardened 120-bit md5-pair
+    * [[fingerprint128]] — the corpus-scale form of [[exact]]: one
+    * hash-keyed groupBy, 16 bytes per row through the exchange instead
+    * of the document body. */
   def exactByFingerprint128(docs: DataFrame, idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame =
     docs.select(col(idCol), fingerprint128(col(textCol)).as("fp"))
@@ -78,72 +67,7 @@ object Dedup {
       i => concat_ws(" ", slice(toks, i, lit(w)))))
   }
 
-  /** 64-bit hashes of the w-token shingles via the native RollingHashes
-    * expression — one pass per row, no interpreted HOF chain, and every
-    * downstream shuffle carries 8-byte longs instead of shingle text.
-    * Multiset (duplicate windows retained): min-aggregation and
-    * distinct-set arithmetic are both duplicate-insensitive, so callers
-    * that need the set apply array_distinct. */
-  def shingleHashes(text: Column, w: Int = 3): Column =
-    org.apache.spark.sql.graftext.VectorExpressions.rollingHashes(
-      TextAnalysis.tokens(text), w)
-
   // ----------------------------------------------------------- minhash/LSH
-
-  /** MinHash signatures, fully NARROW: one native rolling-hash pass
-    * over the tokens, then one native k×|shingles| min loop per row —
-    * no explode, no shuffle, no aggregation. The map stage emits
-    * (id, k×8 bytes) straight into LSH banding; at 100 TB the entire
-    * signature computation rides the scan. */
-  def minhashSignatures(docs: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text", k: Int = 64,
-                        shingleW: Int = 3): DataFrame =
-    docs.select(col(idCol),
-      org.apache.spark.sql.graftext.VectorExpressions.minhashSignature(
-        shingleHashes(col(textCol), shingleW), k).as("sig"))
-
-  /** LSH banding: split the k-wide signature into bands of `rowsPerBand`
-    * and hash each band to one bucket key. Docs sharing any band bucket
-    * become candidate pairs. Returns (idCol, band, bucket) — exploded,
-    * one row per band. */
-  def lshBuckets(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                 k: Int = 64, rowsPerBand: Int = 8, shingleW: Int = 3): DataFrame = {
-    val nBands = k / rowsPerBand
-    minhashSignatures(docs, idCol, textCol, k, shingleW)
-      .select(col(idCol), posexplode(
-        transform(sequence(lit(0), lit(nBands - 1)),
-          b => xxhash64(concat_ws(",",
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))).as(Seq("band", "bucket")))
-  }
-
-  /** MinHash+LSH near-dup candidate pairs with exact Jaccard verify.
-    * Candidates come from grouping band buckets and expanding id pairs
-    * (the signature pipeline — shingle, explode, 64-way min agg — runs
-    * once; a bucket self-join would run it twice). Shuffled payload is
-    * (bucket, id) pairs, never text; text is re-joined per *candidate*
-    * for verification. */
-  def minhashNearDups(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", threshold: Double = 0.7,
-                      k: Int = 64, rowsPerBand: Int = 8, shingleW: Int = 3,
-                      maxBucketSize: Option[Int] = None): DataFrame = {
-    val candidates = Banding.pairsFromIdLists(Banding.idLists(
-        lshBuckets(docs, idCol, textCol, k, rowsPerBand, shingleW),
-        Seq("band", "bucket"), idCol, maxBucketSize))
-      .dropDuplicates()
-    // exact Jaccard over hashed shingle SETS — same value as over the
-    // shingle strings modulo 64-bit collisions, at a fraction of the
-    // memory/compare cost per candidate pair
-    val sh = docs.select(col(idCol),
-      array_distinct(shingleHashes(col(textCol), shingleW)).as("sh"))
-    candidates
-      .join(sh.as("s1"), col("id1") === col(s"s1.$idCol"))
-      .join(sh.as("s2"), col("id2") === col(s"s2.$idCol"))
-      .withColumn("jaccard",
-        size(array_intersect(col("s1.sh"), col("s2.sh"))).cast("double") /
-          size(array_union(col("s1.sh"), col("s2.sh"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
-  }
 
   /** Per-band LSH signatures on the md5 hash family: one row per
     * (doc, band) with the band's signature slice rendered as a compact
@@ -167,16 +91,18 @@ object Dedup {
 
   /** MinHash+LSH near-dups on the md5 hash family — the engine-portable
     * construction the DuckDB oracle can replay hash-for-hash (md5 is
-    * identical everywhere; xxhash64 is Spark-only). One digest per
-    * shingle, k hashes by Carter-Wegman double hashing over the two
-    * 60-bit md5 halves (native Md5MinHash expression); bands of
+    * identical everywhere). One digest per shingle, k hashes by
+    * Carter-Wegman double hashing over the two 60-bit md5 halves
+    * (native Md5MinHash expression); bands of
     * `rowsPerBand` signature values (r=2 default: a candidate pair must
     * share a FULL band, which keeps the false-candidate rate — and the
     * verify-stage work — bounded as the corpus grows; r=1 degenerates
-    * into every pair sharing any single min). Exact Jaccard
-    * verification keeps precision. Same candidate-expansion shape as
-    * minhashNearDups; the xxhash/splitmix operator remains the
-    * (hash-cheaper) in-engine scale path. */
+    * into every pair sharing any single min). Candidates come from
+    * grouping band keys and expanding id pairs
+    * ([[Banding.pairsFromIdLists]]: the signature pass runs once; a
+    * bucket self-join would run it per side); only (key, id) rows
+    * shuffle, and the shingles are re-joined per candidate for the
+    * exact Jaccard verify, which keeps precision. */
   def minhashNearDupsMd5(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text", threshold: Double = 0.7,
                          k: Int = 16, rowsPerBand: Int = 2,
@@ -290,8 +216,8 @@ object Dedup {
     * ±1 per bit position → per-position sums via a zip_with fold → sign
     * bits recombined (bit b set iff more tokens have it set than not).
     * Near-dups then differ in few bits (hamming distance). The hash
-    * column is pluggable so an engine-portable hash (e.g. md5-derived)
-    * can replace xxhash64 where cross-engine verification matters. */
+    * column is pluggable; [[simhashMd5]] is this over [[md5Hash60]]
+    * token hashes. */
   def simhashFrom(hashes: Column, bits: Int): Column = {
     val masks = array((0 until bits).map(b => lit(1L << b)): _*)
     val zeros = array((0 until bits).map(_ => lit(0L)): _*)
@@ -305,11 +231,6 @@ object Dedup {
       zip_with(bitSums, masks, (s, m) => when(s > 0, m).otherwise(lit(0L))),
       lit(0L), (acc, v) => acc.bitwiseOR(v))
   }
-
-  /** 64-bit SimHash of the whitespace tokens (xxhash64 basis — the
-    * fast in-engine path). */
-  def simhash(text: Column): Column =
-    simhashFrom(transform(TextAnalysis.tokens(text), t => xxhash64(t)), 64)
 
   /** 60-bit engine-portable token hash: the first 15 hex chars of
     * md5(token) as a long. Bit-for-bit reproducible in any engine with
@@ -327,8 +248,8 @@ object Dedup {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** SimHash on the md5 basis — used by the oracle-checked catalog
-    * query; same algorithm as simhash, different hash family. Native
+  /** 60-bit SimHash of the whitespace tokens on the md5 basis — the
+    * oracle-replayable signature the catalog query uses. Native
     * end-to-end (one digest per token + a tight bit-count loop); the
     * column-function equivalent is
     * simhashFrom(transform(tokens, md5Hash60), 60). */
@@ -336,9 +257,6 @@ object Dedup {
     val V = org.apache.spark.sql.graftext.VectorExpressions
     V.simhashFrom(V.md5Hashes60(TextAnalysis.tokens(text)), 60)
   }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Duplicate-span detection: for every w-token window (stride 1) of
     * every document, hash the window text ([[md5Hash60]]) and count
@@ -943,7 +861,8 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs: candidates = docs sharing at
     * least one shingle (group by shingle, expand id pairs — shingles
     * the corpus once; a shingle self-join would do it once per side),
-    * verified with exact set arithmetic. Oracle-friendly (no hashing).
+    * verified with exact set arithmetic. Oracle-friendly (the md5
+    * shingle key replays in SQL).
     *
     * `maxShingleDocFreq`: a shingle present in f docs expands to f²/2
     * pairs inside one task, so a stop-word shingle at corpus scale is
@@ -955,9 +874,8 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", threshold: Double = 0.05,
                         shingleW: Int = 3,
-                        maxShingleDocFreq: Option[Int] = None,
-                        exact: Boolean = false): DataFrame = {
-    commonShinglePairs(docs, idCol, textCol, shingleW, maxShingleDocFreq, exact)
+                        maxShingleDocFreq: Option[Int] = None): DataFrame = {
+    commonShinglePairs(docs, idCol, textCol, shingleW, maxShingleDocFreq)
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")))
       .filter(col("jaccard") >= threshold)
@@ -973,9 +891,8 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String = "doc_id",
                        textCol: String = "text", threshold: Double = 0.8,
                        shingleW: Int = 3,
-                       maxShingleDocFreq: Option[Int] = None,
-                       exact: Boolean = false): DataFrame =
-    commonShinglePairs(docs, idCol, textCol, shingleW, maxShingleDocFreq, exact)
+                       maxShingleDocFreq: Option[Int] = None): DataFrame =
+    commonShinglePairs(docs, idCol, textCol, shingleW, maxShingleDocFreq)
       .withColumn("containment",
         col("n_common").cast("double") / least(col("n1"), col("n2")))
       .filter(col("containment") >= threshold)
@@ -990,24 +907,19 @@ object Dedup {
     * a stop-shingle shared by half the corpus would otherwise expand
     * n²/2 candidate pairs.
     *
-    * By default (`exact = false`) the dictionary key is the 60-bit md5
-    * of the shingle, NOT the shingle text: the doc-frequency groupBy is
-    * the widest exchange of this family, and hashing shrinks its key
-    * from a w-token string (~20-40 bytes + comparison cost) to an
-    * 8-byte long — the same discipline the minhash path applies via
-    * shingleHashes. Set arithmetic then runs over the hashed shingle
-    * universe (two shingles colliding in 60 bits would count as one —
-    * ~n²/2⁶¹ expected, zero in practice, and the md5 construction
-    * replays exactly in the SQL oracle). `exact = true` keeps the
-    * original string-keyed path for audits. */
+    * The dictionary key is the 60-bit md5 of the shingle, NOT the
+    * shingle text: the doc-frequency groupBy is the widest exchange of
+    * this family, and hashing shrinks its key from a w-token string
+    * (~20-40 bytes + comparison cost) to an 8-byte long. Set
+    * arithmetic then runs over the hashed shingle universe (two
+    * shingles colliding in 60 bits would count as one — ~n²/2⁶¹
+    * expected, zero in practice, and the md5 construction replays
+    * exactly in the SQL oracle). */
   private def commonShinglePairs(docs: DataFrame, idCol: String, textCol: String,
                                  shingleW: Int,
-                                 maxShingleDocFreq: Option[Int],
-                                 exact: Boolean = false): DataFrame = {
-    val keyed: Column =
-      if (exact) shingles(col(textCol), shingleW)
-      else array_distinct(org.apache.spark.sql.graftext.VectorExpressions
-        .md5Hashes60(shingles(col(textCol), shingleW)))
+                                 maxShingleDocFreq: Option[Int]): DataFrame = {
+    val keyed = array_distinct(org.apache.spark.sql.graftext.VectorExpressions
+      .md5Hashes60(shingles(col(textCol), shingleW)))
     val sizes = docs.select(col(idCol), size(keyed).as("n"))
     Banding.pairsFromIdLists(Banding.idLists(docs.select(col(idCol), explode(keyed).as("g")),
         Seq("g"), idCol, maxShingleDocFreq))

@@ -14,10 +14,6 @@ object VectorFunctions {
   def sortedIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graftext.VectorExpressions.sortedIntersectCount(a, b)
 
-  /** Native rolling-window xxhash64 fingerprints of a token array. */
-  def rollingHashes(tokens: Column, w: Int): Column =
-    org.apache.spark.sql.graftext.VectorExpressions.rollingHashes(tokens, w)
-
   /** Count-min-sketch point estimate of a long key against a broadcast
     * sketch (never underestimates — the heavy-hitters prefilter). */
   def cmsEstimateBcast(
@@ -31,9 +27,8 @@ object VectorFunctions {
     org.apache.spark.sql.graftext.VectorExpressions.jaroWinkler(a, b)
 
   /** Register the FULL native-function surface for SQL use on a live
-    * session (dot_product, rolling_hashes, rolling_ngrams,
-    * minhash_signature, md5_minhash, md5_min, md5_hashes60,
-    * simhash_from, normalize_ws, text_stats, id_pairs) — the same list
+    * session (dot_product, md5_minhash, md5_hashes60, simhash_from,
+    * id_pairs, ... — every GraftFunctionRegistry entry): the same list
     * GraftExtensions injects at builder time; both iterate
     * GraftFunctionRegistry so the surfaces cannot drift. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

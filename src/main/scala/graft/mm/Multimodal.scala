@@ -733,60 +733,40 @@ object Multimodal {
   }
 
   /** Media-level near-dup pairs from a multi-frame grid: per-FRAME
-    * dHash + banded-Hamming blocking (identical banding arithmetic to
-    * [[phashNearDups]], keyed by (media, frame)), exact popcount
-    * verify on candidate frame pairs, and media pairs surface when ANY
-    * cross-media frame pair lands within `threshold` — so two videos
-    * pair if they SHARE content anywhere in the sampled set, which is
-    * what survives re-edits, intros and scene reordering. Output:
-    * (id1, id2, dist), id1 < id2, dist = the MINIMUM matching
+    * dHash + banded-Hamming blocking (the [[phashNearDups]] band rows
+    * and bucket policy, with one long id per (media, frame) row),
+    * exact popcount verify on candidate frame pairs, and media pairs
+    * surface when ANY cross-media frame pair lands within `threshold` —
+    * so two videos pair if they SHARE content anywhere in the sampled
+    * set, which is what survives re-edits, intros and scene reordering.
+    * Output: (id1, id2, dist), id1 < id2, dist = the MINIMUM matching
     * frame-pair distance (deterministic: min over an exact set).
     *
-    * Scale shape: decode+hash once per frame row (checkpointed);
-    * exchanges carry (band, 8-byte key, media, frame); the bucket cap
-    * counts FRAME rows (a hub bucket of f frames fans f²/2 candidate
-    * pairs — same skew policy, applied at frame granularity); the
-    * per-media fan-in is bounded by maxFrames, so the candidate
-    * blowup over single-frame is ≤ maxFrames² per media pair. */
+    * Scale shape: decode+hash once per frame row (checkpointed, which
+    * also fixes each row's `monotonically_increasing_id`); the only
+    * candidate exchange is the (band, bkey) grouping of frame ids
+    * ([[graft.dedup.Banding.idLists]]), whose cap counts FRAME rows (a
+    * hub bucket of f frames fans f²/2 candidate pairs — same skew
+    * policy, applied at frame granularity); the per-media fan-in is
+    * bounded by maxFrames, so the candidate blowup over single-frame is
+    * ≤ maxFrames² per media pair. */
   def videoPhashNearDupsAnyFrame(frames: DataFrame, threshold: Int = 6,
                                  bandBits: Int = 15,
                                  maxBucketSize: Option[Int] = Some(1024)): DataFrame = {
-    require(DHashBits % bandBits == 0,
-      s"videoPhashNearDupsAnyFrame: bandBits must divide $DHashBits, got $bandBits")
-    val nBands = DHashBits / bandBits
-    val hashes = GraftPins.cut(frames
-      .select(col("media_id"), col("frame_no"), dhash60(col("luma")).as("dhash")))
-    val bands = hashes
-      .select(col("media_id"), col("frame_no"),
-        explode(sequence(lit(0), lit(nBands - 1))).as("band"), col("dhash"))
-      .withColumn("bkey",
-        expr(s"shiftrightunsigned(dhash, band * $bandBits)")
-          .bitwiseAND(lit((1L << bandBits) - 1)))
-      .select(col("media_id"), col("frame_no"), col("band"), col("bkey"))
-    val capped = maxBucketSize match {
-      case Some(cap) =>
-        bands.join(
-          bands.groupBy(col("band"), col("bkey"))
-            .agg(count(lit(1)).as("_f")).filter(col("_f") <= cap)
-            .select(col("band"), col("bkey")),
-          Seq("band", "bkey"))
-      case None => bands
-    }
-    val cand = capped.select(col("band"), col("bkey"),
-        col("media_id").as("id1"), col("frame_no").as("f1"))
-      .join(capped.select(col("band"), col("bkey"),
-        col("media_id").as("id2"), col("frame_no").as("f2")),
-        Seq("band", "bkey"))
-      .filter(col("id1") < col("id2")) // cross-media only
-      .select(col("id1"), col("f1"), col("id2"), col("f2")).distinct()
-    cand
-      .join(hashes.select(col("media_id").as("id1"), col("frame_no").as("f1"),
-        col("dhash").as("h1")), Seq("id1", "f1"))
-      .join(hashes.select(col("media_id").as("id2"), col("frame_no").as("f2"),
-        col("dhash").as("h2")), Seq("id2", "f2"))
+    val hashes = GraftPins.cut(frames.select(monotonically_increasing_id().as("frame_id"),
+      col("media_id"), dhash60(col("luma")).as("dhash")))
+    def side(i: Int): DataFrame = hashes.select(col("frame_id").as(s"id$i"),
+      col("media_id").as(s"m$i"), col("dhash").as(s"h$i"))
+    Banding.pairsFromIdLists(Banding.idLists(phashBands(hashes, bandBits, "frame_id"),
+        Seq("band", "bkey"), "frame_id", maxBucketSize))
+      .distinct()
+      .join(side(1), Seq("id1"))
+      .join(side(2), Seq("id2"))
+      .filter(col("m1") =!= col("m2")) // cross-media only
       .withColumn("fdist", bit_count(col("h1").bitwiseXOR(col("h2"))))
       .filter(col("fdist") <= threshold)
-      .groupBy(col("id1"), col("id2")).agg(min(col("fdist")).cast("int").as("dist"))
+      .groupBy(least(col("m1"), col("m2")).as("id1"), greatest(col("m1"), col("m2")).as("id2"))
+      .agg(min(col("fdist")).cast("int").as("dist"))
   }
 
   /** 60-bit gradient dHash over a [[LumaCells]]-wide luma array column:
@@ -836,16 +816,18 @@ object Multimodal {
 
   // ------------------------------------------- incremental pHash index
 
-  /** The (media_id, dhash, band, bkey) band rows of a (media_id, dhash)
+  /** The (`id`, dhash, band, bkey) band rows of an (`id`, dhash)
     * table: the 60-bit hash split into 60/`bandBits` bands, each band's
-    * bits its key. Shared by [[phashNearDups]], [[phashIndex]] and
-    * [[phashProbe]], so build and probe can never drift. */
-  private def phashBands(hashes: DataFrame, bandBits: Int): DataFrame = {
+    * bits its key. Shared by [[phashNearDups]],
+    * [[videoPhashNearDupsAnyFrame]], [[phashIndex]] and [[phashProbe]],
+    * so build and probe can never drift. */
+  private def phashBands(hashes: DataFrame, bandBits: Int,
+                         id: String = "media_id"): DataFrame = {
     require(DHashBits % bandBits == 0,
       s"phashBands: bandBits must divide $DHashBits, got $bandBits")
     val nBands = DHashBits / bandBits
     hashes
-      .select(col("media_id"), col("dhash"),
+      .select(col(id), col("dhash"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
       .withColumn("bkey",
         expr(s"shiftrightunsigned(dhash, band * $bandBits)")

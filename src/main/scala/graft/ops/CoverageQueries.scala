@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object CoverageQueries {
 
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")
-
   /** ROLLUP aggregation (hierarchy totals in one pass). The grouping
     * sets are computed over the FINEST-GRAIN pre-aggregate, not the
     * fact table: Expand would otherwise multiply every input row by

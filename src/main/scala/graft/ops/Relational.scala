@@ -17,9 +17,6 @@ import org.apache.spark.sql.graftext.GraftPins
   */
 object Relational {
 
-  /** Exact decimal sum of a double expression, surfaced as double. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")
-
   /** q1_agg — TPC-H Q1 shape: scan-heavy groupBy aggregation on
     * lineitem. At 100 TB this is a map-side partial agg + one shuffle on
     * (returnflag, linestatus) — 6 groups, so the reduce side is trivial;
@@ -89,7 +86,8 @@ object Relational {
     * One union of two agg-sized tables + one map-side-combined
     * re-aggregation — at 100 TB the raw data is never re-read; that
     * is the entire point. Carry SUMs as DECIMAL so the re-sum is
-    * order-independent (the [[dsum]] discipline). */
+    * order-independent (the DECIMAL(18,4) sum discipline of
+    * [[TpchQueries]]). */
   def mergeDistributive(prev: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "mergeDistributive: need at least one key")
     require(prev.columns.toSeq == delta.columns.toSeq,
@@ -125,8 +123,8 @@ object Relational {
     * ever touches data-sized input.
     *
     * Determinism: counts are exact BIGINTs, revenue rides
-    * DECIMAL(18,4) ([[dsum]] discipline) with zero-fill applied in
-    * decimal before the final double cast. */
+    * DECIMAL(18,4) (the [[TpchQueries]] decimal-sum discipline) with
+    * zero-fill applied in decimal before the final double cast. */
   def calendarFillDaily(orders: DataFrame): DataFrame = {
     val rollup = GraftPins.cut(orders
       .groupBy(to_date(col("o_orderdate")).as("day"), col("o_orderpriority"))

@@ -23,9 +23,7 @@ object DedupCatalog {
 
   /** MinHash+LSH near-dup pairs on the md5 hash family — fully
     * oracle-checked: DuckDB replays the identical minhash/banding/
-    * verification construction hash-for-hash. (The xxhash64+splitmix
-    * operator minhashNearDups is the faster in-engine scale path; its
-    * algorithm is identical and spec-pinned.) */
+    * verification construction hash-for-hash. */
   val dedupMinhash: Q = Q(
     "x_dedup_minhash",
     (s, d) => coNdPairs(s, d),
@@ -244,8 +242,7 @@ object DedupCatalog {
   )
 
   /** SimHash signatures on the md5-derived 60-bit token hash —
-    * oracle-checked bit-for-bit (the xxhash64 simhash is the in-engine
-    * fast path, spec-pinned). */
+    * oracle-checked bit-for-bit. */
   val dedupSimhash: Q = Q(
     "x_dedup_simhash",
     (s, d) => Tables.documents(s, d).select(

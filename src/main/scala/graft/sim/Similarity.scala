@@ -1158,7 +1158,7 @@ object Similarity {
                                  idCol: String, vecCol: String,
                                  maxClusterSize: Int,
                                  scoreCol: Option[String],
-                                 centroids: Option[Seq[(Int, Seq[Double])]] = None): DataFrame = {
+                                 centroids: Option[Seq[(Int, Seq[Double])]]): DataFrame = {
     require(nClusters >= 0,
       s"semanticDedup: nClusters must be > 0 (or 0 = adaptive), got $nClusters")
     // a caller-supplied centroid set (a session face — kmeans is

@@ -36,8 +36,6 @@ object QDigest {
     * after [[Sketch.compress]]. */
   final case class Sketch(bits: Int, k: Int, n: Long, nodes: Map[Long, Long]) {
 
-    private def leafBase: Long = 1L << bits
-
     /** Exact count addition — the commutative/associative merge law.
       * Compress afterwards to restore the size bound. */
     def merge(o: Sketch): Sketch = {

@@ -87,7 +87,7 @@ object CorpusStream {
                          val confidence: Double = 0.99,
                          val seed: Int = 42) extends Serializable {
     import org.apache.spark.util.sketch.CountMinSketch
-    private var sketch: CountMinSketch = CountMinSketch.create(eps, confidence, seed)
+    private val sketch: CountMinSketch = CountMinSketch.create(eps, confidence, seed)
     def merge(batchSketch: CountMinSketch): Unit = synchronized {
       sketch.mergeInPlace(batchSketch)
     }

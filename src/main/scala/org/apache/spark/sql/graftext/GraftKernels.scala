@@ -19,14 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object GraftKernels {
 
   private val space = UTF8String.fromString(" ")
-  private val GOLDEN = 0x9e3779b97f4a7c15L
-
-  @inline private def mix(x: Long): Long = {
-    var z = x
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
@@ -83,28 +75,6 @@ object GraftKernels {
       i += 1
     }
     new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
-  }
-
-  /** MinHashSignature: sig[j] = min over hashes g of splitmix64(g + GOLDEN·(j+1)). */
-  def minhashSignature(hashes: ArrayData, k: Int): ArrayData = {
-    val n = hashes.numElements()
-    val sig = new Array[Long](k)
-    var j = 0
-    while (j < k) {
-      val seed = GOLDEN * (j + 1)
-      var best = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        if (!hashes.isNullAt(i)) {
-          val h = mix(hashes.getLong(i) + seed)
-          if (h < best) best = h
-        }
-        i += 1
-      }
-      sig(j) = best
-      j += 1
-    }
-    new GenericArrayData(sig)
   }
 
   /** Md5MinHash: sig[j] = min over shingles of (a + j·b), a/b the 56-bit

@@ -225,9 +225,6 @@ object VectorExpressions {
   def rollingNgrams(tokens: Column, w: Int): Column =
     ExpressionUtils.column(RollingNgrams(ExpressionUtils.expression(tokens), w))
 
-  def minhashSignature(hashes: Column, k: Int): Column =
-    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(hashes), k))
-
   def md5MinHash(shingles: Column, k: Int): Column =
     ExpressionUtils.column(Md5MinHash(ExpressionUtils.expression(shingles), k))
 
@@ -394,8 +391,6 @@ private[graftext] object GraftFunctionRegistry {
       es => RollingHashes(es(0), intArg("rolling_hashes", es(1)))),
     ("rolling_ngrams", classOf[RollingNgrams],
       es => RollingNgrams(es(0), intArg("rolling_ngrams", es(1)))),
-    ("minhash_signature", classOf[MinHashSignature],
-      es => MinHashSignature(es(0), intArg("minhash_signature", es(1)))),
     ("md5_minhash", classOf[Md5MinHash],
       es => Md5MinHash(es(0), intArg("md5_minhash", es(1)))),
     ("md5_min", classOf[Md5Min], es => Md5Min(es(0))),

@@ -85,7 +85,7 @@ object CorpusDemo {
 
     // 3. Near-dup chain (x_dedup_minhash → x_dedup_clusters →
     //    x_cluster_reps → x_dedup_apply).
-    val pairs = Dedup.minhashNearDups(uniq, threshold = 0.5, maxBucketSize = Some(4096))
+    val pairs = Dedup.minhashNearDupsMd5(uniq, threshold = 0.5, maxBucketSize = Some(4096))
     val clusters = Dedup.dedupClusters(pairs)
     val reps = Dedup.clusterRepresentatives(uniq, clusters)
     val corpus = stage("neardup_dedup", Dedup.applyDedup(uniq, reps))

@@ -23,12 +23,12 @@ class DedupSpec extends SparkSpec {
 
   test("fingerprint dedup is whitespace/case robust") {
     val d = Seq((0L, "Hello  World"), (1L, "hello world"), (2L, "other")).toDF("doc_id", "text")
-    val out = Dedup.exactByFingerprint(d).filter(col("n_copies") > 1)
+    val out = Dedup.exactByFingerprint128(d).filter(col("n_copies") > 1)
     assert(rowSeq(out.select("keep_id", "n_copies")) == Seq(Seq(0L, 2L)))
   }
 
   test("minhash LSH finds the planted near-dup pair and skips unrelated") {
-    val pairs = Dedup.minhashNearDups(docs, threshold = 0.5)
+    val pairs = Dedup.minhashNearDupsMd5(docs, threshold = 0.5)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L))) // near-dup found
     assert(pairs.contains((0L, 3L))) // exact dup found
@@ -43,14 +43,14 @@ class DedupSpec extends SparkSpec {
     val clones = (0L until 10000L).map(i => (i, base))
     val distinctPair = Seq((20001L, unrelated), (20002L, unrelated + " extras"))
     val df = (clones ++ distinctPair).toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(df, threshold = 0.5, maxBucketSize = Some(64))
+    val pairs = Dedup.minhashNearDupsMd5(df, threshold = 0.5, maxBucketSize = Some(64))
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!pairs.exists(p => p._1 < 10000L), "capped clone buckets must expand no pairs")
     assert(pairs.contains((20001L, 20002L)), s"small buckets must survive the cap: $pairs")
   }
 
   test("simhash: near-dups differ in few bits, unrelated in many") {
-    val sig = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("s"))
+    val sig = docs.select(col("doc_id"), Dedup.simhashMd5(col("text")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sig(0L), sig(3L)) == 0) // identical text → identical signature

@@ -25,7 +25,6 @@ class NativeCodegenSpec extends SparkSpec {
   private val converted: Seq[(String, Expression)] = Seq(
     "RollingHashes" -> RollingHashes(strArr, 3),
     "RollingNgrams" -> RollingNgrams(strArr, 3),
-    "MinHashSignature" -> MinHashSignature(longArr, 8),
     "Md5MinHash" -> Md5MinHash(strArr, 8),
     "Md5Hashes60" -> Md5Hashes60(strArr),
     "SimHashFrom" -> SimHashFrom(longArr, 60),

@@ -173,4 +173,27 @@ class CkSpec extends SparkSpec {
     // 6: the count measured for the self-join form this replaced
     assert(jobs <= 6, s"phashNearDups ran $jobs jobs")
   }
+
+  test("videoPhashNearDupsAnyFrame: the id-list candidates run no more jobs than the frame self-join did") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // 30 videos of 3 frames; every third has a copy with its middle
+    // frame nudged, and five clones of video 0 fill its buckets past
+    // the cap below
+    val base = for (m <- 0L until 30L; f <- 0 until 3)
+      yield (m, f, Array.fill(66)(rnd.nextInt(256)))
+    val dups = base.collect { case (m, f, lu) if m % 3 == 0 =>
+      val v = lu.clone(); if (f == 1) v(rnd.nextInt(66)) = rnd.nextInt(256); (m + 1000L, f, v)
+    }
+    val same = for (m <- 2000L until 2005L; (_, f, lu) <- base.take(3)) yield (m, f, lu)
+    val frames = (base ++ dups ++ same).toDF("media_id", "frame_no", "luma")
+    val (pairs, jobs) = jobsOf(graft.mm.Multimodal.videoPhashNearDupsAnyFrame(frames,
+      threshold = 3, maxBucketSize = Some(6)).collect())
+    // the pairs the self-join form returned: every copy but video 0's,
+    // whose seven-member buckets the cap drops
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ==
+      (3L until 30L by 3L).map(m => (m, m + 1000L, 0)).toSet)
+    // 7: the count measured for the self-join form this replaced
+    assert(jobs <= 7, s"videoPhashNearDupsAnyFrame ran $jobs jobs")
+  }
 }

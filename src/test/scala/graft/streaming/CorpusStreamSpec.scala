@@ -7,7 +7,7 @@ import java.sql.Timestamp
 class CorpusStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(h: Int, m: Int = 0): Timestamp =
+  private def ts(h: Int, m: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
 
   private val schema = StructType(Seq(
